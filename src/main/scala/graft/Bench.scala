@@ -31,18 +31,21 @@ import graft.pipeline.JaccardPipeline
   * (the A/B lever for validating the sharding itself).
   */
 object Bench {
+  /** The reference's corpora, regenerated by `Datagen`. */
+  private val RefCorpora = Seq("small", "medium", "large")
+
   /** Sentinel entries (reference parity, curation, skew) — the
     * round-over-round baseline signals. Pinned to shard 0, ahead of
     * its fixture entries, so they price in the same low-pressure
     * window every round (the round-9 finding: running them late
     * charged them the session's accumulated pressure).
     */
-  private def sentinelNames(refNames: Seq[String]): Set[String] =
-    refNames.toSet ++ Set("curation_documents", "jaccard_skew_hotword")
+  private val Sentinels: Seq[String] =
+    RefCorpora.map(n => s"jaccard_ref_$n") ++
+      Seq("curation_documents", "jaccard_skew_hotword")
 
-  private def shardOf(name: String, sentinels: Set[String],
-                      k: Int): Int =
-    if (sentinels(name)) 0 else math.abs(name.hashCode) % k
+  private def shardOf(name: String, k: Int): Int =
+    if (Sentinels.contains(name)) 0 else math.abs(name.hashCode) % k
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -108,9 +111,7 @@ object Bench {
     // child can never read as a faster suite
     val perEntry = scala.collection.mutable.LinkedHashMap[String, Double]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    val names = entryNames(sfDir)
-    val sentinels = sentinelNames(
-      names.filter(_.startsWith("jaccard_ref_")))
+    val names = entryNames
     shardRecords.zipWithIndex.foreach {
       case (Some(rec), _) =>
         val qs = "\"queries\":\\{([^}]*)\\}".r
@@ -123,7 +124,7 @@ object Bench {
           .map(_.group(1)).filter(_.nonEmpty).foreach(_.split(',')
             .foreach(f => failed += f.stripPrefix("\"").stripSuffix("\"")))
       case (None, i) =>
-        names.filter(n => shardOf(n, sentinels, k) == i).foreach { n =>
+        names.filter(n => shardOf(n, k) == i).foreach { n =>
           perEntry(n) = -1.0; failed += n
         }
     }
@@ -141,13 +142,8 @@ object Bench {
     * fixture) — computable without a SparkSession, shared by the
     * parent's merge and each child's filter.
     */
-  private def entryNames(sfDir: String): Seq[String] = {
-    val refs = Seq("small", "medium", "large")
-      .filter(n => new java.io.File(s"/root/reference/datasets/$n.txt").isFile)
-      .map(n => s"jaccard_ref_$n")
-    refs ++ Seq("curation_documents", "jaccard_skew_hotword") ++
-      SparkEntry.queries.keys.toSeq.sorted
-  }
+  private def entryNames: Seq[String] =
+    Sentinels ++ SparkEntry.queries.keys.toSeq.sorted
 
   private def writeRecord(sfDir: String, results: Seq[(String, Double)],
                           failed: Seq[String], total: Double,
@@ -258,13 +254,19 @@ object Bench {
     }
     // Reference-parity pipeline on the reference's own corpora, end to end
     // including the formatted+sorted output (BASELINE.md compares these to
-    // the 1-DN MapReduce wall times: 5.97 / 8.00 / 10.09 s).
-    val refDatasets: Seq[Entry] = Seq("small", "medium", "large").flatMap { name =>
-      val path = s"/root/reference/datasets/$name.txt"
-      if (new java.io.File(path).isFile)
-        Some(s"jaccard_ref_$name" -> ((s: SparkSession) =>
-          ReferenceOutput.collectSorted(JaccardPipeline.run(s, path)): Unit))
-      else None
+    // the 1-DN MapReduce wall times: 5.97 / 8.00 / 10.09 s). The corpora
+    // are Datagen's byte-exact regeneration (DatagenSpec), written once
+    // to a temp dir, so the sentinels exist on every host.
+    val refDir = java.nio.file.Files.createTempDirectory("graft-ref-corpora")
+    refDir.toFile.deleteOnExit()
+    val corpora = Datagen.generateAll()
+    val refDatasets: Seq[Entry] = RefCorpora.map { name =>
+      val file = refDir.resolve(s"$name.txt")
+      java.nio.file.Files.write(file, corpora(name).getBytes("UTF-8"))
+      file.toFile.deleteOnExit()
+      val path = file.toString
+      s"jaccard_ref_$name" -> ((s: SparkSession) =>
+        ReferenceOutput.collectSorted(JaccardPipeline.run(s, path)): Unit)
     }
     // end-to-end curation cascade (quality → exact dedup → near dedup)
     // over the documents fixture (language gate off: the synthetic corpus
@@ -293,11 +295,9 @@ object Bench {
     }))
     // SENTINELS FIRST (see the object scaladoc: shard 0's head), then
     // the alphabetical fixture — filtered to THIS JVM's shard
-    val sentinels: Set[String] =
-      sentinelNames(refDatasets.map(_._1))
     val entries: Seq[Entry] =
       (refDatasets ++ curation ++ skew ++ fixture).filter {
-        case (name, _) => shardOf(name, sentinels, myK) == myShard
+        case (name, _) => shardOf(name, myK) == myShard
       }
 
     // Two interleaved passes × two back-to-back samples per entry =
@@ -323,7 +323,7 @@ object Bench {
         // pre-warm the fresh session's state (SessionState build, parser,
         // first-use codepaths) so it isn't charged to the first sample
         sess.range(2L).selectExpr("sum(id)").collect()
-        val samples = Seq.fill(if (sentinels(name)) 3 else 2)(
+        val samples = Seq.fill(if (Sentinels.contains(name)) 3 else 2)(
           timed(run(sess)))
         val t = if (samples.exists(_ < 0)) -1.0 else samples.min
         System.err.println(

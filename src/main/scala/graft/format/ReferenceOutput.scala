@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   */
 object ReferenceOutput {
 
-  /** similarities(docA, docB, similarity, ...) → single-column lines. */
-  def formatLines(sims: DataFrame): DataFrame =
-    sims.select(
-      format_string("%s, %s\tSimilarity: %.2f",
-        col("docA"), col("docB"), col("similarity")).as("value"))
+  /** similarities(docA, docB, similarity, ...) → the output line. */
+  private def line =
+    format_string("%s, %s\tSimilarity: %.2f",
+      col("docA"), col("docB"), col("similarity")).as("value")
 
   /** The reference's single reducer sorts its input key, the CONCATENATED
     * `"docA,docB"` Text (`DocumentSimilarityReducer.java:45`), not the two
@@ -29,19 +28,28 @@ object ReferenceOutput {
     */
   private def pairKey = concat(col("docA"), lit(","), col("docB"))
 
+  /** Formatted lines in pair-key order, in ONE partition: the
+    * reference's single reducer, and the golden files' one part file.
+    * The line is projected together with its key BEFORE the sort, so
+    * `java.util.Formatter` runs in the parallel stage rather than in the
+    * sort's task; the key is dropped after it. A one-partition
+    * `sortWithinPartitions`, not `orderBy` (the q177 idiom): a global
+    * sort first runs a sampling job over its child for the range bounds,
+    * and that job re-executes every stage-local operator below it — over
+    * `Jaccard.allPairs` the whole pair probe would run twice.
+    */
+  private def sortedLines(sims: DataFrame): DataFrame =
+    sims.select(line, pairKey.as("__key"))
+      .repartition(1).sortWithinPartitions("__key")
+      .drop("__key")
+
   /** Globally sorted lines, as a driver-side array (tests / small outputs). */
   def collectSorted(sims: DataFrame): Array[String] =
-    formatLines(sims.orderBy(pairKey))
-      .collect().map(_.getString(0))
+    sortedLines(sims).collect().map(_.getString(0))
 
   /** Write the golden-file layout: sorted, one part file like the
-    * reference's single reducer. The `coalesce(1)` exists only to mirror
-    * the golden layout — large-scale runs should write partitioned output
-    * (omit `singleFile`).
+    * reference's single reducer.
     */
-  def write(sims: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val sorted = formatLines(sims.orderBy(pairKey))
-    val out = if (singleFile) sorted.coalesce(1) else sorted
-    out.write.mode("overwrite").text(path)
-  }
+  def write(sims: DataFrame, path: String): Unit =
+    sortedLines(sims).write.mode("overwrite").text(path)
 }

@@ -9,9 +9,14 @@ import graft.operators.Jaccard
 
 /** D1 — the end-to-end composition. The reference chains three MapReduce
   * jobs through HDFS text files (`DocumentSimilarityDriver.java:20-94`);
-  * here the whole thing is one lazy DataFrame DAG — the corpus is read and
-  * tokenized ONCE (the reference reads+tokenizes it twice, Jobs 1 & 2) and
-  * no intermediate ever hits storage unless explicitly requested.
+  * here the whole thing is one lazy DataFrame DAG, and no intermediate
+  * ever hits storage unless explicitly requested. A one-file corpus (the
+  * reference's layout) is read and tokenized ONCE (the reference
+  * reads+tokenizes it twice, Jobs 1 & 2): `Jaccard.allPairs` hashes it by
+  * docId, postings and sizes both read that exchange, so the plan holds
+  * one scan and one tokenizer (PlanSpec pins this), and the pair stage
+  * runs one task per shuffle partition. A corpus of several file splits
+  * keeps the plain plan, in which postings and sizes each scan it.
   */
 object JaccardPipeline {
 

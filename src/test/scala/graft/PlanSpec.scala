@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 
+import graft.corpus.Corpus
 import graft.operators.Jaccard
 import org.apache.spark.sql.functions._
 
@@ -44,6 +48,48 @@ class PlanSpec extends SparkSpec {
     val plan = finalPlan(Jaccard.allPairs(docs))
     assert(plan.contains("BroadcastHashJoin"),
       s"size join should broadcast under AQE:\n${plan.take(2000)}")
+  }
+
+  test("allPairs scans and tokenizes a one-file corpus once, through one docId exchange") {
+    val file = Files.createTempFile("graft-plan-corpus", ".txt")
+    file.toFile.deleteOnExit()
+    Files.write(file, Datagen.generateAll()("small").getBytes(StandardCharsets.UTF_8))
+    val plan = finalPlan(Jaccard.allPairs(Corpus.read(spark, file.toString)))
+      .split("== Initial Plan ==")(0)
+    // the postings probe side, the postings broadcast side and the sizes
+    // all read the docId exchange: one scan, one tokenizer chain
+    assert("FileScan text".r.findAllIn(plan).size == 1,
+      s"corpus must be scanned once:\n$plan")
+    assert("regexp_replace".r.findAllIn(plan).size == 1,
+      s"corpus must be tokenized once:\n$plan")
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val docIdExchange = s"hashpartitioning\\(docId#\\d+, $parts\\)".r
+    val lines = plan.linesIterator.toSeq
+    assert(lines.count(l => l.contains("Exchange") && !l.contains("ReusedExchange") &&
+      docIdExchange.findFirstIn(l).isDefined) == 1,
+      s"one docId exchange expected:\n$plan")
+    assert(lines.exists(l => l.contains("ReusedExchange") &&
+      docIdExchange.findFirstIn(l).isDefined),
+      s"the docId exchange must be read through ReusedExchange:\n$plan")
+  }
+
+  test("allPairs over a corpus of several file splits takes no docId exchange") {
+    // the other side of allPairs' choice: a split input already runs in
+    // several tasks, so the plain plan (no docId exchange) is kept
+    val dir = Files.createTempDirectory("graft-plan-split")
+    dir.toFile.deleteOnExit()
+    val text = Datagen.generateAll()("small").linesIterator.toSeq
+    for ((half, i) <- text.grouped((text.size + 1) / 2).zipWithIndex) {
+      val f = dir.resolve(s"part-$i.txt")
+      Files.write(f, half.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      f.toFile.deleteOnExit()
+    }
+    val docs = Corpus.read(spark, dir.toString)
+    assert(docs.rdd.getNumPartitions == 2)
+    val plan = finalPlan(Jaccard.allPairs(docs)).split("== Initial Plan ==")(0)
+    val parts = spark.sessionState.conf.numShufflePartitions
+    assert(s"hashpartitioning\\(docId#\\d+, $parts\\)".r.findFirstIn(plan).isEmpty,
+      s"a split corpus must not be hashed by docId:\n$plan")
   }
 
   test("n-gram posting self-join reuses one exchange for both sides") {
@@ -220,14 +266,14 @@ class PlanSpec extends SparkSpec {
         assert(!l.contains("regexp_replace"),
           s"tokenizer chain leaked into a filter/scan:\n$l")
       }
-    // once per executing branch: postings probe + postings broadcast
-    // side (AQE broadcasts the tiny side at this SF; at scale the
-    // self-join reads ONE exchange twice) + sizes (ReusedExchange
-    // covers the second size join). Before the fix this was 3 PER
-    // BRANCH (the chain duplicated into each scan filter).
+    // exactly once: q23's documents are one parquet split, so allPairs
+    // hashes the tokenized docs by docId, and the postings probe side,
+    // the postings broadcast side and the sizes all read that one
+    // exchange (ReusedExchange). Losing the exchange shows
+    // as 3 (once per branch); a non-outer explode, as 3 more per branch
+    // (the chain duplicated into each scan filter).
     val n = "regexp_replace".r.findAllIn(plan).size
-    assert(n >= 1 && n <= 4,
-      s"tokenizer chain evaluated $n times (expected once per branch, <=4)")
+    assert(n == 1, s"tokenizer chain evaluated $n times (expected once)")
 
     // the same shape holds across the tokenizer and kernel families:
     // scan- or filter-adjacent nodes must never carry the regex chain or
