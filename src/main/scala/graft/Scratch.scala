@@ -90,18 +90,6 @@ object Scratch {
         }
         graft.operators.Ltr.ltrRerank(feats, m, 5)
       }
-      // "tm_noorder" times the q177 operator pipeline WITHOUT the
-      // registry's final single-partition sort (the round-13 probe that
-      // isolated the sort-sampling double-execution)
-      else if (name == "tm_noorder") { (s, d) =>
-        import graft.operators.Jaccard
-        val docs = s.read.parquet(s"$d/documents.parquet")
-          .select(col("doc_id").as("docId"), col("text"), col("source"))
-        val idx = Jaccard.dfOrderedSets(
-          Jaccard.tokenized(docs.filter(col("source") =!= "src0")))
-        Jaccard.thresholdMatches(
-          Jaccard.tokenized(docs.filter(col("source") === "src0")), idx, 0.9)
-      }
       else SparkEntry.queries(name)
     val warmRuns = args.lift(2).map(_.toInt).getOrElse(1)
     time(s"$name cold")(exec(q(spark, dir)))

@@ -288,13 +288,13 @@ object Federation {
     * shard-partitioned docId-bucketed copy), and candidate scores are
     * the exact GLOBAL-statistics scores. Any probed-shard doc outside
     * the candidate set matches only hot terms, so its score stays
-    * under the [[Retrieval.wandHotUb]] bound — global idf/impact
-    * metadata dominates every shard-local posting — and `ub < θ`
-    * (θ = the kth candidate score) routes the query safe exactly as
-    * in the single-index operator; the shared bound tree means the
-    * two families cannot drift. Unsafe queries fall back to the
-    * unpruned fold over their selected pairs (the [[coriTopK]] tail
-    * verbatim, reusing the SAME selection — CORI never re-runs).
+    * under the [[Retrieval.bm25WandScorer]] bound — global
+    * idf/impact metadata dominates every shard-local posting — and
+    * `ub < θ` (θ = the kth candidate score) routes the query safe
+    * exactly as in the single-index operator; the shared bound tree
+    * means the two families cannot drift. Unsafe queries complete
+    * through [[Retrieval.wandTopK]]'s fallback over their selected
+    * pairs (reusing the SAME selection — CORI never re-runs).
     */
   def coriTopKWand(shardTf: DataFrame, shardDf: DataFrame,
                    shardCw: DataFrame,
@@ -306,33 +306,12 @@ object Federation {
                    forward: Option[DataFrame] = None,
                    impact: Option[DataFrame] = None,
                    coriB: Double = 0.4, dfBase: Double = 50.0,
-                   cwScale: Double = 150.0): DataFrame = {
-    val (c, sel, tfPruned) = coriWandCore(shardTf, shardDf, shardCw,
-      dfTab, stats, queries, qidCol, qtextCol, k, nProbe, hotDf, k1,
-      b25, bitExact, forward, impact, coriB, dfBase, cwScale,
-      checkpointCandScores = true)
-    // r20: fallback COMPLETION ([[Retrieval.wandFallbackScores]]'s
-    // argument under the probed-pair restriction): an unsafe query's
-    // probed matched pairs either carry ≥ 1 rare matched term — then
-    // they are candidates and the phase-1 checkpoint already folded
-    // their exact full score — or they match only hot terms, and the
-    // complement below folds exactly those contributions (same
-    // selection semi-join, same trees). The pre-r20 fallback re-ran
-    // the whole coriTopK tail (rare + hot posting scan + full fold)
-    // for every unsafe query.
-    val hotUnsafe = c.enriched.filter(col("df") > hotDf)
-      .join(c.unsafeQ, Seq("queryId"), "left_semi")
-    val fbHotOnly = tfPruned.join(broadcast(hotUnsafe), Seq("word"))
-      .join(broadcast(sel), Seq("queryId", "shard"), "left_semi")
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * Retrieval.contribExpr(k1, b25)).as("__c"))
-      .join(c.candPairs, Seq("queryId", "docId"), "left_anti")
-    val fallback = Retrieval.bm25TopK(
-      c.candScoresPre.join(c.unsafeQ, Seq("queryId"), "left_semi")
-        .unionByName(Retrieval.scoreFold(fbHotOnly, bitExact)), k)
-    c.safeTopK.unionByName(fallback.select("queryId", "docId", "score",
-      "rank"))
-  }
+                   cwScale: Double = 150.0): DataFrame =
+    Retrieval.wandTopK(coriWandScorer(shardTf, shardDf, shardCw, queries,
+      qidCol, qtextCol, nProbe, k1, b25, bitExact, forward, impact, coriB,
+      dfBase, cwScale),
+      Retrieval.unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
+      hotDf)
 
   /** ROUTING-AWARE federated top-k — the production default for the
     * select → probe → merge path: serve through [[coriTopKWand]] when
@@ -380,8 +359,9 @@ object Federation {
 
   /** The federated WAND decision table (the q187/q205/q246
     * convention) — identical columns and routing predicate as
-    * [[Retrieval.bm25WandStats]], shared [[coriWandCore]] internals
-    * with [[coriTopKWand]] so the readout cannot drift.
+    * [[Retrieval.bm25WandStats]], the same [[coriWandScorer]] and
+    * [[Retrieval.wandStats]] stages as [[coriTopKWand]] so the
+    * readout cannot drift.
     * `n_candidates` counts candidate (query, doc) pairs INSIDE the
     * selected shards (the restricted rare-posting probe's output);
     * `ub` is the global hot-only bound (selection never weakens it —
@@ -398,79 +378,36 @@ object Federation {
                     impact: Option[DataFrame] = None,
                     coriB: Double = 0.4, dfBase: Double = 50.0,
                     cwScale: Double = 150.0): DataFrame =
-    Retrieval.wandStatsFrom(coriWandCore(shardTf, shardDf, shardCw,
-      dfTab, stats, queries, qidCol, qtextCol, k, nProbe, hotDf, k1,
-      b25, bitExact, forward, impact, coriB, dfBase, cwScale)._1, hotDf)
+    Retrieval.wandStats(coriWandScorer(shardTf, shardDf, shardCw, queries,
+      qidCol, qtextCol, nProbe, k1, b25, bitExact, forward, impact, coriB,
+      dfBase, cwScale),
+      Retrieval.unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
+      hotDf)
 
-  /** The federated two-phase WAND plan — [[Retrieval.wandCore]]'s
-    * shape with the (query, shard) pair semi-join landed on the rare
-    * contributions (the one federation-specific step; everything
-    * arithmetic is Retrieval's: [[Retrieval.wandHotUb]],
-    * [[Retrieval.contribExpr]], [[Retrieval.scoreFold]]). Returns the
-    * core plus the selection set and the shard-set-pruned posting
-    * table so the fallback reuses both.
+  /** The federated WAND scorer — [[Retrieval.bm25WandScorer]] over the
+    * shard-set-pruned postings with the (query, shard) selection
+    * semi-join landed on every posting probe (rare candidates and the
+    * fallback complement alike, BEFORE the fold — the [[coriTopK]]
+    * restriction). Candidate pairs already respect the selection (each
+    * doc lives in exactly one shard), so the forward fetch needs no
+    * shard filter: the hot join restricts to the query's own hot terms.
     */
-  private def coriWandCore(shardTf: DataFrame, shardDf: DataFrame,
-                           shardCw: DataFrame,
-                           dfTab: DataFrame, stats: DataFrame,
-                           queries: DataFrame, qidCol: String,
-                           qtextCol: String,
-                           k: Int, nProbe: Int, hotDf: Long,
-                           k1: Double, b25: Double, bitExact: Boolean,
-                           forward: Option[DataFrame],
-                           impact: Option[DataFrame],
-                           coriB: Double, dfBase: Double,
-                           cwScale: Double,
-                           checkpointCandScores: Boolean = false)
-      : (Retrieval.WandCore, DataFrame, DataFrame) = {
-    require(k > 0, s"k > 0: $k")
-    require(hotDf >= 0, s"hotDf >= 0: $hotDf")
+  private def coriWandScorer(shardTf: DataFrame, shardDf: DataFrame,
+                             shardCw: DataFrame,
+                             queries: DataFrame, qidCol: String,
+                             qtextCol: String, nProbe: Int,
+                             k1: Double, b25: Double, bitExact: Boolean,
+                             forward: Option[DataFrame],
+                             impact: Option[DataFrame],
+                             coriB: Double, dfBase: Double,
+                             cwScale: Double): Retrieval.WandScorer = {
     val (sel, tfPruned) = selectAndPrune(shardTf, shardDf, shardCw,
       queries, qidCol, qtextCol, nProbe, coriB, dfBase, cwScale)
-    // query-batch-sized, consumed 4x (rare, hot, bound, fallback)
-    val enriched = Retrieval.unitEnriched(dfTab, stats, queries,
-      qidCol, qtextCol).localCheckpoint()
-    val rare = enriched.filter(col("df") <= hotDf)
-    val hot = enriched.filter(col("df") > hotDf)
-    val hotUb = Retrieval.wandHotUb(hot, k1, b25, impact)
-    // rare/hot/sel are query-batch-/selection-sized by contract —
-    // explicit broadcast sides (the Retrieval.postingContribs
-    // rationale)
-    val rareContrib = tfPruned.join(broadcast(rare), Seq("word"))
-      .join(broadcast(sel), Seq("queryId", "shard"), "left_semi")
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * Retrieval.contribExpr(k1, b25)).as("__c"))
-    val candPairs = rareContrib.select("queryId", "docId").distinct()
-    // candidate pairs already respect the selection (each doc lives
-    // in exactly one shard), so the forward fetch needs no shard
-    // filter — the hot join restricts to the query's own hot terms
-    val fwd = forward.getOrElse(shardTf)
-    val hotContrib = candPairs.join(fwd, Seq("docId"))
-      .join(broadcast(hot), Seq("queryId", "word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * Retrieval.contribExpr(k1, b25)).as("__c"))
-    // candidate-match-sized; checkpointed when the caller's fallback
-    // completes from it ([[coriTopKWand]]) — the [[Retrieval.wandCore]]
-    // convention
-    val candScores0 = Retrieval.scoreFold(
-      rareContrib.unionByName(hotContrib), bitExact,
-      shuffleFirst = false) // candidate-sized — see Retrieval.scoreFold
-    val candScores =
-      if (checkpointCandScores) candScores0.localCheckpoint()
-      else candScores0
-    val w = Window.partitionBy(col("queryId"))
-      .orderBy(col("score").desc, col("docId").asc)
-    // result-sized, consumed 2x (θ + safe output)
-    val topkCand = candScores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k).localCheckpoint()
-    val theta = topkCand.filter(col("rank") === k)
-      .select(col("queryId"), col("score").as("__theta"))
-    // consumed 2x (safe anti-join + fallback semi-join)
-    val unsafeQ = hotUb.join(theta, Seq("queryId"), "left_outer")
-      .filter(col("__theta").isNull || col("__ub") >= col("__theta"))
-      .select("queryId").localCheckpoint()
-    (Retrieval.WandCore(enriched, candPairs, candScores, topkCand,
-      hotUb, theta, unsafeQ), sel, tfPruned)
+    // selection-sized build side by contract (the
+    // Retrieval.postingContribs broadcast rationale)
+    Retrieval.bm25WandScorer(tfPruned, forward.getOrElse(shardTf), k1, b25,
+      bitExact, impact,
+      _.join(broadcast(sel), Seq("queryId", "shard"), "left_semi"))
   }
 
   /** The selection + batch-prune head shared by the federated top-k

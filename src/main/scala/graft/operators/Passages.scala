@@ -191,55 +191,36 @@ object Passages {
     * same rows, same scores, bitwise under `bitExact` (q245 gates it
     * against the unpruned MaxP replay) — while hot-term passage
     * postings are never scanned for safe queries. Passages are
-    * pseudo-docs, so the shared [[Retrieval.wandCore]] applies
+    * pseudo-docs, so the shared [[Retrieval.wandTopK]] applies
     * verbatim with ONE change threaded through `docMap`: candidate
     * passage scores map through [[Retrieval.maxPassageScores]] BEFORE
     * the top-k window, so θ is the kth DOCUMENT-level max (the
     * passage-level kth over-states the cutoff and would route
-    * unsafely — the scaladoc at the docMap hook carries the proof).
+    * unsafely — the comment at the docMap hook carries the proof).
     *
     * The layout's `forward`/`impact` tables feed the candidate fetch
     * and the hot-term ceilings ([[PassageLayout]] doc); queries with
-    * < k candidate DOCS or a reachable bound fall back to the
-    * unpruned [[maxPassageTopK]] restricted to just those queries —
-    * exact either way. At ingest scale this is the load-bearing
-    * probe: segmentation multiplies hot posting volume ~width/stride×
-    * (186 s unpruned vs 3 s capped at 50k docs — and the cap changes
-    * scores; this path is exact AND skips the head).
+    * < k candidate DOCS or a reachable bound complete through
+    * [[Retrieval.wandTopK]]'s fallback at the PASSAGE level, then one
+    * doc-level max — exact either way. At ingest scale this is the
+    * load-bearing probe: segmentation multiplies hot posting volume
+    * ~width/stride× (186 s unpruned vs 3 s capped at 50k docs — and
+    * the cap changes scores; this path is exact AND skips the head).
     */
   def maxPassageTopKWand(layout: PassageLayout,
                          queries: DataFrame, qidCol: String,
                          qtextCol: String,
                          k: Int, hotDf: Long,
                          k1: Double = 1.2, b: Double = 0.75,
-                         bitExact: Boolean = true): DataFrame = {
-    val c = Retrieval.wandCore(
-      Retrieval.unitEnriched(layout.dfTab, layout.stats, queries,
-        qidCol, qtextCol),
-      layout.tf, k, hotDf, k1, b, bitExact, layout.forward,
-      layout.impact, docMap = Some(layout.membership),
-      checkpointCandScores = true)
-    // r20: fallback COMPLETION at the PASSAGE level
-    // ([[Retrieval.wandFallbackScores]] carries the exactness
-    // argument; in MaxP mode `candScoresPre` is the pre-max PASSAGE
-    // score table, so the completion's union is the unpruned passage
-    // score table for unsafe queries and ONE doc-level max covers
-    // both halves). The pre-r20 fallback re-derived the whole
-    // [[maxPassageTopK]] plan — a second full posting join + fold +
-    // membership join — for every unsafe query.
-    val fallback = Retrieval.bm25TopK(
-      Retrieval.maxPassageScores(
-        Retrieval.wandFallbackScores(c, layout.tf, hotDf, k1, b,
-          bitExact),
-        layout.membership), k)
-    c.safeTopK.unionByName(fallback.select("queryId", "docId", "score",
-      "rank"))
-  }
+                         bitExact: Boolean = true): DataFrame =
+    Retrieval.wandTopK(passageScorer(layout, k1, b, bitExact),
+      Retrieval.unitEnriched(layout.dfTab, layout.stats, queries, qidCol,
+        qtextCol), k, hotDf, Some(layout.membership))
 
   /** The MaxP WAND decision table (the q187/q205/q240 convention:
     * gate the PRUNING MATH, not just the final answer) — identical
     * columns and routing predicate as [[Retrieval.bm25WandStats]],
-    * shared [[Retrieval.wandCore]] internals with
+    * the same [[Retrieval.wandStats]] stages as
     * [[maxPassageTopKWand]] so the readout cannot drift from the
     * operator. `n_candidates` counts candidate (query, PASSAGE)
     * pairs (the rare-posting probe's unit); `theta` is the kth
@@ -252,12 +233,17 @@ object Passages {
                           k: Int, hotDf: Long,
                           k1: Double = 1.2, b: Double = 0.75,
                           bitExact: Boolean = true): DataFrame =
-    Retrieval.wandStatsFrom(
-      Retrieval.wandCore(
-        Retrieval.unitEnriched(layout.dfTab, layout.stats, queries,
-          qidCol, qtextCol),
-        layout.tf, k, hotDf, k1, b, bitExact, layout.forward,
-        layout.impact, docMap = Some(layout.membership)), hotDf)
+    Retrieval.wandStats(passageScorer(layout, k1, b, bitExact),
+      Retrieval.unitEnriched(layout.dfTab, layout.stats, queries, qidCol,
+        qtextCol), k, hotDf, Some(layout.membership))
+
+  /** The BM25 WAND scorer over the passage layout: passages are
+    * pseudo-docs, so the word-index scorer applies verbatim.
+    */
+  private def passageScorer(layout: PassageLayout, k1: Double, b: Double,
+                            bitExact: Boolean): Retrieval.WandScorer =
+    Retrieval.bm25WandScorer(layout.tf, layout.forward.getOrElse(layout.tf),
+      k1, b, bitExact, layout.impact)
 
   /** ROUTING-AWARE MaxP top-k — the production default (the
     * [[Retrieval.qlTopKWandWeightedRouted]] economics over the

@@ -489,8 +489,8 @@ object Retrieval {
     * contract (RetrievalSpec pins the parity). Without this merge
     * heavy ingest left the fielded bounds append-STALE — the one
     * staleness direction the WAND safety proof does NOT absorb
-    * ([[wandCore]]'s lifecycle contract) — while every sibling layout
-    * compacted. Vocabulary × fields sized.
+    * ([[bm25WandScorer]]'s lifecycle contract) — while every sibling
+    * layout compacted. Vocabulary × fields sized.
     */
   def compactImpactStatsFielded(impactF: DataFrame,
                                 batchImpactF: DataFrame): DataFrame =
@@ -627,10 +627,10 @@ object Retrieval {
     * blanket ×(1+1e-9) margin moves the bound the right way
     * (unlike QL's sign-aware split).
     *
-    * Queries with < k candidates or a reachable bound fall back to
-    * the unpruned [[bm25fScores]] restricted to just those queries.
-    * The corpus-global aggregates (per-field lengths, N, document
-    * df) run inline like the unpruned sibling — at ingest persist
+    * Queries with < k candidates or a reachable bound complete
+    * exactly through [[wandTopK]]'s fallback (the argument is stated
+    * there). The corpus-global aggregates (per-field lengths, N,
+    * document df) run inline like the unpruned sibling — at ingest persist
     * them beside the ftf layout and the probe plan keeps only the
     * posting joins.
     */
@@ -643,39 +643,17 @@ object Retrieval {
                     impactF: Option[DataFrame] = None,
                     fStats: Option[(DataFrame, DataFrame, DataFrame)]
                       = None): DataFrame = {
-    val (c, p) = bm25fWandCore(ftf, fieldParams, queries, qidCol,
-      qtextCol, k, hotDf, k1, bitExact, impactF, fStats,
-      checkpointCandScores = true)
-    // r20: fallback COMPLETION (the [[wandFallbackScores]] argument
-    // under the fielded arithmetic): an unsafe query's matched docs
-    // either carry ≥ 1 rare matched term — candidates, whose exact
-    // full scores the phase-1 checkpoint already folded — or match
-    // only hot terms, and the complement below folds exactly those
-    // pseudo-tf contribution trees. The pre-r20 fallback re-ran the
-    // whole unpruned [[bm25fScores]] (rare + hot pseudo-tf folds) for
-    // every unsafe query.
-    val hotUnsafe = c.enriched.filter(col("df") > hotDf)
-      .join(c.unsafeQ, Seq("queryId"), "left_semi")
-    val ptfHot = foldPtf(
-      p.fContrib.join(hotUnsafe.select("word").distinct(),
-        Seq("word"), "left_semi"), bitExact)
-    val contribHotOnly = ptfHot.join(broadcast(hotUnsafe), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("idf") * col("__tf") / (lit(k1) + col("__tf"))).as("__c"))
-      .join(c.candPairs, Seq("queryId", "docId"), "left_anti")
-    val fallback = bm25TopK(
-      c.candScoresPre.join(c.unsafeQ, Seq("queryId"), "left_semi")
-        .unionByName(scoreFold(contribHotOnly, bitExact)), k)
-    c.safeTopK.unionByName(fallback.select("queryId", "docId", "score",
-      "rank"))
+    val p = bm25fParts(ftf, fieldParams, queries, qidCol, qtextCol, fStats)
+    wandTopK(bm25fWandScorer(p, k1, bitExact, impactF), bm25fEnriched(p),
+      k, hotDf)
   }
 
   /** The BM25F WAND decision table (the q187/q205/q224 convention:
     * gate the PRUNING MATH, not just the final answer) — identical
-    * columns and routing predicate as [[bm25WandStats]], shared
-    * [[bm25fWandCore]] internals with [[bm25fTopKWand]] so the
-    * readout cannot drift from the operator. `ub` is the fielded
-    * composed-ceiling bound (word-sorted fold ×(1+1e-9)).
+    * columns and routing predicate as [[bm25WandStats]], the same
+    * [[wandStats]] stages and [[bm25fWandScorer]] as [[bm25fTopKWand]]
+    * so the readout cannot drift from the operator. `ub` is the
+    * fielded composed-ceiling bound (word-sorted fold ×(1+1e-9)).
     */
   def bm25fWandStats(ftf: DataFrame,
                      fieldParams: Seq[(String, Double, Double)],
@@ -685,101 +663,86 @@ object Retrieval {
                      bitExact: Boolean = true,
                      impactF: Option[DataFrame] = None,
                      fStats: Option[(DataFrame, DataFrame, DataFrame)]
-                       = None): DataFrame =
-    wandStatsFrom(bm25fWandCore(ftf, fieldParams, queries, qidCol,
-      qtextCol, k, hotDf, k1, bitExact, impactF, fStats)._1, hotDf)
+                       = None): DataFrame = {
+    val p = bm25fParts(ftf, fieldParams, queries, qidCol, qtextCol, fStats)
+    wandStats(bm25fWandScorer(p, k1, bitExact, impactF), bm25fEnriched(p),
+      k, hotDf)
+  }
 
-  /** The two-phase WAND plan for BM25F — the [[wandCore]] shape over
-    * the fielded arithmetic, returning the same [[WandCore]] so
-    * `safeTopK` and [[wandStatsFrom]] are shared verbatim. Candidate
-    * scores reuse [[bm25fParts]]' trees doc-restricted, so they are
-    * bitwise the unpruned pipeline's on the candidate pairs.
+  /** The BM25F enriched query terms under the WAND weight contract (the
+    * [[unitEnriched]] convention: an explicit 1.0 weight column).
     */
-  private def bm25fWandCore(ftf: DataFrame,
-                            fieldParams: Seq[(String, Double, Double)],
-                            queries: DataFrame, qidCol: String,
-                            qtextCol: String,
-                            k: Int, hotDf: Long, k1: Double,
-                            bitExact: Boolean,
-                            impactF: Option[DataFrame],
-                            fStats: Option[(DataFrame, DataFrame, DataFrame)],
-                            checkpointCandScores: Boolean = false)
-      : (WandCore, Bm25fParts) = {
-    require(k > 0, s"k > 0: $k")
-    require(hotDf >= 0, s"hotDf >= 0: $hotDf")
+  private def bm25fEnriched(p: Bm25fParts): DataFrame =
+    p.qTermsIdf.withColumn("weight", lit(1.0))
+
+  /** The BM25F [[WandScorer]]: [[bm25fParts]]' trees, doc-restricted.
+    * Candidates are the docs of the rare fielded postings; their FULL
+    * pseudo-tf folds run restricted to candidate docs (the
+    * forward-fetch analog — hot words of non-candidate docs never reach
+    * [[foldPtf]]), then exactly the unpruned contribution tree on the
+    * kept pairs, so candidate scores are bitwise the unpruned
+    * pipeline's. The fallback complement folds the pseudo-tf of the
+    * hot words over every doc. The bound is the composed fielded
+    * ceiling derived at [[bm25fTopKWand]].
+    */
+  private def bm25fWandScorer(p: Bm25fParts, k1: Double, bitExact: Boolean,
+                              impactF: Option[DataFrame]): WandScorer = {
     require(k1 >= 0, s"k1 >= 0: $k1")
-    val p = bm25fParts(ftf, fieldParams, queries, qidCol, qtextCol,
-      fStats)
-    // query-batch-sized, consumed 3× (rare, hot, bound) — eager; the
-    // WAND weight contract rides as an explicit 1.0 (the
-    // unitEnriched convention, for wandStatsFrom's shared readout)
-    val enriched = p.qTermsIdf.withColumn("weight", lit(1.0))
-      .localCheckpoint()
-    val rare = enriched.filter(col("df") <= hotDf)
-    val hot = enriched.filter(col("df") > hotDf)
-    // the per-word pseudo-tf ceiling from the fielded metadata:
-    // field-sorted fold of the per-field extremal terms
-    val tfub = impactF.map { imp =>
-      imp.join(broadcast(p.params), Seq("field"))
-        .join(broadcast(p.favg), Seq("field"))
-        .select(col("word"), col("field"),
-          (col("__w") * col("max_tf").cast("double") /
-            (lit(1.0) - col("__b") +
-              col("__b") * col("min_fl").cast("double") / col("__avgfl")))
-            .as("__fub"))
-        .groupBy("word")
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("field"), col("__fub")))),
-          lit(0.0), (a, x) => a + x.getField("__fub")).as("__tfub"))
-    }
-    val hotCeil = tfub match {
-      case None =>
-        hot.select(col("queryId"), col("word"), col("idf").as("__hc"))
-      case Some(ub) =>
-        hot.join(ub, Seq("word"), "left_outer")
-          .select(col("queryId"), col("word"),
-            when(col("__tfub").isNull, col("idf"))
-              .otherwise(col("idf") * col("__tfub") /
-                (lit(k1) + col("__tfub"))).as("__hc"))
-    }
-    val hotUb = hotCeil.groupBy("queryId")
-      .agg((aggregate(
-        sort_array(collect_list(struct(col("word"), col("__hc")))),
-        lit(0.0), (a, x) => a + x.getField("__hc")) *
-        lit(1.0 + 1e-9)).as("__ub"))
-    // phase 1: candidates via the rare fielded postings
-    val candPairs = p.scoredQ
-      .join(rare.select("queryId", "word"), Seq("word"))
-      .select("queryId", "docId").distinct()
-    val candDocs = candPairs.select("docId").distinct()
-    // phase 2: the candidates' FULL pseudo-tf folds, doc-restricted
-    // (hot postings of non-candidate docs never fold), then exactly
-    // the unpruned contribution tree on the kept pairs
-    val contribCand = foldPtf(
-      p.fContrib.join(candDocs, Seq("docId"), "left_semi"), bitExact)
-      .join(broadcast(enriched), Seq("word"))
-      .join(candPairs, Seq("queryId", "docId"), "left_semi")
-      .select(col("queryId"), col("docId"), col("word"),
+    def contrib(joined: DataFrame): DataFrame =
+      joined.select(col("queryId"), col("docId"), col("word"),
         (col("idf") * col("__tf") / (lit(k1) + col("__tf"))).as("__c"))
-    // candidate-match-sized; checkpointed when the caller's fallback
-    // completes from it ([[bm25fTopKWand]]) — the [[wandCore]]
-    // convention
-    val candScores0 = scoreFold(contribCand, bitExact,
-      shuffleFirst = false) // candidate-sized — see scoreFold
-    val candScores =
-      if (checkpointCandScores) candScores0.localCheckpoint()
-      else candScores0
-    val w = Window.partitionBy(col("queryId"))
-      .orderBy(col("score").desc, col("docId").asc)
-    val topkCand = candScores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k).localCheckpoint()
-    val theta = topkCand.filter(col("rank") === k)
-      .select(col("queryId"), col("score").as("__theta"))
-    val unsafeQ = hotUb.join(theta, Seq("queryId"), "left_outer")
-      .filter(col("__theta").isNull || col("__ub") >= col("__theta"))
-      .select("queryId").localCheckpoint()
-    (WandCore(enriched, candPairs, candScores, topkCand, hotUb, theta,
-      unsafeQ), p)
+    new WandScorer {
+      def candidates(enriched: DataFrame, rare: DataFrame,
+                     hot: DataFrame): (DataFrame, DataFrame) = {
+        val candPairs = p.scoredQ
+          .join(rare.select("queryId", "word"), Seq("word"))
+          .select("queryId", "docId").distinct()
+        val candDocs = candPairs.select("docId").distinct()
+        (candPairs, contrib(
+          foldPtf(p.fContrib.join(candDocs, Seq("docId"), "left_semi"),
+            bitExact)
+            .join(broadcast(enriched), Seq("word"))
+            .join(candPairs, Seq("queryId", "docId"), "left_semi")))
+      }
+      def hotContribs(hotTerms: DataFrame): DataFrame =
+        contrib(foldPtf(p.fContrib.join(hotTerms.select("word").distinct(),
+          Seq("word"), "left_semi"), bitExact)
+          .join(broadcast(hotTerms), Seq("word")))
+      def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
+        scoreFold(contrib, bitExact, shuffleFirst)
+      def hotUb(hot: DataFrame): DataFrame = {
+        // the per-word pseudo-tf ceiling from the fielded metadata:
+        // field-sorted fold of the per-field extremal terms
+        val tfub = impactF.map { imp =>
+          imp.join(broadcast(p.params), Seq("field"))
+            .join(broadcast(p.favg), Seq("field"))
+            .select(col("word"), col("field"),
+              (col("__w") * col("max_tf").cast("double") /
+                (lit(1.0) - col("__b") +
+                  col("__b") * col("min_fl").cast("double") /
+                    col("__avgfl"))).as("__fub"))
+            .groupBy("word")
+            .agg(aggregate(
+              sort_array(collect_list(struct(col("field"), col("__fub")))),
+              lit(0.0), (a, x) => a + x.getField("__fub")).as("__tfub"))
+        }
+        val hotCeil = tfub match {
+          case None =>
+            hot.select(col("queryId"), col("word"), col("idf").as("__hc"))
+          case Some(ub) =>
+            hot.join(ub, Seq("word"), "left_outer")
+              .select(col("queryId"), col("word"),
+                when(col("__tfub").isNull, col("idf"))
+                  .otherwise(col("idf") * col("__tfub") /
+                    (lit(k1) + col("__tfub"))).as("__hc"))
+        }
+        hotCeil.groupBy("queryId")
+          .agg((aggregate(
+            sort_array(collect_list(struct(col("word"), col("__hc")))),
+            lit(0.0), (a, x) => a + x.getField("__hc")) *
+            lit(1.0 + 1e-9)).as("__ub"))
+      }
+    }
   }
 
   /** The `(word, cf)` COLLECTION-frequency table of a
@@ -878,7 +841,7 @@ object Retrieval {
   /** Collapse QL `(queryId, docId, word, __c, dl, __nq)` matching
     * contributions to scores — the [[scoreFold]] convention for the
     * second scorer, shared by [[qlDirichletScores]] and
-    * [[qlWandCore]] so the pruned candidates are bitwise the
+    * [[qlWandScorer]] so the pruned candidates are bitwise the
     * unpruned pipeline BY CONSTRUCTION (they cannot drift): the
     * word-sorted fold (or the plain map-side-combined scale sum —
     * the unused word column prunes out of that shuffle), dl and |q|
@@ -2149,10 +2112,11 @@ object Retrieval {
     *     θ exceeds ub is SAFE: no pruned doc can enter its top k (ties
     *     included — a tying doc would need score ≥ θ > its bound).
     *     Queries with < k candidates or ub ≥ θ FALL BACK to the
-    *     unpruned pipeline — restricted to just those queries — so the
-    *     result is exact for every query, and the bound only decides
-    *     how much work was saved. Hot-only query batches degrade to
-    *     exactly the unpruned plan, never to a wrong answer.
+    *     unpruned scores restricted to just those queries (assembled
+    *     as [[wandTopK]] states), so the result is exact for every
+    *     query, and the bound only decides how much work was saved.
+    *     Hot-only query batches degrade to exactly the unpruned plan,
+    *     never to a wrong answer.
     *
     * At ingest both phases are exchange-free on the index side with the
     * two persisted layouts (word-bucketed postings for the rare probe,
@@ -2171,18 +2135,9 @@ object Retrieval {
                    impact: Option[DataFrame] = None)
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    val c = wandCore(unitEnriched(dfTab, stats, queries, qidCol, qtextCol),
-      tf, k, hotDf, k1, b, bitExact, forward, impact,
-      checkpointCandScores = true)
-    // r20: fallback COMPLETION — unsafe queries reuse the phase-1
-    // candidate scores and pay only the hot-only complement
-    // ([[wandFallbackScores]] carries the exactness argument), where
-    // the pre-r20 fallback rescanned every posting list of every
-    // unsafe query from scratch
-    val fallback = bm25TopK(
-      wandFallbackScores(c, tf, hotDf, k1, b, bitExact), k)
-    c.safeTopK.unionByName(fallback.select("queryId", "docId", "score",
-      "rank"))
+    wandTopK(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
+      impact), unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
+      hotDf)
   }
 
   /** [[bm25TopKWand]] under a WEIGHTED query-term table
@@ -2201,7 +2156,7 @@ object Retrieval {
     * caller feeding negative weights voids the safety proof (zero
     * weights are merely dead rows). Same two-phase plan, same
     * two-layout ingest contract, same exact fallback routing as the
-    * unit-weight operator — they share [[wandCore]], so they cannot
+    * unit-weight operator — they share [[bm25WandScorer]], so they cannot
     * drift.
     */
   def bm25TopKWandWeighted(tf: DataFrame, termWeights: DataFrame,
@@ -2213,16 +2168,8 @@ object Retrieval {
                            impact: Option[DataFrame] = None)
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    val c = wandCore(enrichedWeightedTerms(dfTab, stats, termWeights),
-      tf, k, hotDf, k1, b, bitExact, forward, impact,
-      checkpointCandScores = true)
-    // r20: fallback completion (see [[wandFallbackScores]]) — the
-    // weighted enriched checkpoint carries the weights, so the
-    // hot-only complement folds the same weight·contrib trees
-    val fallback = bm25TopK(
-      wandFallbackScores(c, tf, hotDf, k1, b, bitExact), k)
-    c.safeTopK.unionByName(fallback.select("queryId", "docId", "score",
-      "rank"))
+    wandTopK(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
+      impact), enrichedWeightedTerms(dfTab, stats, termWeights), k, hotDf)
   }
 
   /** The WAND decision table itself (the q173 convention: gate the
@@ -2247,14 +2194,14 @@ object Retrieval {
                     impact: Option[DataFrame] = None)
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    wandStatsFrom(
-      wandCore(unitEnriched(dfTab, stats, queries, qidCol, qtextCol),
-        tf, k, hotDf, k1, b, bitExact, forward, impact), hotDf)
+    wandStats(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
+      impact), unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
+      hotDf)
   }
 
   /** [[bm25WandStats]] for the WEIGHTED operator — the q192 gate's
     * readout: identical columns, identical routing predicate, shared
-    * [[wandCore]] internals with [[bm25TopKWandWeighted]] so the table
+    * [[bm25WandScorer]] with [[bm25TopKWandWeighted]] so the table
     * cannot drift from the operator. `ub` here is the weighted bound
     * `Σ_hot weight·idf·(k1+1)·(1+1e-9)` (word-sorted product fold).
     */
@@ -2267,93 +2214,175 @@ object Retrieval {
                             impact: Option[DataFrame] = None)
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    wandStatsFrom(
-      wandCore(enrichedWeightedTerms(dfTab, stats, termWeights),
-        tf, k, hotDf, k1, b, bitExact, forward, impact), hotDf)
+    wandStats(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
+      impact), enrichedWeightedTerms(dfTab, stats, termWeights), k, hotDf)
   }
 
-  /** The shared internals of the WAND family. `safeTopK` is the
-    * pruned-path output (safe queries only); `unsafeQ` the fallback
-    * routing set. `candScoresPre` (r20) is the full EXACT per-candidate
-    * score table BEFORE the top-k window (and, in MaxP mode, before the
-    * doc-level max) — the fallback-completion input: entry points that
-    * route unsafe queries through a fallback ask [[wandCore]] /
-    * [[qlWandCore]] to checkpoint it (`checkpointCandScores`) so the
-    * completion consumes the materialized phase-1 scores instead of
-    * replaying the candidate subtree.
+  /** What one scorer supplies to the shared WAND plan ([[wandTopK]],
+    * [[wandStats]]); everything else — the enriched checkpoint, the
+    * rare/hot split, θ, the routing set and the fallback completion —
+    * is written once there. Instances: [[bm25WandScorer]] (unit,
+    * weighted, MaxP and, through its probe filter, the federated
+    * probe), [[qlWandScorer]], [[bm25fWandScorer]]. Contributions are
+    * `(queryId, docId, word, __c, …)` rows, the input of [[fold]].
     */
-  private[operators] final case class WandCore(enriched: DataFrame,
+  private[operators] trait WandScorer {
+    /** Phase 1 over the enriched term table and its rare/hot split:
+      * `(candPairs, contributions)` — the (queryId, docId) pairs
+      * matching ≥ 1 rare term, and EVERY matched contribution of
+      * those pairs (rare and hot), so their folds are full scores.
+      */
+    def candidates(enriched: DataFrame, rare: DataFrame,
+                   hot: DataFrame): (DataFrame, DataFrame)
+    /** The contributions of every doc matching one of `hotTerms` (a
+      * subset of the hot rows) — the fallback complement's input.
+      */
+    def hotContribs(hotTerms: DataFrame): DataFrame
+    /** Contributions → `(queryId, docId, score)`, the unpruned
+      * scorer's own collapse ([[scoreFold]]'s `shuffleFirst`).
+      */
+    def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame
+    /** Per query with hot terms: `(queryId, __ub)`, an upper bound on
+      * the score of any doc matching only hot terms.
+      */
+    def hotUb(hot: DataFrame): DataFrame
+  }
+
+  /** THE routing predicate of the WAND family over a per-query
+    * `(__ub, __theta)` row: the query is UNSAFE — it completes
+    * through the fallback — when it has < k candidates (θ missing) or
+    * a hot-only doc could reach θ (`ub ≥ θ`). A safe query has
+    * `ub < θ` strictly, so no pruned doc can enter its top k, ties
+    * included (a tying doc would need score ≥ θ > its bound).
+    */
+  private val wandUnsafe: Column =
+    col("__theta").isNull || col("__ub") >= col("__theta")
+
+  /** The stages [[wandTopK]] and [[wandStats]] share. */
+  private final case class WandPlan(enriched: DataFrame, hot: DataFrame,
                                     candPairs: DataFrame,
-                                    candScoresPre: DataFrame,
-                                    topkCand: DataFrame,
-                                    hotUb: DataFrame, theta: DataFrame,
-                                    unsafeQ: DataFrame) {
-    def safeTopK: DataFrame =
-      topkCand.join(unsafeQ, Seq("queryId"), "left_anti")
-        .select("queryId", "docId", "score", "rank")
+                                    candScores: DataFrame,
+                                    topkCand: DataFrame, theta: DataFrame,
+                                    hotUb: DataFrame)
+
+  /** The WAND plan up to θ. `eagerCandidates` materializes the
+    * candidate scores when the fallback completion will read them a
+    * second time.
+    */
+  private def wandPlan(s: WandScorer, enrichedLazy: DataFrame,
+                       k: Int, hotDf: Long, docMap: Option[DataFrame],
+                       eagerCandidates: Boolean): WandPlan = {
+    require(k > 0, s"k > 0: $k")
+    require(hotDf >= 0, s"hotDf >= 0: $hotDf")
+    // query-batch-sized, consumed 3× (rare, hot, bound) — eager
+    val enriched = enrichedLazy.localCheckpoint()
+    val rare = enriched.filter(col("df") <= hotDf)
+    val hot = enriched.filter(col("df") > hotDf)
+    val (candPairs, contrib) = s.candidates(enriched, rare, hot)
+    // candidate-sized — see scoreFold
+    val folded = s.fold(contrib, shuffleFirst = false)
+    val candScores = if (eagerCandidates) folded.localCheckpoint() else folded
+    // MAXP MODE (`docMap` = a (passageId, docId) membership table —
+    // [[graft.operators.Passages]]): the index rows are PASSAGES, the
+    // ranked unit is the DOCUMENT, score = max passage score. The
+    // candidate passage scores above are exact full scores as before;
+    // mapping them through [[maxPassageScores]] BEFORE the top-k
+    // window makes θ the kth DOC-level max — which is what the safety
+    // proof needs here: θ at the PASSAGE level over-states the doc
+    // cutoff (doc maxes are a per-doc best subset of passage scores),
+    // and routing on it could call a query safe while a pruned
+    // passage beats the true doc θ. With θ at the doc level the
+    // argument closes: every pruned (hot-only) passage scores
+    // < ub < θ, so it can neither lift a top-k doc's max (that max is
+    // already ≥ θ) nor lift an outside doc to ≥ θ — ties included,
+    // since the exclusion is strict.
+    val ranked = docMap.fold(candScores)(maxPassageScores(candScores, _))
+    val w = Window.partitionBy(col("queryId"))
+      .orderBy(col("score").desc, col("docId").asc)
+    // result-sized (≤ queries × k rows), consumed 2× (θ + safe output)
+    val topkCand = ranked.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k).localCheckpoint()
+    val theta = topkCand.filter(col("rank") === k)
+      .select(col("queryId"), col("score").as("__theta"))
+    WandPlan(enriched, hot, candPairs, candScores, topkCand, theta,
+      s.hotUb(hot))
   }
 
-  /** FALLBACK COMPLETION for the BM25 WAND family (r20, guide §2.4 —
-    * don't recompute what phase 1 already computed): the exact scores
-    * of the UNSAFE queries, assembled from the core's already-exact
-    * candidate scores plus the hot-only complement, instead of the
-    * pre-r20 from-scratch rescoring of every unsafe query.
-    *
-    * Why this is bitwise the unpruned pipeline restricted to unsafe
-    * queries (the fallback contract every WAND gate is graded on):
-    * a matched (query, doc) pair either has ≥ 1 rare matched term —
-    * then it IS a candidate and `candScoresPre` already folded ALL its
-    * matched contributions (rare via the posting join, hot via the
-    * forward fetch) word-sorted, the exactness q182/q204/q223 gate —
-    * or it matches ONLY hot terms, and its full matched-term set is
-    * exactly its hot matches: the complement below folds those same
-    * `weight · contrib` trees word-sorted. The two sets partition the
-    * matched pairs (the anti-join removes candidates from the
-    * complement), so the union is the unpruned score table for unsafe
-    * queries, row for row and bit for bit.
-    *
-    * What it saves, at both scales: the old fallback re-derived the
-    * enrichment and re-scanned EVERY posting list of every unsafe
-    * query (rare + hot) and re-folded all of it; the completion scans
-    * only the hot posting lists of unsafe queries — the rare postings
-    * and the whole candidate fold are consumed from the phase-1
-    * checkpoint. One full scoring subtree leaves the plan.
+  /** The score-exact pruned top-k of every WAND operator: the
+    * [[wandPlan]] candidates and θ, the routing set ([[wandUnsafe]]),
+    * the safe queries' candidate top-k, and the unsafe queries'
+    * FALLBACK COMPLETION, all as `(queryId, docId, score, rank)`.
     */
-  private[operators] def wandFallbackScores(c: WandCore, tf: DataFrame,
-                                            hotDf: Long,
-                                            k1: Double, b: Double,
-                                            bitExact: Boolean): DataFrame = {
-    val hotUnsafe = c.enriched.filter(col("df") > hotDf)
-      .join(c.unsafeQ, Seq("queryId"), "left_semi")
-    val hotOnly = tf.join(broadcast(hotUnsafe), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * contribExpr(k1, b)).as("__c"))
-      .join(c.candPairs, Seq("queryId", "docId"), "left_anti")
-    c.candScoresPre.join(c.unsafeQ, Seq("queryId"), "left_semi")
-      .unionByName(scoreFold(hotOnly, bitExact))
-  }
-
-  /** [[wandFallbackScores]] for the QL core — same partition argument,
-    * QL trees: candidates carry the exact folded score WITH the
-    * once-added length normalizer ([[qlScoreFold]] inside the core);
-    * hot-only docs fold their hot contributions through the same
-    * [[qlScoreFold]] (`dl`/`__nq` ride the enriched checkpoint), so
-    * the union is bitwise `qlDirichletScores`/`qlScoresWeighted`
-    * restricted to unsafe queries.
-    */
-  private[operators] def qlWandFallbackScores(c: WandCore, tf: DataFrame,
-                                              hotDf: Long, mu: Double,
-                                              bitExact: Boolean)
+  private[operators] def wandTopK(scorer: WandScorer,
+                                  enrichedLazy: DataFrame,
+                                  k: Int, hotDf: Long,
+                                  docMap: Option[DataFrame] = None)
       : DataFrame = {
-    val hotUnsafe = c.enriched.filter(col("df") > hotDf)
-      .join(c.unsafeQ, Seq("queryId"), "left_semi")
-    val hotOnly = tf.join(broadcast(hotUnsafe), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * qlContribExpr(mu)).as("__c"), col("dl"),
-        col("__nq"))
-      .join(c.candPairs, Seq("queryId", "docId"), "left_anti")
-    c.candScoresPre.join(c.unsafeQ, Seq("queryId"), "left_semi")
-      .unionByName(qlScoreFold(hotOnly, mu, bitExact))
+    val w = wandPlan(scorer, enrichedLazy, k, hotDf, docMap,
+      eagerCandidates = true)
+    // Checkpointed: consumed by the safe anti-join and the fallback
+    // semi-joins, and the id-width materialization measured FASTER
+    // than recomputing the two query-width stages per consumer (5.3
+    // vs 6.3 s on the q182 probe — the A/B is in BASELINE round 15)
+    val unsafeQ = w.hotUb.join(w.theta, Seq("queryId"), "left_outer")
+      .filter(wandUnsafe).select("queryId").localCheckpoint()
+    // FALLBACK COMPLETION (r20): the exact scores of the unsafe
+    // queries from the phase-1 candidate scores plus the hot-only
+    // complement, never a from-scratch rescoring. Why this is bitwise
+    // the unpruned scorer restricted to unsafe queries: a matched
+    // (query, doc) pair either has ≥ 1 rare matched term — then it IS
+    // a candidate and `candScores` already folded ALL its matched
+    // contributions — or it matches ONLY hot terms, and its full
+    // matched-term set is exactly its hot matches, which the
+    // complement folds through the same contribution trees and the
+    // same fold. The anti-join removes candidates from the complement,
+    // so the two halves partition the matched pairs: the union is the
+    // unpruned score table for unsafe queries, row for row and bit for
+    // bit. This holds for every scorer: the federated probe filter
+    // restricts both halves to the selected (query, shard) pairs;
+    // BM25F folds full pseudo-tf trees per (doc, word) on both sides;
+    // in MaxP mode both halves are PASSAGE scores and one doc-level
+    // max covers their union. The completion scans only the hot
+    // postings of unsafe queries — the rare postings and the whole
+    // candidate fold come from phase 1.
+    val complement = scorer
+      .hotContribs(w.hot.join(unsafeQ, Seq("queryId"), "left_semi"))
+      .join(w.candPairs, Seq("queryId", "docId"), "left_anti")
+    val fbScores = w.candScores.join(unsafeQ, Seq("queryId"), "left_semi")
+      .unionByName(scorer.fold(complement, shuffleFirst = true))
+    val fallback = bm25TopK(
+      docMap.fold(fbScores)(maxPassageScores(fbScores, _)), k)
+    w.topkCand.join(unsafeQ, Seq("queryId"), "left_anti")
+      .select("queryId", "docId", "score", "rank")
+      .unionByName(fallback.select("queryId", "docId", "score", "rank"))
+  }
+
+  /** The WAND decision table from the [[wandTopK]] stages: per query
+    * `(queryId, n_rare_terms, n_hot_terms, n_candidates, ub, theta,
+    * safe)`, `safe` false exactly for the queries [[wandTopK]] routes
+    * to the fallback. The routing set itself is never built.
+    */
+  private[operators] def wandStats(scorer: WandScorer,
+                                   enrichedLazy: DataFrame,
+                                   k: Int, hotDf: Long,
+                                   docMap: Option[DataFrame] = None)
+      : DataFrame = {
+    val w = wandPlan(scorer, enrichedLazy, k, hotDf, docMap,
+      eagerCandidates = false)
+    val perQ = w.enriched.groupBy("queryId").agg(
+      sum(when(col("df") <= hotDf, 1L).otherwise(0L)).as("n_rare_terms"),
+      sum(when(col("df") > hotDf, 1L).otherwise(0L)).as("n_hot_terms"))
+    val nCand = w.candPairs.groupBy("queryId")
+      .agg(count(lit(1)).as("n_candidates"))
+    perQ
+      .join(nCand, Seq("queryId"), "left_outer")
+      .join(w.hotUb, Seq("queryId"), "left_outer")
+      .join(w.theta, Seq("queryId"), "left_outer")
+      .select(col("queryId"),
+        col("n_rare_terms"), col("n_hot_terms"),
+        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
+        col("__ub").as("ub"), col("__theta").as("theta"),
+        (!(col("n_hot_terms") > 0 && wandUnsafe)).as("safe"))
   }
 
   /** The persisted (dfTable, corpusStats) pair when the caller has it
@@ -2380,171 +2409,106 @@ object Retrieval {
     enrichedQueryTerms(dfTab, stats, queries, qidCol, qtextCol)
       .withColumn("weight", lit(1.0))
 
-  private[operators] def wandStatsFrom(c: WandCore, hotDf: Long): DataFrame = {
-    val perQ = c.enriched.groupBy("queryId").agg(
-      sum(when(col("df") <= hotDf, 1L).otherwise(0L)).as("n_rare_terms"),
-      sum(when(col("df") > hotDf, 1L).otherwise(0L)).as("n_hot_terms"))
-    val nCand = c.candPairs.groupBy("queryId")
-      .agg(count(lit(1)).as("n_candidates"))
-    perQ
-      .join(nCand, Seq("queryId"), "left_outer")
-      .join(c.hotUb, Seq("queryId"), "left_outer")
-      .join(c.theta, Seq("queryId"), "left_outer")
-      .select(col("queryId"),
-        col("n_rare_terms"), col("n_hot_terms"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        col("__ub").as("ub"), col("__theta").as("theta"),
-        (!(col("n_hot_terms") > 0 &&
-          (col("__theta").isNull || col("__ub") >= col("__theta"))))
-          .as("safe"))
+  /** The posting-probe + forward-fetch [[WandScorer]] form shared by
+    * BM25, QL and the federated probe: candidates surface through the
+    * RARE posting lists, their hot contributions are fetched doc-wise
+    * through the `forward` layout (docId-bucketed at ingest), and the
+    * fallback complement probes the hot posting lists like the rare
+    * ones. `probeFilter` lands on every posting probe before the
+    * projection (the federated (queryId, shard) semi-join);
+    * `contribCols` projects a posting ⋈ enriched-term row to a
+    * contribution row.
+    */
+  private abstract class PostingWandScorer(postings: DataFrame,
+                                           forward: DataFrame,
+                                           probeFilter: DataFrame => DataFrame)
+      extends WandScorer {
+    protected def contribCols: Seq[Column]
+    // the term tables are query-batch-sized by contract — explicit
+    // broadcast sides (the postingContribs rationale)
+    private def probe(terms: DataFrame): DataFrame =
+      probeFilter(postings.join(broadcast(terms), Seq("word")))
+        .select(contribCols: _*)
+    def candidates(enriched: DataFrame, rare: DataFrame,
+                   hot: DataFrame): (DataFrame, DataFrame) = {
+      val rareContrib = probe(rare)
+      val candPairs = rareContrib.select("queryId", "docId").distinct()
+      val hotContrib = candPairs.join(forward, Seq("docId"))
+        .join(broadcast(hot), Seq("queryId", "word"))
+        .select(contribCols: _*)
+      (candPairs, rareContrib.unionByName(hotContrib))
+    }
+    def hotContribs(hotTerms: DataFrame): DataFrame = probe(hotTerms)
   }
 
-  /** The per-query hot-only score bound off a WEIGHTED hot-term table
-    * `(queryId, word, weight, avgdl, idf, ...)` — extracted from
-    * [[wandCore]] so [[graft.operators.Federation]]'s pruned probes
-    * share the EXACT bound tree (a bound drift must fail every
-    * decision-table gate, never fork silently): without metadata the
-    * tf→∞ saturation ceiling `Σ weight·idf·(k1+1)`, with an
-    * [[impactStats]] table the per-term corpus-extremal ceiling
-    * `weight·f(max_tf, min_dl)` (missing words fall back to
-    * saturation in-place); word-sorted fold, ×(1+1e-9) margin — the
-    * full derivation and the staleness contract live at the
-    * [[wandCore]] call site.
+  /** The BM25 [[WandScorer]] over an enriched WEIGHTED term table
+    * `(queryId, word, weight, avgdl, idf, df)` — unit weight rides as
+    * an explicit 1.0 ([[unitEnriched]]). Contributions are
+    * `weight · bm25` ([[contribExpr]]), folded by [[scoreFold]].
+    *
+    * The bound `Σ_hot weight·idf·(k1+1)` (derived at [[bm25TopKWand]])
+    * holds only for `k1 ≥ 0` and `b ∈ [0,1]` (K > 0 for every dl) and
+    * strictly positive weights. The fold is word-sorted (the repo's
+    * bit-reproducibility convention: the bound drives routing and
+    * q187/q192 gate it, so a partitioning-dependent plain sum would
+    * make the decision table non-reproducible at ulp-adjacent
+    * boundaries), with the per-term product INSIDE the struct so the
+    * oracle replays `list(weight * idf ORDER BY word)` verbatim.
+    *
+    * With an [[impactStats]] table the per-term ceiling TIGHTENS from
+    * the saturation limit to the term's corpus-extremal contribution
+    * `weight·idf·f(max_tf, min_dl)` (the SAME [[contribExpr]] tree at
+    * the extremes — monotone in tf and in −dl, so it dominates every
+    * real posting). Tighter ub → more queries route safe → fewer
+    * fallbacks (q205 gates the tightened table, q204 the unchanged
+    * top-k through it). A hot word MISSING from the metadata falls
+    * back to its saturation ceiling in-place, and a table left stale
+    * by DELETIONS still upper-bounds the surviving postings (subset)
+    * — both degrade pruning, never correctness. The one staleness that
+    * is NOT safe is the append direction: tf grown through
+    * [[compactTermIndex]] without the matching [[compactImpactStats]]
+    * merge leaves (max_tf, min_dl) UNDER bounds for words already
+    * present, and an under-bounded ub can route a query safe while a
+    * pruned doc beats θ. Appends must go through
+    * [[compactImpactStats]] (the StreamingSpec ingest loop).
     */
-  private[operators] def wandHotUb(hot: DataFrame, k1: Double, b: Double,
-                                   impact: Option[DataFrame]): DataFrame =
-    impact match {
-      case None =>
-        hot.groupBy("queryId")
-          .agg((aggregate(
-            sort_array(collect_list(struct(col("word"),
-              (col("weight") * col("idf")).as("__wIdf")))),
-            lit(0.0), (a, x) => a + x.getField("__wIdf")) *
-            lit((k1 + 1.0) * (1.0 + 1e-9))).as("__ub"))
-      case Some(imp) =>
-        hot
-          .join(imp.select(col("word"), col("max_tf").as("tf"),
-            col("min_dl").as("dl")), Seq("word"), "left_outer")
-          .select(col("queryId"), col("word"),
-            when(col("tf").isNull,
-              col("weight") * col("idf") * lit(k1 + 1.0))
-              .otherwise(col("weight") * contribExpr(k1, b)).as("__wc"))
-          .groupBy("queryId")
-          .agg((aggregate(
-            sort_array(collect_list(struct(col("word"), col("__wc")))),
-            lit(0.0), (a, x) => a + x.getField("__wc")) *
-            lit(1.0 + 1e-9)).as("__ub"))
-    }
-
-  /** The two-phase WAND plan over an enriched WEIGHTED query-term
-    * table `(queryId, word, weight, avgdl, idf, df)` — everything both
-    * the unit and weighted operators share: the rare/hot split, the
-    * weighted hot-only bound, rare-posting candidates, the forward
-    * fetch, θ, and the routing set. The fallback (which differs — raw
-    * queries vs a weight table) stays with the public entry points.
-    */
-  private[operators] def wandCore(enrichedLazy: DataFrame, tf: DataFrame,
-                       k: Int, hotDf: Long, k1: Double, b: Double,
-                       bitExact: Boolean,
-                       forward: Option[DataFrame],
-                       impact: Option[DataFrame],
-                       docMap: Option[DataFrame] = None,
-                       checkpointCandScores: Boolean = false): WandCore = {
-    require(k > 0, s"k > 0: $k")
-    require(hotDf >= 0, s"hotDf >= 0: $hotDf")
+  private[operators] def bm25WandScorer(postings: DataFrame,
+                                        forward: DataFrame,
+                                        k1: Double, b: Double,
+                                        bitExact: Boolean,
+                                        impact: Option[DataFrame],
+                                        probeFilter: DataFrame => DataFrame
+                                          = identity): WandScorer = {
     require(k1 >= 0 && b >= 0 && b <= 1, s"k1 >= 0, b in [0,1]: $k1, $b")
-    // query-batch-sized, consumed 3× (rare, hot, bound) — eager
-    val enriched = enrichedLazy.localCheckpoint()
-    val rare = enriched.filter(col("df") <= hotDf)
-    val hot = enriched.filter(col("df") > hotDf)
-    // conservative per-query bound on any hot-only doc's score —
-    // word-sorted PRODUCT fold (the repo's bit-reproducibility
-    // convention): the bound drives the safe/fallback ROUTING and
-    // q187/q192 gate it, so a partitioning-dependent plain sum would
-    // make the decision table non-reproducible at ulp-adjacent
-    // boundaries. The per-term product folds INSIDE the struct so the
-    // oracle replays `list(weight * idf ORDER BY word)` verbatim.
-    //
-    // With an [[impactStats]] table the per-term ceiling TIGHTENS from
-    // the tf→∞ saturation limit `idf·(k1+1)` to the term's actual
-    // corpus-extremal contribution `idf·f(max_tf, min_dl)` (the SAME
-    // [[contribExpr]] tree evaluated at the extremes — monotone in tf
-    // and in −dl, so it dominates every real posting; the 1e-9 margin
-    // absorbs ulp-level association drift as before). Tighter ub →
-    // more queries route safe → fewer exact fallbacks, and the bound
-    // stays achievable-but-sufficient: `ub < θ` still excludes every
-    // pruned doc, ties included (q205 gates the tightened table, q204
-    // the unchanged top-k through it). A hot word MISSING from the
-    // metadata falls back to its saturation ceiling in-place, and a
-    // table left stale by DELETIONS still upper-bounds the surviving
-    // postings (subset) — both degrade pruning, never correctness.
-    // The one staleness that is NOT safe is the append direction: tf
-    // grown through [[compactTermIndex]] without the matching
-    // [[compactImpactStats]] merge leaves (max_tf, min_dl) UNDER
-    // bounds for words already present, and an under-bounded ub can
-    // route a query safe while a pruned doc beats θ. Appends must go
-    // through [[compactImpactStats]] (the StreamingSpec ingest loop);
-    // the [[impactStats]] lifecycle doc states the contract.
-    val hotUb = wandHotUb(hot, k1, b, impact)
-    // phase 1: candidates via the rare postings, then full scores with
-    // the hot contributions fetched doc-wise through the forward
-    // layout. rare/hot are query-batch-sized by contract — explicit
-    // broadcast sides (the postingContribs rationale)
-    val rareContrib = tf.join(broadcast(rare), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * contribExpr(k1, b)).as("__c"))
-    val candPairs = rareContrib.select("queryId", "docId").distinct()
-    val fwd = forward.getOrElse(tf)
-    val hotContrib = candPairs.join(fwd, Seq("docId"))
-      .join(broadcast(hot), Seq("queryId", "word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * contribExpr(k1, b)).as("__c"))
-    // candidate-match-sized; `checkpointCandScores` materializes it so
-    // the fallback COMPLETION ([[wandFallbackScores]]) consumes the
-    // phase-1 scores instead of replaying the candidate subtree — the
-    // top-k entry points with a fallback set it, the stats-only
-    // readouts don't pay the extra job
-    val candScoresP0 = scoreFold(rareContrib.unionByName(hotContrib),
-      bitExact, shuffleFirst = false) // candidate-sized — see scoreFold
-    val candScoresP =
-      if (checkpointCandScores) candScoresP0.localCheckpoint()
-      else candScoresP0
-    // MAXP MODE (`docMap` = a (passageId, docId) membership table —
-    // [[graft.operators.Passages]]): the index rows are PASSAGES, the
-    // ranked unit is the DOCUMENT, score = max passage score. The
-    // candidate passage scores above are exact full scores as before;
-    // mapping them through [[maxPassageScores]] BEFORE the top-k
-    // window makes θ the kth DOC-level max — which is what the safety
-    // proof needs here: θ at the PASSAGE level over-states the doc
-    // cutoff (doc maxes are a per-doc best subset of passage scores),
-    // and routing on it could call a query safe while a pruned
-    // passage beats the true doc θ. With θ at the doc level the
-    // argument closes: every pruned (hot-only) passage scores
-    // < ub < θ, so it can neither lift a top-k doc's max (that max is
-    // already ≥ θ) nor lift an outside doc to ≥ θ — ties included,
-    // since the exclusion is strict.
-    val candScores = docMap match {
-      case None    => candScoresP
-      case Some(m) => maxPassageScores(candScoresP, m)
+    new PostingWandScorer(postings, forward, probeFilter) {
+      protected def contribCols: Seq[Column] =
+        Seq(col("queryId"), col("docId"), col("word"),
+          (col("weight") * contribExpr(k1, b)).as("__c"))
+      def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
+        scoreFold(contrib, bitExact, shuffleFirst)
+      def hotUb(hot: DataFrame): DataFrame = impact match {
+        case None =>
+          hot.groupBy("queryId")
+            .agg((aggregate(
+              sort_array(collect_list(struct(col("word"),
+                (col("weight") * col("idf")).as("__wIdf")))),
+              lit(0.0), (a, x) => a + x.getField("__wIdf")) *
+              lit((k1 + 1.0) * (1.0 + 1e-9))).as("__ub"))
+        case Some(imp) =>
+          hot
+            .join(imp.select(col("word"), col("max_tf").as("tf"),
+              col("min_dl").as("dl")), Seq("word"), "left_outer")
+            .select(col("queryId"), col("word"),
+              when(col("tf").isNull,
+                col("weight") * col("idf") * lit(k1 + 1.0))
+                .otherwise(col("weight") * contribExpr(k1, b)).as("__wc"))
+            .groupBy("queryId")
+            .agg((aggregate(
+              sort_array(collect_list(struct(col("word"), col("__wc")))),
+              lit(0.0), (a, x) => a + x.getField("__wc")) *
+              lit(1.0 + 1e-9)).as("__ub"))
+      }
     }
-    val w = Window.partitionBy(col("queryId"))
-      .orderBy(col("score").desc, col("docId").asc)
-    // result-sized (≤ queries × k rows), consumed 2× (θ + safe output)
-    val topkCand = candScores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k).localCheckpoint()
-    val theta = topkCand.filter(col("rank") === k)
-      .select(col("queryId"), col("score").as("__theta"))
-    // phase 2: a θ row missing means < k candidates; either way a
-    // reachable bound sends the query to the exact fallback.
-    // Checkpointed: consumed twice (safe anti-join + fallback
-    // semi-join) and the id-width materialization measured FASTER than
-    // recomputing the two query-width stages per consumer (5.3 vs
-    // 6.3 s on the q182 probe — the A/B is in BASELINE round 15)
-    val unsafeQ = hotUb.join(theta, Seq("queryId"), "left_outer")
-      .filter(col("__theta").isNull || col("__ub") >= col("__theta"))
-      .select("queryId").localCheckpoint()
-    WandCore(enriched, candPairs, candScoresP, topkCand, hotUb, theta,
-      unsafeQ)
   }
 
   /** SCORE-EXACT pruned top-k for the QUERY-LIKELIHOOD Dirichlet
@@ -2588,12 +2552,13 @@ object Retrieval {
     * lifecycle contract, identical to the BM25 family.
     *
     * Queries with < k candidates or a reachable bound FALL BACK to
-    * the unpruned [[qlDirichletScores]] pipeline restricted to just
-    * those queries; hot-only query batches degrade to exactly the
-    * unpruned plan, never a wrong answer. `tf` is referenced up to
-    * 6× (df, cf, scalars, rare probe, forward default, fallback):
-    * persisted state at ingest ([[compactTermIndex]]'s triple +
-    * [[cfTable]] + [[impactStats]]), materialize-first otherwise.
+    * the unpruned [[qlDirichletScores]] scores restricted to just
+    * those queries ([[wandTopK]]'s completion); hot-only query
+    * batches degrade to exactly the unpruned plan, never a wrong
+    * answer. `tf` is referenced up to 6× (df, cf, scalars, rare
+    * probe, forward default, fallback): persisted state at ingest
+    * ([[compactTermIndex]]'s triple + [[cfTable]] + [[impactStats]]),
+    * materialize-first otherwise.
     */
   def qlTopKWand(tf: DataFrame,
                  queries: DataFrame, qidCol: String, qtextCol: String,
@@ -2606,14 +2571,9 @@ object Retrieval {
                  impact: Option[DataFrame] = None): DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
     val cfTab = cf.getOrElse(cfTable(tf))
-    val c = qlWandCore(qlUnitEnriched(cfTab, dfTab, stats, queries,
-      qidCol, qtextCol), tf, k, hotDf, mu, bitExact, forward, impact,
-      checkpointCandScores = true)
-    // r20: fallback completion (see [[qlWandFallbackScores]])
-    val fallback = bm25TopK(
-      qlWandFallbackScores(c, tf, hotDf, mu, bitExact), k)
-    c.safeTopK.unionByName(fallback.select("queryId", "docId", "score",
-      "rank"))
+    wandTopK(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
+      qlUnitEnriched(cfTab, dfTab, stats, queries, qidCol, qtextCol), k,
+      hotDf)
   }
 
   /** [[qlTopKWand]] under a WEIGHTED query-term table
@@ -2630,7 +2590,7 @@ object Retrieval {
     * is unchanged); correctness requires STRICTLY POSITIVE weights,
     * which [[rm3ExpandedTermsQl]] guarantees by construction. Same
     * two-phase plan, same sign-aware margins, same exact fallback
-    * routing — shared [[qlWandCore]], so the unit and weighted
+    * routing — shared [[qlWandScorer]], so the unit and weighted
     * operators cannot drift.
     */
   def qlTopKWandWeighted(tf: DataFrame, termWeights: DataFrame,
@@ -2643,14 +2603,8 @@ object Retrieval {
                          impact: Option[DataFrame] = None): DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
     val cfTab = cf.getOrElse(cfTable(tf))
-    val c = qlWandCore(qlWeightedEnriched(cfTab, dfTab, stats,
-      termWeights), tf, k, hotDf, mu, bitExact, forward, impact,
-      checkpointCandScores = true)
-    // r20: fallback completion (see [[qlWandFallbackScores]])
-    val fallback = bm25TopK(
-      qlWandFallbackScores(c, tf, hotDf, mu, bitExact), k)
-    c.safeTopK.unionByName(fallback.select("queryId", "docId", "score",
-      "rank"))
+    wandTopK(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
+      qlWeightedEnriched(cfTab, dfTab, stats, termWeights), k, hotDf)
   }
 
   /** ROUTING-AWARE weighted QL top-k — the production default for the
@@ -2755,7 +2709,7 @@ object Retrieval {
 
   /** The QL WAND decision table (the q187/q205 convention: gate the
     * PRUNING MATH, not just the final answer) — identical columns and
-    * routing predicate as [[bm25WandStats]], shared [[qlWandCore]]
+    * routing predicate as [[bm25WandStats]], shared [[qlWandScorer]]
     * internals with [[qlTopKWand]] so the readout cannot drift from
     * the operator. `ub` here is the sign-aware-margined QL bound
     * (positive hot fold ×(1+1e-9) + normalizer bound ×(1−1e-9));
@@ -2772,13 +2726,13 @@ object Retrieval {
                   impact: Option[DataFrame] = None): DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
     val cfTab = cf.getOrElse(cfTable(tf))
-    wandStatsFrom(
-      qlWandCore(qlUnitEnriched(cfTab, dfTab, stats, queries, qidCol,
-        qtextCol), tf, k, hotDf, mu, bitExact, forward, impact), hotDf)
+    wandStats(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
+      qlUnitEnriched(cfTab, dfTab, stats, queries, qidCol, qtextCol), k,
+      hotDf)
   }
 
   /** [[qlWandStats]] for the WEIGHTED operator — identical columns,
-    * identical routing predicate, shared [[qlWandCore]] internals
+    * identical routing predicate, shared [[qlWandScorer]] internals
     * with [[qlTopKWandWeighted]] so the table cannot drift from the
     * operator (the [[bm25WandWeightedStats]] convention).
     */
@@ -2792,100 +2746,65 @@ object Retrieval {
                           impact: Option[DataFrame] = None): DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
     val cfTab = cf.getOrElse(cfTable(tf))
-    wandStatsFrom(
-      qlWandCore(qlWeightedEnriched(cfTab, dfTab, stats, termWeights),
-        tf, k, hotDf, mu, bitExact, forward, impact), hotDf)
+    wandStats(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
+      qlWeightedEnriched(cfTab, dfTab, stats, termWeights), k, hotDf)
   }
 
-  /** The two-phase WAND plan for the QL Dirichlet scorer — the
-    * [[wandCore]] shape over the QL arithmetic: rare/hot split on df,
-    * rare-posting candidates, forward-fetched hot contributions, the
-    * exact fold + once-added length normalizer (bitwise
-    * [[qlDirichletScores]]' tree), θ, the sign-aware hot-only bound,
-    * and the routing set. Returns the same [[WandCore]] so
-    * `safeTopK` and [[wandStatsFrom]] are shared verbatim.
+  /** The QL Dirichlet [[WandScorer]] — the posting-probe form over the
+    * QL arithmetic: `weight · ` [[qlContribExpr]] contributions
+    * carrying `dl`/`__nq` into [[qlScoreFold]] (the word-sorted fold +
+    * the once-added length normalizer, bitwise
+    * [[qlDirichletScores]]' tree), and the sign-aware hot-only bound
+    * derived at [[qlTopKWand]].
     */
-  private def qlWandCore(enrichedLazy: DataFrame, tf: DataFrame,
-                         k: Int, hotDf: Long, mu: Double,
-                         bitExact: Boolean,
-                         forward: Option[DataFrame],
-                         impact: Option[DataFrame],
-                         checkpointCandScores: Boolean = false)
-      : WandCore = {
-    require(k > 0, s"k > 0: $k")
-    require(hotDf >= 0, s"hotDf >= 0: $hotDf")
+  private def qlWandScorer(tf: DataFrame, forward: DataFrame, mu: Double,
+                           bitExact: Boolean,
+                           impact: Option[DataFrame]): WandScorer = {
     require(mu > 0, s"mu > 0: $mu")
-    // query-batch-sized, consumed 3× (rare, hot, bound) — eager
-    val enriched = enrichedLazy.localCheckpoint()
-    val rare = enriched.filter(col("df") <= hotDf)
-    val hot = enriched.filter(col("df") > hotDf)
-    // rare/hot are query-batch-sized by contract — explicit broadcast
-    // sides (the postingContribs rationale)
-    val rareContrib = tf.join(broadcast(rare), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * qlContribExpr(mu)).as("__c"), col("dl"),
-        col("__nq"))
-    val candPairs = rareContrib.select("queryId", "docId").distinct()
-    val fwd = forward.getOrElse(tf)
-    val hotContrib = candPairs.join(fwd, Seq("docId"))
-      .join(broadcast(hot), Seq("queryId", "word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * qlContribExpr(mu)).as("__c"), col("dl"),
-        col("__nq"))
-    // the qlDirichletScores collapse SHARED (qlScoreFold): word-sorted
-    // fold + the once-added normalizer — bitwise the unpruned tree.
-    // `checkpointCandScores` materializes it for the fallback
-    // COMPLETION ([[qlWandFallbackScores]]) — see [[wandCore]]
-    val candScores0 = qlScoreFold(rareContrib.unionByName(hotContrib),
-      mu, bitExact, shuffleFirst = false) // candidate-sized
-    val candScores =
-      if (checkpointCandScores) candScores0.localCheckpoint()
-      else candScores0
-    val w = Window.partitionBy(col("queryId"))
-      .orderBy(col("score").desc, col("docId").asc)
-    // result-sized (≤ queries × k rows), consumed 2× (θ + safe output)
-    val topkCand = candScores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k).localCheckpoint()
-    val theta = topkCand.filter(col("rank") === k)
-      .select(col("queryId"), col("score").as("__theta"))
-    // per hot term: the contribution ceiling and the dl floor; a word
-    // missing from a partial impact table (left_outer miss) falls
-    // back to the corpus-free pair (ln(1 + |C|/μ), dl ≥ 1) in-place
-    val perTermCeil = impact match {
-      case None =>
-        hot.select(col("queryId"), col("word"),
-          (col("weight") *
-            log(lit(1.0) + col("__cTokens") / lit(mu))).as("__ct"),
-          lit(1L).as("__mdl"), col("__nq"))
-      case Some(imp) =>
-        hot
-          .join(imp.select(col("word"), col("max_tf"), col("min_dl")),
-            Seq("word"), "left_outer")
-          .select(col("queryId"), col("word"),
-            (col("weight") * when(col("max_tf").isNull,
-              log(lit(1.0) + col("__cTokens") / lit(mu)))
-              .otherwise(log(lit(1.0) +
-                col("max_tf").cast("double") * col("__cTokens") /
-                  (lit(mu) * col("cf").cast("double"))))).as("__ct"),
-            coalesce(col("min_dl"), lit(1L)).as("__mdl"), col("__nq"))
+    new PostingWandScorer(tf, forward, identity) {
+      protected def contribCols: Seq[Column] =
+        Seq(col("queryId"), col("docId"), col("word"),
+          (col("weight") * qlContribExpr(mu)).as("__c"), col("dl"),
+          col("__nq"))
+      def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
+        qlScoreFold(contrib, mu, bitExact, shuffleFirst)
+      def hotUb(hot: DataFrame): DataFrame = {
+        // per hot term: the contribution ceiling and the dl floor; a
+        // word missing from a partial impact table (left_outer miss)
+        // falls back to the corpus-free pair (ln(1 + |C|/μ), dl ≥ 1)
+        // in-place
+        val perTermCeil = impact match {
+          case None =>
+            hot.select(col("queryId"), col("word"),
+              (col("weight") *
+                log(lit(1.0) + col("__cTokens") / lit(mu))).as("__ct"),
+              lit(1L).as("__mdl"), col("__nq"))
+          case Some(imp) =>
+            hot
+              .join(imp.select(col("word"), col("max_tf"), col("min_dl")),
+                Seq("word"), "left_outer")
+              .select(col("queryId"), col("word"),
+                (col("weight") * when(col("max_tf").isNull,
+                  log(lit(1.0) + col("__cTokens") / lit(mu)))
+                  .otherwise(log(lit(1.0) +
+                    col("max_tf").cast("double") * col("__cTokens") /
+                      (lit(mu) * col("cf").cast("double"))))).as("__ct"),
+                coalesce(col("min_dl"), lit(1L)).as("__mdl"), col("__nq"))
+        }
+        // sign-aware margin (see qlTopKWand): positive fold up, negative
+        // normalizer magnitude down — both raise the bound
+        perTermCeil.groupBy("queryId")
+          .agg(aggregate(
+            sort_array(collect_list(struct(col("word"), col("__ct")))),
+            lit(0.0), (a, x) => a + x.getField("__ct")).as("__pos"),
+            min(col("__mdl")).as("__mdl"), max(col("__nq")).as("__n"))
+          .select(col("queryId"),
+            (col("__pos") * lit(1.0 + 1e-9) +
+              col("__n").cast("double") *
+                log(lit(mu) / (col("__mdl").cast("double") + lit(mu))) *
+                lit(1.0 - 1e-9)).as("__ub"))
+      }
     }
-    // sign-aware margin (see qlTopKWand): positive fold up, negative
-    // normalizer magnitude down — both raise the bound
-    val hotUb = perTermCeil.groupBy("queryId")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("word"), col("__ct")))),
-        lit(0.0), (a, x) => a + x.getField("__ct")).as("__pos"),
-        min(col("__mdl")).as("__mdl"), max(col("__nq")).as("__n"))
-      .select(col("queryId"),
-        (col("__pos") * lit(1.0 + 1e-9) +
-          col("__n").cast("double") *
-            log(lit(mu) / (col("__mdl").cast("double") + lit(mu))) *
-            lit(1.0 - 1e-9)).as("__ub"))
-    val unsafeQ = hotUb.join(theta, Seq("queryId"), "left_outer")
-      .filter(col("__theta").isNull || col("__ub") >= col("__theta"))
-      .select("queryId").localCheckpoint()
-    WandCore(enriched, candPairs, candScores, topkCand, hotUb, theta,
-      unsafeQ)
   }
 
   /** Faceted-search counts — the "facet sidebar" aggregation of a

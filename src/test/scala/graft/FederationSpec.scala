@@ -195,6 +195,37 @@ class FederationSpec extends SparkSpec {
       s"want both routes exercised: ${stats.mkString(",")}")
   }
 
+  test("federated WAND rejects BM25 parameters that void its bound") {
+    // with b > 1 or k1 < 0 the saturation ceiling idf·(k1+1) no longer
+    // bounds a posting, so a safe routing could drop a true top-k row
+    val c = Seq((1L, "tok1 tok2"), (2L, "tok2 tok3"), (3L, "tok1 tok3"))
+      .toDF("doc_id", "text")
+    val tf = Retrieval.termFrequencies(c, "doc_id", "text")
+      .localCheckpoint()
+    val dfT = Retrieval.dfTable(tf).localCheckpoint()
+    val st = Retrieval.corpusStats(tf).localCheckpoint()
+    val shards = c.select(col("doc_id").as("docId"),
+      pmod(col("doc_id"), lit(2)).as("shard"))
+    val shardTf = tf.join(shards, Seq("docId"))
+      .select(col("shard"), col("docId"), col("dl"), col("word"),
+        col("tf")).localCheckpoint()
+    val sdf = Federation.shardTermStats(tf, shards).localCheckpoint()
+    val scw = Federation.shardSizes(tf, shards).localCheckpoint()
+    val qs = Seq((900L, "tok1 tok3")).toDF("query_id", "text")
+    for ((k1, b25) <- Seq((1.2, 1.5), (-1.0, 0.75))) {
+      intercept[IllegalArgumentException] {
+        Federation.coriTopKWand(shardTf, sdf, scw, dfT, st, qs,
+          "query_id", "text", k = 2, nProbe = 2, hotDf = 1L, k1 = k1,
+          b25 = b25)
+      }
+      intercept[IllegalArgumentException] {
+        Federation.coriWandStats(shardTf, sdf, scw, dfT, st, qs,
+          "query_id", "text", k = 2, nProbe = 2, hotDf = 1L, k1 = k1,
+          b25 = b25)
+      }
+    }
+  }
+
   test("routed federated top-k serves the branch the corpus size " +
     "picks, and both branches answer bitwise") {
     val rnd = new scala.util.Random(251)

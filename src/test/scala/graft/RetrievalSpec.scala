@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 import graft.operators.Retrieval
 
@@ -11,6 +15,7 @@ import graft.operators.Retrieval
   */
 class RetrievalSpec extends SparkSpec {
   import spark.implicits._
+  import RetrievalSpec.WandCase
 
   private def docs(rows: (Long, String)*): DataFrame =
     rows.toDF("doc_id", "text")
@@ -377,6 +382,46 @@ class RetrievalSpec extends SparkSpec {
     // the top 2 are exactly the rareword docs
     assert(wand.select("docId").collect().map(_.getLong(0)).toSet
       === Set(1L, 2L))
+  }
+
+  /** Jobs started while `body` runs (construction included — the WAND
+    * operators checkpoint eagerly).
+    */
+  private def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; TestListenerBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("WAND job counts: the stats readout builds no routing set") {
+    // the decision table reads the enriched terms, candidates, bound
+    // and θ only; the top-k operator also materializes the candidate
+    // scores and the routing set for its fallback completion
+    val rnd = new scala.util.Random(187)
+    val c = (1L to 80L).map { id =>
+      id -> Seq.fill(6 + rnd.nextInt(6))(
+        s"tok${40 / (rnd.nextInt(40) + 1)}").mkString(" ")
+    }.toDF("doc_id", "text")
+    val qs = (200L to 207L).map { id =>
+      id -> (Seq.fill(2)(s"tok${40 / (rnd.nextInt(40) + 1)}") ++
+        Seq.fill(2)(s"tok${13 + rnd.nextInt(28)}")).mkString(" ")
+    }.toDF("query_id", "text").localCheckpoint()
+    val (tf, dfT, st) = indexTriple(c)
+    val statsJobs = jobsStarted(Retrieval.bm25WandStats(tf, qs,
+      "query_id", "text", k = 5, hotDf = 10L,
+      dfStats = Some((dfT, st))).collect())
+    val topkJobs = jobsStarted(Retrieval.bm25TopKWand(tf, qs,
+      "query_id", "text", k = 5, hotDf = 10L,
+      dfStats = Some((dfT, st))).collect())
+    assert((statsJobs, topkJobs) === ((14, 20)))
   }
 
   test("weighted WAND equals the unpruned weighted top-k at every hotDf") {
@@ -2037,4 +2082,131 @@ class RetrievalSpec extends SparkSpec {
       === topkSet(Retrieval.bm25TopK(
         Retrieval.qlScoresWeighted(tf, cfT, st, tw), 5)))
   }
+
+  // ---- property: pruned top-k equals unpruned top-k, bitwise ---------
+
+  /** Zipf-ish vocabulary: a hot head (tok1 in about half the draws)
+    * and a uniform rare tail, so every hotDf splits queries into
+    * rare and hot terms differently.
+    */
+  private val wandWord: Gen[String] = Gen.frequency(
+    3 -> Gen.chooseNum(0, 19).map(u => s"tok${20 / (u + 1)}"),
+    1 -> Gen.chooseNum(1, 30).map(i => s"rare$i"))
+
+  private val wandCaseGen: Gen[WandCase] = for {
+    nDocs <- Gen.chooseNum(4, 24)
+    docs <- Gen.listOfN(nDocs,
+      Gen.chooseNum(1, 8).flatMap(Gen.listOfN(_, wandWord)))
+    nQ <- Gen.chooseNum(1, 4)
+    queries <- Gen.listOfN(nQ, Gen.chooseNum(1, 4).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(9 -> wandWord, 1 -> Gen.const("zzz")))))
+    k <- Gen.chooseNum(1, 6)
+    hotDf <- Gen.chooseNum(0L, nDocs.toLong)
+    withImpact <- Gen.oneOf(true, false)
+  } yield WandCase(docs, queries, k, hotDf, withImpact)
+
+  /** `(queryId, docId, score bits, rank)` of a top-k table. */
+  private def rankedBits(df: DataFrame): Set[(Long, Long, Long, Int)] =
+    df.select(col("queryId"), col("docId"), col("score"),
+      col("rank").cast("int")).collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+      .toSet
+
+  /** The decision table against a plain-Scala replay of the routing:
+    * term counts, the candidate set (docs with ≥ 1 rare query term), θ
+    * as the kth candidate of the unpruned scores (bitwise), a bound
+    * that really dominates every hot-only doc, and `safe` false exactly
+    * for the queries the routing rule sends to the fallback.
+    */
+  private def statsAgree(stats: DataFrame, cse: WandCase,
+                         scores: Map[(Long, Long), Double]): Boolean = {
+    val docWords = cse.docs.zipWithIndex
+      .map { case (ws, i) => (i + 1L) -> ws.toSet }.filter(_._2.nonEmpty)
+    val df = docWords.flatMap(_._2).groupBy(identity)
+      .map { case (w, ds) => w -> ds.size.toLong }
+    val want = cse.queries.zipWithIndex.flatMap { case (ws, i) =>
+      val terms = ws.toSet.filter(df.contains)
+      if (terms.isEmpty) None
+      else {
+        val (rare, hot) = terms.partition(df(_) <= cse.hotDf)
+        val qid = 100L + i
+        val cands = docWords.collect {
+          case (d, dws) if (dws & rare).nonEmpty => d
+        }
+        val hotOnly = docWords.collect {
+          case (d, dws) if (dws & terms).nonEmpty && (dws & rare).isEmpty => d
+        }
+        val theta = cands.map(d => (scores((qid, d)), d))
+          .sortBy { case (sc, d) => (-sc, d) }
+          .lift(cse.k - 1).map(_._1)
+        Some(qid -> (rare.size.toLong, hot.size.toLong,
+          cands.size.toLong, theta, hotOnly.map(d => scores((qid, d)))))
+      }
+    }.toMap
+    val got = stats.collect()
+    got.length == want.size && got.forall { r =>
+      val (nRare, nHot, nCand, theta, hotOnlyScores) = want(r.getLong(0))
+      val ub = if (r.isNullAt(4)) None else Some(r.getDouble(4))
+      val gotTheta = if (r.isNullAt(5)) None else Some(r.getDouble(5))
+      val fellBack = nHot > 0 && (theta.isEmpty || ub.exists(_ >= theta.get))
+      r.getLong(1) == nRare && r.getLong(2) == nHot &&
+        r.getLong(3) == nCand &&
+        gotTheta.map(java.lang.Double.doubleToRawLongBits) ==
+          theta.map(java.lang.Double.doubleToRawLongBits) &&
+        ub.isDefined == (nHot > 0) &&
+        hotOnlyScores.forall(sc => ub.exists(_ >= sc)) &&
+        r.getBoolean(6) == !fellBack
+    }
+  }
+
+  test("property: BM25 and QL WAND equal the unpruned top-k bitwise, " +
+    "and safe is false exactly for the fallback queries") {
+    val prop = Prop.forAllNoShrink(wandCaseGen) { cse =>
+      val c = cse.docs.zipWithIndex
+        .map { case (ws, i) => (i + 1L, ws.mkString(" ")) }
+        .toDF("doc_id", "text")
+      val qs = cse.queries.zipWithIndex
+        .map { case (ws, i) => (100L + i, ws.mkString(" ")) }
+        .toDF("query_id", "text").localCheckpoint()
+      val tf = Retrieval.termFrequencies(c, "doc_id", "text")
+        .localCheckpoint()
+      val imp =
+        if (cse.withImpact) Some(Retrieval.impactStats(tf).localCheckpoint())
+        else None
+      val bm25 = Retrieval.bm25Scores(c, "doc_id", "text", qs,
+        "query_id", "text").localCheckpoint()
+      val ql = Retrieval.qlDirichletScores(tf,
+        Retrieval.cfTable(tf), Retrieval.corpusStats(tf), qs,
+        "query_id", "text").localCheckpoint()
+      def scoreMap(d: DataFrame) = d.collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val bm25Ok = rankedBits(Retrieval.bm25TopKWand(tf, qs, "query_id",
+        "text", cse.k, cse.hotDf, impact = imp)) ===
+        rankedBits(Retrieval.bm25TopK(bm25, cse.k))
+      val qlOk = rankedBits(Retrieval.qlTopKWand(tf, qs, "query_id",
+        "text", cse.k, cse.hotDf, impact = imp)) ===
+        rankedBits(Retrieval.bm25TopK(ql, cse.k))
+      val statsOk = statsAgree(Retrieval.bm25WandStats(tf, qs,
+        "query_id", "text", cse.k, cse.hotDf, impact = imp), cse,
+        scoreMap(bm25)) &&
+        statsAgree(Retrieval.qlWandStats(tf, qs, "query_id", "text",
+          cse.k, cse.hotDf, impact = imp), cse, scoreMap(ql))
+      (bm25Ok && qlOk && statsOk) :| s"bm25=$bm25Ok ql=$qlOk " +
+        s"stats=$statsOk $cse"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
+  }
+}
+
+object RetrievalSpec {
+  /** One random case of the WAND property: documents and queries as
+    * word lists, the cut-off `k`, the hot-term df threshold, and
+    * whether the impact metadata tightens the bound.
+    */
+  final case class WandCase(docs: Seq[Seq[String]],
+                            queries: Seq[Seq[String]],
+                            k: Int, hotDf: Long, withImpact: Boolean)
 }
