@@ -172,15 +172,7 @@ object Bench {
     * the suite.
     */
   private def runSuite(sfDir: String, myShard: Int, myK: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // Warm up the session (JVM JIT, codegen compiler, parquet reader,
     // shuffle machinery) with throwaway jobs so the first measured query
     // isn't charged for session startup.

@@ -1,11 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Builder-local tool (not part of the driver contract): dump
   * `.explain("formatted")` of selected SparkEntry queries to files —
-  * `runMain graft.PlanDump <sfDir> <outDir> <tag> <q1> <q2> ...`
-  * writes `<outDir>/<name>_<tag>.txt` for each query. Constructing a
+  * `runMain graft.PlanDump <sfDir> <outDir> <tag> <p1> <p2> ...`
+  * writes `<outDir>/<name>_<tag>.txt` for each query whose name starts
+  * with one of the prefixes (`q182` or the full `q182_bm25_wand_topk`);
+  * a prefix that matches nothing is logged and skipped. Constructing a
   * gate's DataFrame executes its eager fixture builds, so the dump
   * reflects exactly the plan a bench sample executes.
   */
@@ -13,19 +14,11 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag) = args.take(3)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { n =>
-      val fn = SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query $n"))
+    val selected = SparkEntry.selectEach(names.toSeq,
+      p => System.err.println(s"[plandump] no query matches $p"))
+    selected.foreach { case (n, fn) =>
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Chunking, Dedup, Graph, Jaccard, Knn, Pq, Scrub}
@@ -45,14 +45,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/scale10")
     only = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     spark.range(1000000L).selectExpr("sum(id)").collect()
     // the native-kernel SQL names (graft_word_ngrams, ...) are normally
     // registered by the Dedup entry points; register up front so

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generate the 10× scale-evidence fixture (sf1.0-equivalent) under
@@ -21,7 +20,8 @@ import org.apache.spark.sql.functions._
   * copies perturb one copy-dependent dimension, keeping cosine
   * structure realistic without exact collisions.
   *
-  * `large10.txt`: ten copies of the reference `large.txt` corpus with
+  * `large10.txt`: ten copies of the reference `large.txt` corpus (by
+  * default regenerated by [[Datagen]]; a path may be given instead) with
   * suffixed doc ids and the same word rotation — 1,500 docs / vocab
   * 3,000 for the quadratic Jaccard path, whose pair volume scales ~100×
   * (quadratic operator, expected) and is then df-pruned.
@@ -31,18 +31,22 @@ object ScaleFixture {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/scale10")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    // the reference corpus feeding large10.txt is an argument like the
-    // other inputs (arg 4); on hosts without the reference checkout the
-    // large10 section is skipped rather than failing the whole fixture
-    val refCorpus = args.lift(3).getOrElse("/root/reference/datasets/large.txt")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the corpus feeding large10.txt (arg 4): a given path must exist;
+    // by default Datagen's `large` corpus (the reference large.txt,
+    // byte for byte) is written to a temp file, as Bench does for its
+    // sentinels
+    val refCorpus = args.lift(3) match {
+      case Some(p) =>
+        require(new java.io.File(p).isFile, s"corpus $p not found")
+        p
+      case None =>
+        val f = java.nio.file.Files.createTempFile("graft-large", ".txt")
+        f.toFile.deleteOnExit()
+        java.nio.file.Files.write(f,
+          Datagen.generateAll()("large").getBytes("UTF-8"))
+        f.toString
+    }
+    val spark = SparkEntry.localSession()
 
     // ten copies via one generator: copy 0 keeps the original text; the
     // others re-order the words by a (word, position, copy, doc) hash —
@@ -87,21 +91,17 @@ object ScaleFixture {
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
     // 10x the reference large corpus for the quadratic Jaccard path
-    if (new java.io.File(refCorpus).isFile) {
-      val ref = graft.corpus.Corpus.read(spark, refCorpus)
-      ref
-        .select(explode(sequence(lit(0), lit(copies - 1))).as("copy"),
-          col("docId"), col("text"))
-        .withColumn("__ws", filter(split(col("text"), " "), w => w =!= ""))
-        .select(concat_ws(" ",
-          concat(col("docId"), lit("c"), col("copy")),
-          when(col("copy") === 0, col("text")).otherwise(concat_ws(" ",
-            scrambled(col("__ws"), col("copy"), hash(col("docId")))))
-          ).as("value"))
-        .coalesce(1)
-        .write.mode("overwrite").text(s"$out/large10.txt")
-    } else System.err.println(
-      s"[scalefixture] $refCorpus not found - skipping large10.txt")
+    graft.corpus.Corpus.read(spark, refCorpus)
+      .select(explode(sequence(lit(0), lit(copies - 1))).as("copy"),
+        col("docId"), col("text"))
+      .withColumn("__ws", filter(split(col("text"), " "), w => w =!= ""))
+      .select(concat_ws(" ",
+        concat(col("docId"), lit("c"), col("copy")),
+        when(col("copy") === 0, col("text")).otherwise(concat_ws(" ",
+          scrambled(col("__ws"), col("copy"), hash(col("docId")))))
+        ).as("value"))
+      .coalesce(1)
+      .write.mode("overwrite").text(s"$out/large10.txt")
 
     println(s"[scalefixture] wrote $out")
     spark.stop()

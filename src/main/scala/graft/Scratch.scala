@@ -21,15 +21,7 @@ object Scratch {
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     // r20: cores/partitions from SPARK_GRAFT_CPUS (default 32) so the
     // c8-vs-c32 scaling fixes can be A/B'd isolated, same as Bench
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // per-job wall breakdown (SPARK_GRAFT_SCRATCH_JOBS=1): which eager
     // materialization / sampling / final job a gate's wall goes to
     if (sys.env.get("SPARK_GRAFT_SCRATCH_JOBS").contains("1")) {

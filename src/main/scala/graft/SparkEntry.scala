@@ -45,6 +45,46 @@ object SparkEntry {
       DedupQueries.queries, AnnQueries.queries, TextQueries.queries,
       MmQueries.queries, WebQueries.queries), "query")
 
+  /** The registry entries whose name starts with one of `prefixes` —
+    * every entry when `prefixes` is empty. An unmatched prefix selects
+    * nothing; it is not an error.
+    */
+  def select(prefixes: Seq[String])
+      : Map[String, (SparkSession, String) => DataFrame] =
+    queries.filter { case (name, _) =>
+      prefixes.isEmpty || prefixes.exists(name.startsWith)
+    }
+
+  /** The entries each prefix selects, in prefix order (names sorted within
+    * one prefix), each entry once even when several prefixes match it.
+    * A prefix that matches nothing is passed to `unmatched` and skipped.
+    */
+  def selectEach(prefixes: Seq[String], unmatched: String => Unit)
+      : Seq[(String, (SparkSession, String) => DataFrame)] =
+    prefixes.flatMap { p =>
+      val hits = select(Seq(p)).toSeq.sortBy(_._1)
+      if (hits.isEmpty) unmatched(p)
+      hits
+    }.distinctBy(_._1)
+
+  /** The `local[n]` session the command-line mains run on (Verify,
+    * Bench, PlanDump, Scratch, ScaleBench, ScaleFixture): `n` cores and
+    * `n` shuffle partitions with `n = SPARK_GRAFT_CPUS` (default 32),
+    * UTC session time, parquet nanos read as long, no UI, WARN logs.
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def oracleSql: Map[String, String] =
     composed(Seq(RelationalQueries.oracles, JaccardQueries.oracles,
       DedupQueries.oracles, AnnQueries.oracles, TextQueries.oracles,

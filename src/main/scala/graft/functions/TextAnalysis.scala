@@ -373,8 +373,8 @@ object TextAnalysis {
     * `(docId, pos + d)`, never an inequality join — so the event
     * stream is `tokens × window` rows with map-side-combinable
     * integer counts. The harmonic Σ folds per pair over the ≤ window
-    * PER-DISTANCE counts (d-ascending), so the double is
-    * bit-reproducible at any partitioning WITHOUT collecting events:
+    * PER-DISTANCE counts (a d-keyed [[OrderedFold.sum]]) WITHOUT
+    * collecting events:
     * the only collected list is window-sized. `maxOccFrequency` drops
     * stop words (occurrence count above the cap) before the join —
     * the same hot-word shed as [[pmiCollocations]]'s df cap, opt-in
@@ -407,10 +407,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("__n"))
       .groupBy(col("word_a"), col("word_b"))
       .agg(sum(col("__n")).as("n_events"),
-        aggregate(sort_array(collect_list(struct(col("__d"), col("__n")))),
-          lit(0.0), (a, x) => a +
-            x.getField("__n").cast("double") /
-              x.getField("__d").cast("double")).as("cooc"))
+        OrderedFold.sum(col("__n").cast("double") / col("__d").cast("double"),
+          col("__d"), col("__n")).as("cooc"))
       .filter(col("n_events") >= minCount)
   }
 
@@ -678,10 +676,9 @@ object TextAnalysis {
     * table (shuffled by token); the scored side aggregates to (doc,
     * token) with map-side combine, meets the counts in a token-keyed
     * equi-join, and re-aggregates by doc. The two global scalars ride a
-    * broadcast cross join. Per-doc sums fold over the token-sorted
-    * contribution list so the result is bit-reproducible across
-    * partitionings AND engines (an unordered double sum would round
-    * differently run to run).
+    * broadcast cross join. Per-doc sums are token-keyed
+    * [[OrderedFold.sum]]s, reproducible across partitionings AND
+    * engines.
     */
   def unigramLogProb(model: DataFrame, docs: DataFrame, idCol: String,
                      textCol: String): DataFrame = {
@@ -695,11 +692,7 @@ object TextAnalysis {
             (col("__n_occ") + col("__n_vocab")))).as("__lp"))
     contrib.groupBy(col(idCol))
       .agg(sum(col("__occ")).as("n_tokens"),
-        sort_array(collect_list(struct(col("word"), col("__lp"))))
-          .as("__xs"))
-      .select(col(idCol), col("n_tokens"),
-        aggregate(col("__xs"), lit(0.0),
-          (acc, x) => acc + x.getField("__lp")).as("sum_logprob"))
+        OrderedFold.sum(col("__lp"), col("word")).as("sum_logprob"))
       .withColumn("avg_logprob",
         col("sum_logprob") / col("n_tokens").cast("double"))
   }
@@ -720,9 +713,8 @@ object TextAnalysis {
     * (doc, w1, w2) with map-side combine, meets the counts in
     * pair-/token-keyed equi-joins, and re-aggregates by doc. The two
     * smoothing scalars ride a broadcast cross join, and per-doc sums
-    * fold pair-sorted — bit-reproducible across partitionings and
-    * engines. Documents with fewer than two tokens have no bigrams and
-    * are absent from the output.
+    * are pair-keyed [[OrderedFold.sum]]s. Documents with fewer than
+    * two tokens have no bigrams and are absent from the output.
     */
   def bigramLogProb(model: DataFrame, docs: DataFrame, idCol: String,
                     textCol: String, backoff: Double = 0.4): DataFrame = {
@@ -762,11 +754,7 @@ object TextAnalysis {
         col("__occ"))
     contrib.groupBy(col(idCol))
       .agg(sum(col("__occ")).as("n_bigrams"),
-        sort_array(collect_list(struct(col("w1"), col("w2"), col("__lp"))))
-          .as("__xs"))
-      .select(col(idCol), col("n_bigrams"),
-        aggregate(col("__xs"), lit(0.0),
-          (acc, x) => acc + x.getField("__lp")).as("sum_logprob"))
+        OrderedFold.sum(col("__lp"), col("w1"), col("w2")).as("sum_logprob"))
       .withColumn("avg_logprob",
         col("sum_logprob") / col("n_bigrams").cast("double"))
   }
@@ -901,9 +889,8 @@ object TextAnalysis {
     * Scale shape: ONE tokenizer pass over the scored corpus (not one
     * per model) — the (doc, token) table meets BOTH vocabulary-sized
     * count tables in token-keyed left joins, all four smoothing
-    * scalars ride one broadcast, and the per-doc sum folds
-    * token-sorted for bit-reproducibility ([[unigramLogProb]]'s
-    * convention).
+    * scalars ride one broadcast, and the per-doc sum is a token-keyed
+    * [[OrderedFold.sum]] ([[unigramLogProb]]'s convention).
     */
   def dsirWeights(target: DataFrame, raw: DataFrame, docs: DataFrame,
                   idCol: String, textCol: String): DataFrame = {
@@ -925,11 +912,7 @@ object TextAnalysis {
             (col("__r_occ") + col("__r_vocab"))))).as("__lw"))
     contrib.groupBy(col(idCol))
       .agg(sum(col("__occ")).as("n_tokens"),
-        sort_array(collect_list(struct(col("word"), col("__lw"))))
-          .as("__xs"))
-      .select(col(idCol), col("n_tokens"),
-        aggregate(col("__xs"), lit(0.0),
-          (acc, x) => acc + x.getField("__lw")).as("log_weight"))
+        OrderedFold.sum(col("__lw"), col("word")).as("log_weight"))
       .withColumn("avg_log_weight",
         col("log_weight") / col("n_tokens").cast("double"))
   }
@@ -955,10 +938,8 @@ object TextAnalysis {
     posts
       .join(vocab.select(col("token"), col("token_id")), Seq("token"), "left")
       .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__pos"),
-        coalesce(col("token_id"), lit(oovId)).as("__tid")))).as("__xs"))
-      .select(col(idCol),
-        transform(col("__xs"), x => x.getField("__tid")).as("token_ids"))
+      .agg(OrderedFold.values(coalesce(col("token_id"), lit(oovId)),
+        col("__pos")).as("token_ids"))
       .withColumn("n_tokens", size(col("token_ids")).cast("long"))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, OrderedFold}
 
 /** Label classification over embedding columns — the label-propagation /
   * weak-supervision step of an embedding-curated corpus (predict labels
@@ -108,9 +108,7 @@ object Classify {
           .groupBy(col("__lab"), col("__i"))
           .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
           .groupBy(col("__lab"))
-          .agg(transform(
-            sort_array(collect_list(struct(col("__i"), col("__s")))),
-            s => s.getField("__s")).as("__sum"),
+          .agg(OrderedFold.values(col("__s"), col("__i")).as("__sum"),
             max(col("__n")).as("n"))
       }
     summed.select(col("__lab").as(labelCol),

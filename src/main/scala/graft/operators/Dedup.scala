@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
+import graft.functions.{GraftFunctions, HashFunctions, OrderedFold, TextFunctions}
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -307,9 +307,7 @@ object Dedup {
       // the band key is deterministic. The key is the minhash array itself
       // (arrays are orderable join keys in Spark) — no serialization
       // format to keep portable.
-      .agg(transform(
-        sort_array(collect_list(struct(col("perm"), col("min_hash")))),
-        s => s.getField("min_hash")).as("band_key"))
+      .agg(OrderedFold.values(col("min_hash"), col("perm")).as("band_key"))
   }
 
   /** Incremental near-dup detection: which documents of a NEW batch

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.OrderedFold
+
 /** Federated / sharded-search resource selection — CORI collection
   * ranking (Callan, Lu & Croft SIGIR'95): given a corpus partitioned
   * into shards, rank the SHARDS per query so a distributed search
@@ -33,8 +35,8 @@ import org.apache.spark.sql.expressions.Window
   * [[Retrieval.termFrequencies]] layout and merge ADDITIVELY under
   * ingest (per-shard df adds like [[Retrieval.dfTable]], cw is an
   * exact BIGINT sum), so shard stats ride the same compaction
-  * cadence as the indexes they describe. Every Σ folds word-sorted
-  * (the repo convention), so scores replay bitwise.
+  * cadence as the indexes they describe. Every Σ is a word-keyed
+  * [[graft.functions.OrderedFold]], so scores replay bitwise.
   */
 object Federation {
 
@@ -159,9 +161,7 @@ object Federation {
       .orderBy(col("score").desc, col("shard").asc)
     cells
       .groupBy(col("queryId"), col("shard"))
-      .agg(aggregate(sort_array(collect_list(struct(col("word"),
-        col("__p")))),
-        lit(0.0), (a, x) => a + x.getField("__p")).as("__s"))
+      .agg(OrderedFold.sum(col("__p"), col("word")).as("__s"))
       .join(nq, Seq("queryId"))
       .select(col("queryId"), col("shard"),
         (col("__s") / col("__nq").cast("double")).as("score"))

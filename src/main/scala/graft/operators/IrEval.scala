@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.OrderedFold
+
 /** Ranking-quality evaluation — the trec_eval battery re-expressed
   * relationally, the lexical/hybrid mirror of [[Knn.recallAtK]]: given
   * a RUN (a ranking a retrieval operator produced) and graded QRELS
@@ -16,8 +18,8 @@ import org.apache.spark.sql.expressions.Window
   * Scale shape: runs and qrels are RESULT-sized (queries × k and
   * queries × judged-docs) — every join, window, and fold here is over
   * result-set-sized tables, so evaluation cost is independent of the
-  * corpus. The folds are rank-/position-sorted (the repo's
-  * bit-reproducibility convention), so the metric doubles replay
+  * corpus. The folds are rank-/position-keyed
+  * [[graft.functions.OrderedFold]]s, so the metric doubles replay
   * exactly at any partitioning.
   */
 object IrEval {
@@ -50,13 +52,13 @@ object IrEval {
     *     retrieved docs gain 0 (grade coalesces to 0) — the standard
     *     incomplete-judgments treatment.
     *
-    * Every Σ folds sorted (rank order for DCG/AP, ideal position for
-    * IDCG); `log2` is written `ln(x)/ln(2)` so the oracle replays the
-    * identical tree. `qrels` is consumed 3× (universe, hit join, ideal
-    * ranking) and `run` once — pass MATERIALIZED result-sized tables
-    * (a `localCheckpoint()`ed top-k), never lazy scoring chains, or
-    * the chain re-runs per consumer (the measured linearFuse bug
-    * class).
+    * Every Σ is an [[OrderedFold.sum]] (rank-keyed for DCG/AP, ideal
+    * position for IDCG); `log2` is written `ln(x)/ln(2)` so the oracle
+    * replays the identical tree. `qrels` is consumed 3× (universe, hit
+    * join, ideal ranking) and `run` once — pass MATERIALIZED
+    * result-sized tables (a `localCheckpoint()`ed top-k), never lazy
+    * scoring chains, or the chain re-runs per consumer (the measured
+    * linearFuse bug class).
     */
   def rankingMetrics(run: DataFrame, qrels: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"k > 0: $k")
@@ -91,10 +93,8 @@ object IrEval {
         when(col("grade") > 0, col("rank")).as("__relrank"))
     val perQ = contrib.groupBy("queryId").agg(
       sum(when(col("grade") > 0, 1L).otherwise(0L)).as("n_ret_rel"),
-      aggregate(sort_array(collect_list(struct(col("rank"), col("__prec")))),
-        lit(0.0), (a, x) => a + x.getField("__prec")).as("__psum"),
-      aggregate(sort_array(collect_list(struct(col("rank"), col("__dcg")))),
-        lit(0.0), (a, x) => a + x.getField("__dcg")).as("__dcgs"),
+      OrderedFold.sum(col("__prec"), col("rank")).as("__psum"),
+      OrderedFold.sum(col("__dcg"), col("rank")).as("__dcgs"),
       min(col("__relrank")).as("__frr"))
     // ideal DCG: the query's own judged grades, best-first (grade
     // desc, docId ties — the VALUE is tie-invariant, the fold order
@@ -108,8 +108,7 @@ object IrEval {
           (log((col("__i") + lit(1)).cast("double")) / log(lit(2.0))))
           .as("__ic"))
       .groupBy("queryId")
-      .agg(aggregate(sort_array(collect_list(struct(col("__i"), col("__ic")))),
-        lit(0.0), (a, x) => a + x.getField("__ic")).as("__idcg"))
+      .agg(OrderedFold.sum(col("__ic"), col("__i")).as("__idcg"))
     nRel
       .join(perQ, Seq("queryId"), "left_outer")
       .join(idcg, Seq("queryId"), "left_outer")
@@ -137,8 +136,8 @@ object IrEval {
     * against their chosen critical value. Queries present in only one
     * table drop (paired means paired); empty intersection → empty
     * output (the [[meanRankingMetrics]] convention). Folds are
-    * queryId-sorted two-pass (mean, then Σ(d−mean)²), so the
-    * statistics replay bitwise.
+    * queryId-keyed [[OrderedFold.sum]]s in two passes (mean, then
+    * Σ(d−mean)²).
     */
   def pairedComparison(metricsA: DataFrame,
                        metricsB: DataFrame): DataFrame = {
@@ -160,10 +159,7 @@ object IrEval {
       .localCheckpoint() // queries-sized, consumed 2x (mean, variance)
     val means = d.groupBy().agg(
       count(lit(1)).as("__n"),
-      ms.map(c => (aggregate(
-        sort_array(collect_list(struct(col("queryId"),
-          col(s"__d_$c").as("__v")))),
-        lit(0.0), (acc, x) => acc + x.getField("__v")) /
+      ms.map(c => (OrderedFold.sum(col(s"__d_$c"), col("queryId")) /
         count(lit(1)).cast("double")).as(s"__m_$c")): _*)
     d.crossJoin(broadcast(means))
       .groupBy()
@@ -171,10 +167,7 @@ object IrEval {
         count(lit(1)).as("n_queries"),
         ms.flatMap { c =>
           val dev = col(s"__d_$c") - col(s"__m_$c")
-          val ssq = aggregate(
-            sort_array(collect_list(struct(col("queryId"),
-              (dev * dev).as("__v")))),
-            lit(0.0), (acc, x) => acc + x.getField("__v"))
+          val ssq = OrderedFold.sum(dev * dev, col("queryId"))
           val n = count(lit(1)).cast("double")
           Seq(max(col(s"__m_$c")).as(s"d_$c"),
             when(count(lit(1)) > 1 && ssq > 0,
@@ -249,15 +242,13 @@ object IrEval {
   /** Macro averages of a [[rankingMetrics]] table — ONE row
     * `(n_queries, mean_p_at_k, mean_recall_at_k, mrr, map, mean_ndcg)`:
     * every query weighs equally (the trec_eval "all" line; `rr`
-    * averaged IS MRR, `ap` averaged IS MAP). Folds are queryId-sorted
-    * so the means replay bitwise; the input is per-query (result-
+    * averaged IS MRR, `ap` averaged IS MAP). Folds are queryId-keyed
+    * [[OrderedFold.sum]]s; the input is per-query (result-
     * sized), so this is driver-cheap at any corpus scale.
     */
   def meanRankingMetrics(metrics: DataFrame): DataFrame = {
     def meanOf(c: String) =
-      (aggregate(
-        sort_array(collect_list(struct(col("queryId"), col(c).as("__v")))),
-        lit(0.0), (a, x) => a + x.getField("__v")) /
+      (OrderedFold.sum(col(c), col("queryId")) /
         count(lit(1)).cast("double")).as(s"mean_$c")
     metrics.groupBy().agg(
       count(lit(1)).as("n_queries"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{OrderedFold, TextFunctions}
 
 /** All-pairs Jaccard similarity over a document corpus — the reference's
   * entire query surface (`DocumentSimilarityDriver.java:20-94`), re-expressed
@@ -212,14 +212,19 @@ object Jaccard {
   def dfOrderedSets(tokenizedDocs: DataFrame): DataFrame = {
     val posts = postings(tokenizedDocs)
     val df = posts.groupBy("word").agg(count(lit(1)).as("df"))
-    posts.join(df, "word")
-      .groupBy("docId")
-      .agg(sort_array(collect_list(struct(col("df"), col("word")))).as("dw"))
-      .select(
-        col("docId"),
-        size(col("dw")).cast("long").as("sz"),
-        transform(col("dw"), x => x.getField("word")).as("sorted_tokens"))
+    dfSortedSets(posts.join(df, "word"))
   }
+
+  /** The [[dfOrderedSets]] tail over `(docId, word, df)` rows — shared
+    * with the ingest and deletion compactions, so a re-ranked index
+    * row is built exactly as a fresh one: each doc's words in
+    * ascending `(df, word)` order ([[OrderedFold.values]]).
+    */
+  private def dfSortedSets(wordDf: DataFrame): DataFrame =
+    wordDf.groupBy("docId")
+      .agg(OrderedFold.values(col("word"), col("df")).as("sorted_tokens"))
+      .select(col("docId"), size(col("sorted_tokens")).cast("long").as("sz"),
+        col("sorted_tokens"))
 
   /** Minimum intersection size for `J(A,B) >= t`:
     * `ceil(t/(1+t) * (|A|+|B|))` (Xiao et al. VLDB'08 eq. 2). The 1e-9
@@ -517,11 +522,10 @@ object Jaccard {
       .filter(col("word").isNotNull)
       .join(dfTab, Seq("word"), "left")
       .groupBy("docId")
-      .agg(sort_array(collect_list(struct(
-        coalesce(col("df"), lit(0L)).as("df"), col("word")))).as("dw"))
-      .select(col("docId"),
-        size(col("dw")).cast("long").as("size"),
-        transform(col("dw"), x => x.getField("word")).as("arrToks"))
+      .agg(OrderedFold.values(col("word"), coalesce(col("df"), lit(0L)))
+        .as("arrToks"))
+      .select(col("docId"), size(col("arrToks")).cast("long").as("size"),
+        col("arrToks"))
     val prefLen = (col("size") -
       ceil(lit(threshold) * col("size") - lit(1e-9)) + lit(1)).cast("int")
     // the probe is batch-sized — tiny — while the candidate join fans
@@ -673,14 +677,7 @@ object Jaccard {
       .select(col("matchId").as("docId"), col("word"))
       .unionByName(batchPosts)
     // the dfOrderedSets tail, over the touched fraction only
-    val reranked = touchedPosts
-      .join(dfMerged, Seq("word"))
-      .groupBy("docId")
-      .agg(sort_array(collect_list(struct(col("df"), col("word")))).as("dw"))
-      .select(
-        col("docId"),
-        size(col("dw")).cast("long").as("sz"),
-        transform(col("dw"), x => x.getField("word")).as("sorted_tokens"))
+    val reranked = dfSortedSets(touchedPosts.join(dfMerged, Seq("word")))
     untouched.unionByName(reranked)
   }
 
@@ -753,17 +750,11 @@ object Jaccard {
       .join(affected, Seq("docId"), "left_anti")
     // the dfOrderedSets tail, over the affected survivors only (their
     // token SETS are unchanged by deletion — only the ranks moved)
-    val reranked = posts
+    val reranked = dfSortedSets(posts
       .join(affected.withColumnRenamed("docId", "matchId"),
         Seq("matchId"), "left_semi")
       .select(col("matchId").as("docId"), col("word"))
-      .join(dfMerged, Seq("word"))
-      .groupBy("docId")
-      .agg(sort_array(collect_list(struct(col("df"), col("word")))).as("dw"))
-      .select(
-        col("docId"),
-        size(col("dw")).cast("long").as("sz"),
-        transform(col("dw"), x => x.getField("word")).as("sorted_tokens"))
+      .join(dfMerged, Seq("word")))
     untouched.unionByName(reranked)
   }
 

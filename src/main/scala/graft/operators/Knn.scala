@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.functions.{GraftFunctions, HashFunctions}
+import graft.functions.{GraftFunctions, HashFunctions, OrderedFold}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -171,10 +171,9 @@ object Knn {
     * keep their previous centroid. Returns the refined (cid, cvec)
     * table — drop-in input for `ivfAssign`/`ivfTopK`.
     *
-    * The per-component mean is an ORDERED left fold (values sorted by
-    * id) over float→double casts, then one double→float IEEE rounding:
-    * bit-reproducible across engines and partitionings, which is what
-    * lets a refined-centroid assignment gate against a SQL oracle.
+    * The per-component mean is an id-keyed [[OrderedFold.sum]] over
+    * float→double casts, then one double→float IEEE rounding, which is
+    * what lets a refined-centroid assignment gate against a SQL oracle.
     * The fold materializes each (cell, component)'s value list in one
     * task — fine for centroid refinement (list length = cell size); at
     * extreme cell sizes swap the fold for a plain `avg` and accept
@@ -201,15 +200,10 @@ object Knn {
           posexplode_outer(col(vecCol)).as(Seq("pos", "x")))
       val means = comp
         .groupBy(col("cid"), col("pos"))
-        .agg(count(lit(1)).as("__n"),
-          sort_array(collect_list(struct(col("__id"), col("x")))).as("__xs"))
-        .select(col("cid"), col("pos"),
-          (aggregate(col("__xs"), lit(0.0),
-            (acc, s) => acc + s.getField("x").cast("double")) / col("__n"))
-            .cast("float").as("m"))
+        .agg((OrderedFold.sum(col("x").cast("double"), col("__id")) /
+          count(lit(1))).cast("float").as("m"))
         .groupBy(col("cid"))
-        .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("__mvec"))
+        .agg(OrderedFold.values(col("m"), col("pos")).as("__mvec"))
       // materialize each iteration's (tiny) centroid table: `cents` is
       // referenced twice per iteration (ivfAssign + the fallback join),
       // so an unmaterialized chain doubles per round — 2^iters plan

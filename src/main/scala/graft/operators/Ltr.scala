@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OrderedFold
+
 /** Learning-to-rank over the [[Retrieval.ltrFeatures]] table — the
   * loop that turns the scorer stack into a TRAINED ranker and back:
   * features → pointwise or pairwise training → linear re-scoring →
@@ -66,29 +68,11 @@ object Ltr {
     */
   private val FoldBuckets = 1024L
 
-  /** Sorted left fold keyed by (queryId, docId) — the INNER level of
-    * the bit-reproducible gradient reduction (QualityLr's orderedFold
-    * over the pair key), run per hash bucket.
-    */
-  private def pairFold(value: Column): Column =
-    aggregate(
-      transform(sort_array(collect_list(struct(col("queryId"),
-        col("docId"), value.as("__v")))), s => s.getField("__v")),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** The OUTER level: a bucket-id-sorted fold of the ≤ [[FoldBuckets]]
-    * partial sums.
-    */
-  private def bucketFold(name: String): Column =
-    aggregate(
-      transform(sort_array(collect_list(struct(col("__fb"),
-        col(name).as("__v")))), s => s.getField("__v")),
-      lit(0.0), (acc, x) => acc + x)
-
   /** TWO-LEVEL bit-reproducible sum of each named expression over the
-    * training table: pair-key-sorted partial folds per deterministic
-    * hash bucket (`xxhash64(queryId, docId) mod` [[FoldBuckets]]),
-    * then one bucket-sorted fold of the partials. Bucketing spreads
+    * training table: `(queryId, docId)`-keyed [[OrderedFold.sum]]
+    * partials per deterministic hash bucket
+    * (`xxhash64(queryId, docId) mod` [[FoldBuckets]]), then one
+    * bucket-keyed [[OrderedFold.sum]] of the partials. Bucketing spreads
     * the reduction across the cluster — no single task ever
     * collect_lists the whole table (the pre-r18 single global fold
     * concentrated every gradient pass into one executor array) —
@@ -97,15 +81,16 @@ object Ltr {
     * (LtrSpec pins the determinism).
     */
   private def foldAll(df: DataFrame, exprs: Seq[(String, Column)]): Row = {
-    val partials = df
-      .withColumn("__fb",
+    val partial = exprs.map { case (n, c) =>
+      OrderedFold.sum(c, col("queryId"), col("docId")).as(n) }
+    val total = exprs.map { case (n, _) =>
+      OrderedFold.sum(col(n), col("__fb")).as(n) }
+    df.withColumn("__fb",
         pmod(xxhash64(col("queryId"), col("docId")), lit(FoldBuckets)))
       .groupBy(col("__fb"))
-      .agg(pairFold(exprs.head._2).as(exprs.head._1),
-        exprs.tail.map { case (n, c) => pairFold(c).as(n) }: _*)
-    partials.groupBy()
-      .agg(bucketFold(exprs.head._1).as(exprs.head._1),
-        exprs.tail.map { case (n, _) => bucketFold(n).as(n) }: _*)
+      .agg(partial.head, partial.tail: _*)
+      .groupBy()
+      .agg(total.head, total.tail: _*)
       .collect()(0)
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OrderedFold
+
 /** Principal-component analysis for embedding columns.
   *
   * The published embedding-curation pipelines (SemDeDup, DSIR's
@@ -89,14 +91,13 @@ object Pca {
           .as("cov"))
   }
 
-  /** Left fold of id-sorted `(key, array)` structs into one element-wise
-    * sum array, first element as the seed (DuckDB `list_reduce`
-    * semantics, so the oracle's fold tree is literally the same).
+  /** Left fold of the key-ordered arrays ([[OrderedFold.values]]) into
+    * one element-wise sum array, first element as the seed (DuckDB
+    * `list_reduce` semantics, so the oracle's fold tree is literally
+    * the same).
     */
   private[operators] def orderedArraySum(key: Column, arr: Column): Column =
-    aggregate(
-      transform(sort_array(collect_list(struct(key.as("__k"),
-        arr.as("__a")))), s => s.getField("__a")),
+    aggregate(OrderedFold.values(arr, key),
       lit(null).cast("array<double>"),
       (acc, x) => when(acc.isNull, x)
         .otherwise(zip_with(acc, x, (a, b) => a + b)))
@@ -245,7 +246,5 @@ object Pca {
         (dsum(zip_with(col(vecCol), col("basis"),
           (x, b) => x.cast("double") * b)) - col("offset")).as("__coord"))
       .groupBy(col(idCol))
-      .agg(transform(
-        sort_array(collect_list(struct(col("component"), col("__coord")))),
-        s => s.getField("__coord")).as("proj"))
+      .agg(OrderedFold.values(col("__coord"), col("component")).as("proj"))
 }

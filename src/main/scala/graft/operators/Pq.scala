@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OrderedFold
+
 /** Product quantization for embedding columns (Jégou, Douze, Schmid,
   * "Product Quantization for Nearest Neighbor Search", TPAMI 2011).
   *
@@ -100,9 +102,7 @@ object Pq {
     val keys = keyCols.map(col)
     subCodes(embs, keyCols, vecCol, codebooks)
       .groupBy(keys: _*)
-      .agg(transform(
-        sort_array(collect_list(struct(col("sub"), col("code")))),
-        s => s.getField("code")).as("codes"))
+      .agg(OrderedFold.values(col("code"), col("sub")).as("codes"))
   }
 
   /** PQ encoding: `(id, codes)` with `codes(s)` the winning codebook
@@ -244,7 +244,7 @@ object Pq {
   /** Lloyd refinement per subspace: `iters` rounds of (encode) →
     * (replace each codebook entry with the element-wise mean of its
     * assigned subvectors). Empty entries keep their previous value.
-    * Means fold id-sorted (bit-reproducible, the `Knn.ivfRefine`
+    * Means are id-keyed [[OrderedFold.sum]]s (the `Knn.ivfRefine`
     * contract) and stay in double — no float roundtrip. Each round
     * shuffles by (sub, cid, pos) then (sub, cid) — bounded key spaces.
     */
@@ -266,16 +266,11 @@ object Pq {
         .filter(col("x").isNotNull)
       val means = comp
         .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(count(lit(1)).as("__n"),
-          sort_array(collect_list(struct(col("__id"), col("x"))))
-            .as("__xs"))
-        .select(col("sub"), col("code").as("cid"), col("pos"),
-          (aggregate(col("__xs"), lit(0.0),
-            (acc, s) => acc + s.getField("x")) / col("__n")).as("m"))
+        .agg((OrderedFold.sum(col("x"), col("__id")) / count(lit(1)))
+          .as("m"))
+        .select(col("sub"), col("code").as("cid"), col("pos"), col("m"))
         .groupBy(col("sub"), col("cid"))
-        .agg(transform(
-          sort_array(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("__mvec"))
+        .agg(OrderedFold.values(col("m"), col("pos")).as("__mvec"))
       // release only checkpoints created inside this call — iteration
       // 1's `prev` is the caller's codebook, possibly a live checkpoint
       // from a previous refine (the ivfRefine contract)
@@ -315,18 +310,9 @@ object Pq {
     val scored = contrib
       .join(broadcast(dt), Seq("sub", "cid"))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(adcSum.as("adc"))
+      .agg(OrderedFold.sum(col("__d2"), col("sub")).as("adc"))
     rankAdc(scored, k)
   }
-
-  /** Subspace-ordered ADC fold: distances sum in `sub` order regardless
-    * of partitioning, so the score is bit-reproducible and the DuckDB
-    * oracle replays the identical tree.
-    */
-  private def adcSum: Column = aggregate(
-    transform(sort_array(collect_list(struct(col("sub"),
-      col("__d2").as("d")))), s => s.getField("d")),
-    lit(0.0), (acc, x) => acc + x)
 
   private def rankAdc(scored: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -386,7 +372,7 @@ object Pq {
         posexplode(col("codes")).as(Seq("sub", "cid")))
       .join(broadcast(dt), Seq("query_id", "sub", "cid"))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(adcSum.as("adc"))
+      .agg(OrderedFold.sum(col("__d2"), col("sub")).as("adc"))
     rankAdc(scored, k)
   }
 
@@ -436,7 +422,8 @@ object Pq {
         posexplode(col("codes")).as(Seq("sub", "cid")))
       .join(broadcast(dt), Seq("query_id", "sub", "cid"))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(adcSum.as("adc"), min(col("probe_rank")).as("__pr"))
+      .agg(OrderedFold.sum(col("__d2"), col("sub")).as("adc"),
+        min(col("probe_rank")).as("__pr"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("nprobe"), col("query_id"))
       .orderBy(col("adc"), col("neighbor_id"))
@@ -507,7 +494,7 @@ object Pq {
         posexplode(col("codes")).as(Seq("sub", "cid")))
       .join(broadcast(dt), Seq("query_id", "cell", "sub", "cid"))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(adcSum.as("adc"))
+      .agg(OrderedFold.sum(col("__d2"), col("sub")).as("adc"))
     rankAdc(scored, k)
   }
 
@@ -541,7 +528,8 @@ object Pq {
         col("probe_rank"), posexplode(col("codes")).as(Seq("sub", "cid")))
       .join(broadcast(dt), Seq("query_id", "cell", "sub", "cid"))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(adcSum.as("adc"), min(col("probe_rank")).as("__pr"))
+      .agg(OrderedFold.sum(col("__d2"), col("sub")).as("adc"),
+        min(col("probe_rank")).as("__pr"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("nprobe"), col("query_id"))
       .orderBy(col("adc"), col("neighbor_id"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HashFunctions, TextFunctions}
+import graft.functions.{HashFunctions, OrderedFold, TextFunctions}
 
 /** Quality classifier: logistic regression over hashed bag-of-words
   * features (the hashing trick), trained curated-vs-crawl.
@@ -41,14 +41,12 @@ object QualityLr {
   /** dim weights (bucket-indexed) + intercept. Driver-sized by design. */
   case class LrModel(weights: Array[Double], bias: Double)
 
-  /** Left fold of key-sorted values seeded with the FIRST element —
-    * DuckDB `list_reduce` semantics, so the oracle's fold tree is
-    * literally the same (the q91 sum contract).
+  /** Left fold of the [[OrderedFold.values]] seeded with the FIRST
+    * element — DuckDB `list_reduce` semantics, so the oracle's fold
+    * tree is literally the same (the q91 sum contract).
     */
   private def orderedFold(key: Column, value: Column): Column =
-    aggregate(
-      transform(sort_array(collect_list(struct(key.as("__k"),
-        value.as("__v")))), s => s.getField("__v")),
+    aggregate(OrderedFold.values(value, key),
       lit(null).cast("double"),
       (acc, x) => when(acc.isNull, x).otherwise(acc + x))
 

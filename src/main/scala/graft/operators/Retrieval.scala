@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.functions.TextFunctions
+import graft.functions.{OrderedFold, TextFunctions}
 
 /** The lexical-retrieval stack — the sparse companion to the ANN
   * operators, and the scorer family behind retrieval-shaped curation
@@ -46,9 +46,9 @@ import graft.functions.TextFunctions
   *     QUERY-TERM table — query-batch-sized, so the one posting join
   *     carries everything it needs and AQE broadcasts it;
   *   - per-(query, doc) scores aggregate only over MATCHING postings;
-  *     the fold is term-sorted (the DSIR convention) so the double sum
-  *     is bit-reproducible at any partitioning and the DuckDB oracle
-  *     replays the identical tree.
+  *     the fold is a word-keyed [[graft.functions.OrderedFold]] (the
+  *     DSIR convention) and the DuckDB oracle replays the identical
+  *     tree.
   */
 object Retrieval {
 
@@ -450,17 +450,13 @@ object Retrieval {
     Bm25fParts(scoredQ, fContrib, favg, params, qTermsIdf)
   }
 
-  /** Pseudo term frequency: field-sorted fold per (doc, word) of the
-    * per-row [[bm25fParts]] contributions.
+  /** Pseudo term frequency: field-keyed [[OrderedFold.sum]] per
+    * (doc, word) of the per-row [[bm25fParts]] contributions.
     */
   private def foldPtf(fContrib: DataFrame, bitExact: Boolean): DataFrame =
     if (bitExact)
       fContrib.groupBy(col("docId"), col("word"))
-        .agg(sort_array(collect_list(struct(col("field"), col("__ptf"))))
-          .as("__xs"))
-        .select(col("docId"), col("word"),
-          aggregate(col("__xs"), lit(0.0),
-            (a, x) => a + x.getField("__ptf")).as("__tf"))
+        .agg(OrderedFold.sum(col("__ptf"), col("field")).as("__tf"))
     else
       fContrib.groupBy(col("docId"), col("word"))
         .agg(sum(col("__ptf")).as("__tf"))
@@ -712,7 +708,7 @@ object Retrieval {
         scoreFold(contrib, bitExact, shuffleFirst)
       def hotUb(hot: DataFrame): DataFrame = {
         // the per-word pseudo-tf ceiling from the fielded metadata:
-        // field-sorted fold of the per-field extremal terms
+        // field-keyed OrderedFold of the per-field extremal terms
         val tfub = impactF.map { imp =>
           imp.join(broadcast(p.params), Seq("field"))
             .join(broadcast(p.favg), Seq("field"))
@@ -722,9 +718,7 @@ object Retrieval {
                   col("__b") * col("min_fl").cast("double") /
                     col("__avgfl"))).as("__fub"))
             .groupBy("word")
-            .agg(aggregate(
-              sort_array(collect_list(struct(col("field"), col("__fub")))),
-              lit(0.0), (a, x) => a + x.getField("__fub")).as("__tfub"))
+            .agg(OrderedFold.sum(col("__fub"), col("field")).as("__tfub"))
         }
         val hotCeil = tfub match {
           case None =>
@@ -737,9 +731,7 @@ object Retrieval {
                     (lit(k1) + col("__tfub"))).as("__hc"))
         }
         hotCeil.groupBy("queryId")
-          .agg((aggregate(
-            sort_array(collect_list(struct(col("word"), col("__hc")))),
-            lit(0.0), (a, x) => a + x.getField("__hc")) *
+          .agg((OrderedFold.sum(col("__hc"), col("word")) *
             lit(1.0 + 1e-9)).as("__ub"))
       }
     }
@@ -822,13 +814,7 @@ object Retrieval {
     val qTerms = termWeights.join(cfTab, Seq("word"))
       .crossJoin(broadcast(
         stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    // the weighted |q|: word-sorted fold, bit-reproducible like the
-    // contribution folds
-    val qn = qTerms.groupBy("queryId")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("word"), col("weight")))),
-        lit(0.0), (a, x) => a + x.getField("weight")).as("__nq"))
-    val enriched = qTerms.join(qn, Seq("queryId"))
+    val enriched = qTerms.join(weightedQueryMass(qTerms), Seq("queryId"))
     // query-batch-sized build side by contract (the postingContribs
     // broadcast rationale)
     qlScoreFold(tf.join(broadcast(enriched), Seq("word"))
@@ -837,6 +823,15 @@ object Retrieval {
         col("dl"), col("__nq")),
       mu, bitExact)
   }
+
+  /** The weighted |q| `(queryId, __nq)`: `Σ_present weight` per query
+    * as an [[OrderedFold]] over the words — one definition for
+    * [[qlScoresWeighted]], [[qlScoresWeightedReusing]] and the weighted
+    * QL WAND table, so their normalizers are the same bits.
+    */
+  private def weightedQueryMass(qTerms: DataFrame): DataFrame =
+    qTerms.groupBy("queryId")
+      .agg(OrderedFold.sum(col("weight"), col("word")).as("__nq"))
 
   /** Collapse QL `(queryId, docId, word, __c, dl, __nq)` matching
     * contributions to scores — the [[scoreFold]] convention for the
@@ -861,13 +856,8 @@ object Retrieval {
           joined.repartition(col("queryId"), col("docId"))
         else joined)
           .groupBy(col("queryId"), col("docId"))
-          .agg(sort_array(collect_list(struct(col("word"), col("__c"))))
-            .as("__cs"),
+          .agg(OrderedFold.sum(col("__c"), col("word")).as("__s"),
             max(col("dl")).as("__dl"), max(col("__nq")).as("__n"))
-          .select(col("queryId"), col("docId"),
-            aggregate(col("__cs"), lit(0.0),
-              (a, x) => a + x.getField("__c")).as("__s"),
-            col("__dl"), col("__n"))
       else
         joined
           .groupBy(col("queryId"), col("docId"))
@@ -960,9 +950,9 @@ object Retrieval {
     * Scale shape: the feedback set is result-sized (queries × k), its
     * term pull is ONE docId join against the tf table (the forward
     * layout again), and everything after is feedback-term-table-sized.
-    * Every Σ is a sorted fold (docId order for the doc sums, word
-    * order for the truncated normalizer), so the weights are
-    * bit-reproducible and the oracle replays the identical trees.
+    * Every Σ is an [[OrderedFold.sum]] (docId-keyed for the doc sums,
+    * word-keyed for the truncated normalizer), and the oracle replays
+    * the identical trees.
     * Original-query terms ABSENT from the corpus keep their λ/|Q|
     * mass (they contribute zero downstream, but the weight table is
     * the contract). `tf` is consumed by the first-pass scoring AND
@@ -1050,12 +1040,10 @@ object Retrieval {
       : DataFrame = {
     require(m > 0, s"m > 0: $m")
     require(lambda >= 0 && lambda <= 1, s"lambda in [0,1]: $lambda")
-    // per-query score normalizer, docId-sorted fold
+    // per-query score normalizer (docId-keyed OrderedFold)
     val z = topk.groupBy("queryId")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("docId"), col("score")))),
-        lit(0.0), (a, x) => a + x.getField("score")).as("__z"))
-    // feedback term mass: Σ_d (tf/dl)·(score/z), docId-sorted fold.
+      .agg(OrderedFold.sum(col("score"), col("docId")).as("__z"))
+    // feedback term mass: Σ_d (tf/dl)·(score/z), docId-keyed.
     // topk is result-sized by construction — the explicit broadcast
     // side of the forward pull (the postingContribs rationale)
     val fb = broadcast(topk).join(tf, Seq("docId"))
@@ -1064,9 +1052,7 @@ object Retrieval {
         ((col("tf").cast("double") / col("dl").cast("double")) *
           (col("score") / col("__z"))).as("__p"))
       .groupBy(col("queryId"), col("word"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("docId"), col("__p")))),
-        lit(0.0), (a, x) => a + x.getField("__p")).as("__pw"))
+      .agg(OrderedFold.sum(col("__p"), col("docId")).as("__pw"))
     // optional expansion-candidate df cap (feedback-vocab-sized
     // semi-join; the truncated renormalization below then spreads the
     // mass over the kept informative terms)
@@ -1098,8 +1084,8 @@ object Retrieval {
     * matches the BM25 RM3: the feedback set is result-sized, its
     * term pull one docId join, everything after
     * feedback-vocabulary-sized; the exp/softmax is result-sized
-    * arithmetic with docId-sorted folds (bit-reproducible and
-    * oracle-replayable).
+    * arithmetic with docId-keyed [[OrderedFold.sum]]s
+    * (oracle-replayable).
     */
   def rm3ExpandedTermsQl(tf: DataFrame, cfTab: DataFrame,
                          stats: DataFrame, dfTab: DataFrame,
@@ -1152,9 +1138,7 @@ object Retrieval {
       .select(col("queryId"), col("docId"),
         exp(col("score") - col("__mx")).as("__e"))
     val z = ex.groupBy("queryId")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("docId"), col("__e")))),
-        lit(0.0), (a, x) => a + x.getField("__e")).as("__z"))
+      .agg(OrderedFold.sum(col("__e"), col("docId")).as("__z"))
     // ex ⋈ z is result-sized — the explicit broadcast side of the
     // forward pull (the postingContribs rationale)
     val fb = broadcast(ex.join(z, Seq("queryId")))
@@ -1163,9 +1147,7 @@ object Retrieval {
         ((col("tf").cast("double") / col("dl").cast("double")) *
           (col("__e") / col("__z"))).as("__p"))
       .groupBy(col("queryId"), col("word"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("docId"), col("__p")))),
-        lit(0.0), (a, x) => a + x.getField("__p")).as("__pw"))
+      .agg(OrderedFold.sum(col("__p"), col("docId")).as("__pw"))
     rm3Tail(fb, dfTab, queries, qidCol, qtextCol, m, lambda,
       maxFeedbackDf)
   }
@@ -1295,10 +1277,7 @@ object Retrieval {
     val qTerms = termWeights.join(cfTab, Seq("word"))
       .crossJoin(broadcast(
         stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    val qn = qTerms.groupBy("queryId")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("word"), col("weight")))),
-        lit(0.0), (a, x) => a + x.getField("weight")).as("__nq"))
+    val qn = weightedQueryMass(qTerms)
     val reused = fp.contribs.drop("__nq")
       .join(broadcast(termWeights.select("queryId", "word", "weight")),
         Seq("queryId", "word"))
@@ -1339,11 +1318,9 @@ object Retrieval {
       .orderBy(col("__pw").desc, col("word").asc)
     val kept = fbCapped.withColumn("__r", row_number().over(wR))
       .filter(col("__r") <= m)
-    // truncated renormalization, word-sorted fold
+    // truncated renormalization (word-keyed OrderedFold)
     val norm = kept.groupBy("queryId")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("word"), col("__pw")))),
-        lit(0.0), (a, x) => a + x.getField("__pw")).as("__s"))
+      .agg(OrderedFold.sum(col("__pw"), col("word")).as("__s"))
     val fbw = kept.join(norm, Seq("queryId"))
       .select(col("queryId"), col("word"),
         (col("__pw") / col("__s")).as("__fw"))
@@ -1513,8 +1490,8 @@ object Retrieval {
         contribExpr(k1, b).as("__c"))
 
   /** Collapse `(queryId, docId, word, __c)` contributions to scores.
-    * Term-sorted fold (the q98/DSIR convention): bit-reproducible at
-    * any partitioning, and the oracle replays the identical tree;
+    * Word-keyed [[OrderedFold.sum]] (the q98/DSIR convention): the
+    * oracle replays the identical tree;
     * scale form (`bitExact = false`): plain map-side-combined sum.
     */
   private[operators] def scoreFold(contrib: DataFrame, bitExact: Boolean,
@@ -1539,11 +1516,7 @@ object Retrieval {
         contrib.repartition(col("queryId"), col("docId"))
       else contrib)
         .groupBy(col("queryId"), col("docId"))
-        .agg(sort_array(collect_list(struct(col("word"), col("__c"))))
-          .as("__cs"))
-        .select(col("queryId"), col("docId"),
-          aggregate(col("__cs"), lit(0.0),
-            (a, x) => a + x.getField("__c")).as("score"))
+        .agg(OrderedFold.sum(col("__c"), col("word")).as("score"))
     else
       contrib.groupBy(col("queryId"), col("docId"))
         .agg(sum(col("__c")).as("score"))
@@ -2489,10 +2462,7 @@ object Retrieval {
       def hotUb(hot: DataFrame): DataFrame = impact match {
         case None =>
           hot.groupBy("queryId")
-            .agg((aggregate(
-              sort_array(collect_list(struct(col("word"),
-                (col("weight") * col("idf")).as("__wIdf")))),
-              lit(0.0), (a, x) => a + x.getField("__wIdf")) *
+            .agg((OrderedFold.sum(col("weight") * col("idf"), col("word")) *
               lit((k1 + 1.0) * (1.0 + 1e-9))).as("__ub"))
         case Some(imp) =>
           hot
@@ -2503,9 +2473,7 @@ object Retrieval {
                 col("weight") * col("idf") * lit(k1 + 1.0))
                 .otherwise(col("weight") * contribExpr(k1, b)).as("__wc"))
             .groupBy("queryId")
-            .agg((aggregate(
-              sort_array(collect_list(struct(col("word"), col("__wc")))),
-              lit(0.0), (a, x) => a + x.getField("__wc")) *
+            .agg((OrderedFold.sum(col("__wc"), col("word")) *
               lit(1.0 + 1e-9)).as("__ub"))
       }
     }
@@ -2689,9 +2657,9 @@ object Retrieval {
 
   /** The WEIGHTED QL enriched table — a `(queryId, word, weight)`
     * term table joined with cf/df + the corpus token count, the
-    * normalizer mass `Σ_present weight` as a word-sorted fold (the
-    * [[qlScoresWeighted]] tree, so the core's candidate scores are
-    * bitwise the unpruned weighted pipeline).
+    * normalizer mass `Σ_present weight` from [[weightedQueryMass]]
+    * (the [[qlScoresWeighted]] tree, so the core's candidate scores
+    * are bitwise the unpruned weighted pipeline).
     */
   private def qlWeightedEnriched(cfTab: DataFrame, dfTab: DataFrame,
                                  stats: DataFrame,
@@ -2700,11 +2668,7 @@ object Retrieval {
       .join(dfTab, Seq("word"))
       .crossJoin(broadcast(
         stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    val qn = qTerms.groupBy("queryId")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("word"), col("weight")))),
-        lit(0.0), (a, x) => a + x.getField("weight")).as("__nq"))
-    qTerms.join(qn, Seq("queryId"))
+    qTerms.join(weightedQueryMass(qTerms), Seq("queryId"))
   }
 
   /** The QL WAND decision table (the q187/q205 convention: gate the
@@ -2794,9 +2758,7 @@ object Retrieval {
         // sign-aware margin (see qlTopKWand): positive fold up, negative
         // normalizer magnitude down — both raise the bound
         perTermCeil.groupBy("queryId")
-          .agg(aggregate(
-            sort_array(collect_list(struct(col("word"), col("__ct")))),
-            lit(0.0), (a, x) => a + x.getField("__ct")).as("__pos"),
+          .agg(OrderedFold.sum(col("__ct"), col("word")).as("__pos"),
             min(col("__mdl")).as("__mdl"), max(col("__nq")).as("__n"))
           .select(col("queryId"),
             (col("__pos") * lit(1.0 + 1e-9) +
@@ -3475,11 +3437,7 @@ object Retrieval {
     val rw = Window.partitionBy(col("queryId"))
       .orderBy(col("fused_score").desc, col("docId").asc)
     contribs.groupBy(col("queryId"), col("docId"))
-      .agg(sort_array(collect_list(struct(col("__src"), col("__f"))))
-        .as("__xs"))
-      .select(col("queryId"), col("docId"),
-        aggregate(col("__xs"), lit(0.0),
-          (a, x) => a + x.getField("__f")).as("fused_score"))
+      .agg(OrderedFold.sum(col("__f"), col("__src")).as("fused_score"))
       .withColumn("rank", row_number().over(rw))
       .filter(col("rank") <= k)
   }
@@ -3525,11 +3483,7 @@ object Retrieval {
     val w = Window.partitionBy(col("queryId"))
       .orderBy(col("rrf_score").desc, col("docId").asc)
     contribs.groupBy(col("queryId"), col("docId"))
-      .agg(sort_array(collect_list(struct(col("__src"), col("__rrf"))))
-        .as("__xs"))
-      .select(col("queryId"), col("docId"),
-        aggregate(col("__xs"), lit(0.0),
-          (a, x) => a + x.getField("__rrf")).as("rrf_score"))
+      .agg(OrderedFold.sum(col("__rrf"), col("__src")).as("rrf_score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
