@@ -213,17 +213,15 @@ object Federation {
                coriB: Double = 0.4, dfBase: Double = 50.0,
                cwScale: Double = 150.0): DataFrame = {
     require(k > 0, s"k > 0: $k")
+    // built first: rejects bad k1/b25 before the selection runs
+    val contribCols = Retrieval.bm25ContribCols(k1, b25)
     val (sel, tfPruned) = selectAndPrune(shardTf, shardDf, shardCw,
       queries, qidCol, qtextCol, nProbe, coriB, dfBase, cwScale)
-    val enriched = Retrieval.enrichedQueryTerms(dfTab, stats, queries,
-      qidCol, qtextCol)
-    // query-batch-/selection-sized build sides by contract (the
-    // Retrieval.postingContribs broadcast rationale)
-    val contrib = tfPruned.join(broadcast(enriched), Seq("word"))
-      .join(broadcast(sel), Seq("queryId", "shard"), "left_semi")
-      .select(col("queryId"), col("docId"), col("word"),
-        Retrieval.contribExpr(k1, b25).as("__c"))
-    Retrieval.bm25TopK(Retrieval.scoreFold(contrib, bitExact), k)
+    val terms = Retrieval.bm25TermTable(
+      Retrieval.unitQueryTerms(queries, qidCol, qtextCol), dfTab,
+      stats)
+    Retrieval.bm25TopK(Retrieval.scoreFold(Retrieval.postingContribs(
+      tfPruned, terms, contribCols, selected(sel)), bitExact), k)
   }
 
   /** [[coriTopK]] for the QUERY-LIKELIHOOD scorer — federation is
@@ -249,25 +247,18 @@ object Federation {
                  coriB: Double = 0.4, dfBase: Double = 50.0,
                  cwScale: Double = 150.0): DataFrame = {
     require(k > 0, s"k > 0: $k")
-    require(mu > 0, s"mu > 0: $mu")
+    // built first: rejects a bad mu before the selection runs
+    val contribCols = Retrieval.qlContribCols(mu)
     val (sel, tfPruned) = selectAndPrune(shardTf, shardDf, shardCw,
       queries, qidCol, qtextCol, nProbe, coriB, dfBase, cwScale)
-    // the qlDirichletScores enrichment verbatim (corpus-present |q|,
-    // global cf/|C|) — shared trees, so probed pairs score bitwise
-    // like the single index
-    val qTerms = Retrieval.queryTerms(queries, qidCol, qtextCol)
-      .join(cfTab, Seq("word"))
-      .crossJoin(broadcast(
-        stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    val qn = qTerms.groupBy("queryId").agg(count(lit(1)).as("__nq"))
-    val enriched = qTerms.join(qn, Seq("queryId"))
-    // query-batch-/selection-sized build sides by contract (the
-    // Retrieval.postingContribs broadcast rationale)
-    val joined = tfPruned.join(broadcast(enriched), Seq("word"))
-      .join(broadcast(sel), Seq("queryId", "shard"), "left_semi")
-      .select(col("queryId"), col("docId"), col("word"),
-        Retrieval.qlContribExpr(mu).as("__c"), col("dl"), col("__nq"))
-    Retrieval.bm25TopK(Retrieval.qlScoreFold(joined, mu, bitExact), k)
+    // the qlDirichletScores term table (corpus-present |q|, global
+    // cf/|C|) — shared trees, so probed pairs score bitwise like the
+    // single index
+    val terms = Retrieval.qlTermTable(
+      Retrieval.unitQueryTerms(queries, qidCol, qtextCol), cfTab,
+      stats)
+    Retrieval.bm25TopK(Retrieval.qlScoreFold(Retrieval.postingContribs(
+      tfPruned, terms, contribCols, selected(sel)), mu, bitExact), k)
   }
 
   /** SCORE-EXACT pruned federated top-k — [[Retrieval.bm25TopKWand]]
@@ -310,8 +301,9 @@ object Federation {
     Retrieval.wandTopK(coriWandScorer(shardTf, shardDf, shardCw, queries,
       qidCol, qtextCol, nProbe, k1, b25, bitExact, forward, impact, coriB,
       dfBase, cwScale),
-      Retrieval.unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
-      hotDf)
+      Retrieval.bm25TermTable(
+        Retrieval.unitQueryTerms(queries, qidCol, qtextCol), dfTab,
+        stats), k, hotDf)
 
   /** ROUTING-AWARE federated top-k — the production default for the
     * select → probe → merge path: serve through [[coriTopKWand]] when
@@ -326,9 +318,8 @@ object Federation {
     * federated arms, 50k docs / 16 shards / 4 probed): WAND 5.8 s
     * cold vs 7.6 unpruned, but warm 5.8 vs 5.0 — the same crossover
     * every WAND consumer shows, so the same `minWandDocs = 20000`
-    * default. |D| reads off the persisted one-row GLOBAL `stats`
-    * table (never a corpus count); `hotDf` defaults to `|D|/10` off
-    * the same row. The unpruned branch never evaluates `forward` or
+    * default and the same [[Retrieval.routedHotDf]] over the GLOBAL
+    * `stats` table. The unpruned branch never evaluates `forward` or
     * `impact` (plans are lazy), so callers pass the metadata
     * unconditionally.
     */
@@ -345,16 +336,16 @@ object Federation {
                      impact: Option[DataFrame] = None,
                      coriB: Double = 0.4, dfBase: Double = 50.0,
                      cwScale: Double = 150.0): DataFrame = {
-    val nDocs = stats.select(col("n_docs").cast("long"))
-      .collect()(0).getLong(0)
-    if (nDocs < minWandDocs)
-      coriTopK(shardTf, shardDf, shardCw, dfTab, stats, queries,
-        qidCol, qtextCol, k, nProbe, k1, b25, bitExact, coriB, dfBase,
-        cwScale)
-    else
-      coriTopKWand(shardTf, shardDf, shardCw, dfTab, stats, queries,
-        qidCol, qtextCol, k, nProbe, hotDf.getOrElse(nDocs / 10), k1,
-        b25, bitExact, forward, impact, coriB, dfBase, cwScale)
+    Retrieval.routedHotDf(stats, minWandDocs, hotDf) match {
+      case None =>
+        coriTopK(shardTf, shardDf, shardCw, dfTab, stats, queries,
+          qidCol, qtextCol, k, nProbe, k1, b25, bitExact, coriB, dfBase,
+          cwScale)
+      case Some(hd) =>
+        coriTopKWand(shardTf, shardDf, shardCw, dfTab, stats, queries,
+          qidCol, qtextCol, k, nProbe, hd, k1, b25, bitExact, forward,
+          impact, coriB, dfBase, cwScale)
+    }
   }
 
   /** The federated WAND decision table (the q187/q205/q246
@@ -381,8 +372,9 @@ object Federation {
     Retrieval.wandStats(coriWandScorer(shardTf, shardDf, shardCw, queries,
       qidCol, qtextCol, nProbe, k1, b25, bitExact, forward, impact, coriB,
       dfBase, cwScale),
-      Retrieval.unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
-      hotDf)
+      Retrieval.bm25TermTable(
+        Retrieval.unitQueryTerms(queries, qidCol, qtextCol), dfTab,
+        stats), k, hotDf)
 
   /** The federated WAND scorer — [[Retrieval.bm25WandScorer]] over the
     * shard-set-pruned postings with the (query, shard) selection
@@ -403,12 +395,17 @@ object Federation {
                              cwScale: Double): Retrieval.WandScorer = {
     val (sel, tfPruned) = selectAndPrune(shardTf, shardDf, shardCw,
       queries, qidCol, qtextCol, nProbe, coriB, dfBase, cwScale)
-    // selection-sized build side by contract (the
-    // Retrieval.postingContribs broadcast rationale)
     Retrieval.bm25WandScorer(tfPruned, forward.getOrElse(shardTf), k1, b25,
-      bitExact, impact,
-      _.join(broadcast(sel), Seq("queryId", "shard"), "left_semi"))
+      bitExact, impact, selected(sel))
   }
+
+  /** The probe filter of the federated operators: matched posting rows
+    * semi-joined to the selected (queryId, shard) pairs, BEFORE the
+    * fold. The selection is result-sized by contract — the explicit
+    * broadcast side (the [[Retrieval.postingContribs]] rationale).
+    */
+  private def selected(sel: DataFrame): DataFrame => DataFrame =
+    _.join(broadcast(sel), Seq("queryId", "shard"), "left_semi")
 
   /** The selection + batch-prune head shared by the federated top-k
     * operators: the CORI top-`nProbe` (queryId, shard) set

@@ -192,11 +192,11 @@ object Fuzzy {
     * UNSAFE pays phase 1 AND the exact fallback (~2× unpruned), and
     * small corpora can never amortize the extra stages (the 500-doc
     * fixtures measured 1.7–2×). So `wandHotDf` engages only when |D|
-    * (one read of the persisted one-row `stats`) reaches
-    * `minWandDocs`; below it the same answers serve unpruned. The
-    * per-batch production readout for the expansion's df SHAPE (the
-    * head-prefix adversarial case routes everything unsafe at any
-    * scale) is [[Retrieval.bm25WandWeightedStats]].
+    * reaches `minWandDocs` ([[Retrieval.routedHotDf]]); below it the
+    * same answers serve unpruned. The per-batch production readout
+    * for the expansion's df SHAPE (the head-prefix adversarial case
+    * routes everything unsafe at any scale) is
+    * [[Retrieval.bm25WandWeightedStats]].
     */
   private def expandedTopK(tf: DataFrame, dfTab: DataFrame,
                            stats: DataFrame, terms: DataFrame, k: Int,
@@ -205,9 +205,9 @@ object Fuzzy {
                            minWandDocs: Long,
                            forward: Option[DataFrame],
                            impact: Option[DataFrame]): DataFrame =
-    wandHotDf match {
-      case Some(hd) if stats.select(col("n_docs").cast("long"))
-          .collect()(0).getLong(0) >= minWandDocs =>
+    wandHotDf.flatMap(hd =>
+      Retrieval.routedHotDf(stats, minWandDocs, Some(hd))) match {
+      case Some(hd) =>
         // the WAND core consumes the term table twice (the enriched
         // build and the exact-fallback restriction) — the expansion
         // chain behind it (deletion-neighborhood correction / prefix
@@ -215,7 +215,7 @@ object Fuzzy {
         // materialize once (query-batch-sized), not re-run per branch
         Retrieval.bm25TopKWandWeighted(tf, terms.localCheckpoint(),
           k, hd, k1, b, bitExact, forward, Some((dfTab, stats)), impact)
-      case _ =>
+      case None =>
         Retrieval.bm25TopK(
           Retrieval.bm25ScoresWeighted(tf, dfTab, stats, terms,
             k1, b, bitExact), k)
@@ -250,8 +250,9 @@ object Fuzzy {
       k, k1, b, bitExact, wandHotDf, minWandDocs, forward, impact)
 
   /** Typo-tolerant BM25 top-k: [[correctedQueryTerms]] at unit weight
-    * through the weighted scorer (IEEE `1.0 · x == x`, so scores are
-    * bitwise the plain BM25 of the corrected query). Same persisted
+    * through the weighted scorer (scores are bitwise the plain BM25 of
+    * the corrected query — the unit-weight contract of
+    * [[Retrieval.unitQueryTerms]]). Same persisted
     * layouts, same folds, same ranking as [[Retrieval.bm25TopK]];
     * `wandHotDf` (+ `forward`/`impact`) inherits score-exact weighted
     * WAND exactly like [[bm25TopKPrefix]] (q227 regates through the

@@ -214,8 +214,9 @@ object Passages {
                          k1: Double = 1.2, b: Double = 0.75,
                          bitExact: Boolean = true): DataFrame =
     Retrieval.wandTopK(passageScorer(layout, k1, b, bitExact),
-      Retrieval.unitEnriched(layout.dfTab, layout.stats, queries, qidCol,
-        qtextCol), k, hotDf, Some(layout.membership))
+      Retrieval.bm25TermTable(
+        Retrieval.unitQueryTerms(queries, qidCol, qtextCol), layout.dfTab,
+        layout.stats), k, hotDf, Some(layout.membership))
 
   /** The MaxP WAND decision table (the q187/q205/q240 convention:
     * gate the PRUNING MATH, not just the final answer) — identical
@@ -234,8 +235,9 @@ object Passages {
                           k1: Double = 1.2, b: Double = 0.75,
                           bitExact: Boolean = true): DataFrame =
     Retrieval.wandStats(passageScorer(layout, k1, b, bitExact),
-      Retrieval.unitEnriched(layout.dfTab, layout.stats, queries, qidCol,
-        qtextCol), k, hotDf, Some(layout.membership))
+      Retrieval.bm25TermTable(
+        Retrieval.unitQueryTerms(queries, qidCol, qtextCol), layout.dfTab,
+        layout.stats), k, hotDf, Some(layout.membership))
 
   /** The BM25 WAND scorer over the passage layout: passages are
     * pseudo-docs, so the word-index scorer applies verbatim.
@@ -250,12 +252,11 @@ object Passages {
     * passage collection): serve through [[maxPassageTopKWand]] when
     * the PASSAGE count clears `minWandDocs`, through the unpruned
     * [[maxPassageTopK]] otherwise. Both branches are score-exact, so
-    * the routing is pure stage-budget economics; the passage count
-    * reads off the persisted 1-row `stats` table (never a corpus
-    * pass) and `hotDf` defaults to the |passages|/10 convention off
-    * the same row. Note the threshold compares PASSAGES, not
-    * documents — a width-32/stride-16 segmentation crosses it at
-    * roughly half the document count.
+    * the routing is pure stage-budget economics
+    * ([[Retrieval.routedHotDf]] over the passage layout's `stats`).
+    * Note the threshold compares PASSAGES, not documents — a
+    * width-32/stride-16 segmentation crosses it at roughly half the
+    * document count.
     */
   def maxPassageTopKRouted(layout: PassageLayout,
                            queries: DataFrame, qidCol: String,
@@ -265,13 +266,13 @@ object Passages {
                            minWandDocs: Long = 20000L,
                            k1: Double = 1.2, b: Double = 0.75,
                            bitExact: Boolean = true): DataFrame = {
-    val nPass = layout.stats.select(col("n_docs").cast("long"))
-      .collect()(0).getLong(0)
-    if (nPass < minWandDocs)
-      maxPassageTopK(layout, queries, qidCol, qtextCol, k, k1, b,
-        bitExact)
-    else
-      maxPassageTopKWand(layout, queries, qidCol, qtextCol, k,
-        hotDf.getOrElse(nPass / 10), k1, b, bitExact)
+    Retrieval.routedHotDf(layout.stats, minWandDocs, hotDf) match {
+      case None =>
+        maxPassageTopK(layout, queries, qidCol, qtextCol, k, k1, b,
+          bitExact)
+      case Some(hd) =>
+        maxPassageTopKWand(layout, queries, qidCol, qtextCol, k, hd, k1,
+          b, bitExact)
+    }
   }
 }

@@ -15,15 +15,23 @@ import graft.functions.{OrderedFold, TextFunctions}
   *   - SCORERS: Okapi BM25 ([[bm25Scores]] and the indexed/precomputed
   *     forms; Robertson et al. TREC-3, idf in the non-negative
   *     `ln(1 + (N - df + 0.5)/(df + 0.5))` form Lucene ships), fielded
-  *     BM25F ([[bm25fScores]]), query-likelihood with Dirichlet
-  *     smoothing ([[qlDirichletScores]]), and weighted-term scoring
-  *     ([[bm25ScoresWeighted]]) for RM3's second pass;
+  *     BM25F ([[bm25fScores]]), and query-likelihood with Dirichlet
+  *     smoothing ([[qlDirichletScores]]). Each BM25/QL scorer is its
+  *     weighted form ([[bm25ScoresWeighted]]/[[qlScoresWeighted]], RM3's
+  *     second pass) at unit weight: every query side is ONE
+  *     [[bm25TermTable]] or [[qlTermTable]] over [[unitQueryTerms]],
+  *     whose docs state the unit-weight contract;
   *   - QUERY MODES: ranked top-k ([[bm25TopK]]), score-exact WAND
-  *     pruning ([[bm25TopKWand]]/[[bm25TopKWandWeighted]] with their
-  *     gated decision tables), boolean-AND ([[bm25TopKConjunctive]]),
-  *     exact phrase ([[phraseMatches]], [[bm25TopKPhrase]]), proximity
-  *     ([[proximityMatches]]), RM3 expansion ([[rm3ExpandedTerms]]),
-  *     snippets ([[snippetWindows]]), and the rank/score fusers
+  *     pruning ([[bm25TopKWand]], [[qlTopKWand]], [[bm25fTopKWand]],
+  *     their weighted and corpus-size-routed forms and gated decision
+  *     tables, one [[wandTopK]] plan), boolean-AND
+  *     ([[bm25TopKConjunctive]]), boolean-NOT ([[bm25TopKNot]]), exact
+  *     phrase ([[phraseMatches]], [[bm25TopKPhrase]]), proximity
+  *     ([[proximityMatches]]), RM3 expansion ([[rm3ExpandedTerms]],
+  *     [[rm3ExpandedTermsQl]], reusing a materialized [[FirstPass]]),
+  *     tiered serving ([[bm25TopKTiered]]), LTR features
+  *     ([[ltrFeatures]]), snippets ([[snippetWindows]]), MMR
+  *     re-ranking ([[mmrRerank]]), and the rank/score fusers
   *     ([[rrfFuse]]/[[linearFuse]]);
   *   - INDEX LIFECYCLE: build ([[termFrequencies]],
   *     [[positionalPostings]], [[termFrequenciesFielded]] + the
@@ -43,8 +51,10 @@ import graft.functions.{OrderedFold, TextFunctions}
   *     beside it for candidate-restricted scoring, so repeated query
   *     batches re-shuffle nothing on the corpus side;
   *   - document frequencies and the corpus scalars fold into the
-  *     QUERY-TERM table — query-batch-sized, so the one posting join
-  *     carries everything it needs and AQE broadcasts it;
+  *     query-term table ([[bm25TermTable]]/[[qlTermTable]]) —
+  *     query-batch-sized, so
+  *     the one posting join carries everything it needs as its
+  *     broadcast side;
   *   - per-(query, doc) scores aggregate only over MATCHING postings;
   *     the fold is a word-keyed [[graft.functions.OrderedFold]] (the
   *     DSIR convention) and the DuckDB oracle replays the identical
@@ -444,9 +454,7 @@ object Retrieval {
       .join(dfT, Seq("word"))
       .crossJoin(broadcast(nDocs))
       .select(col("queryId"), col("word"), col("df"),
-        log(lit(1.0) +
-          (col("__N") - col("df").cast("double") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5))).as("idf"))
+        bm25Idf(col("__N")).as("idf"))
     Bm25fParts(scoredQ, fContrib, favg, params, qTermsIdf)
   }
 
@@ -640,8 +648,8 @@ object Retrieval {
                     fStats: Option[(DataFrame, DataFrame, DataFrame)]
                       = None): DataFrame = {
     val p = bm25fParts(ftf, fieldParams, queries, qidCol, qtextCol, fStats)
-    wandTopK(bm25fWandScorer(p, k1, bitExact, impactF), bm25fEnriched(p),
-      k, hotDf)
+    wandTopK(bm25fWandScorer(p, k1, bitExact, impactF), p.qTermsIdf, k,
+      hotDf)
   }
 
   /** The BM25F WAND decision table (the q187/q205/q224 convention:
@@ -661,15 +669,9 @@ object Retrieval {
                      fStats: Option[(DataFrame, DataFrame, DataFrame)]
                        = None): DataFrame = {
     val p = bm25fParts(ftf, fieldParams, queries, qidCol, qtextCol, fStats)
-    wandStats(bm25fWandScorer(p, k1, bitExact, impactF), bm25fEnriched(p),
-      k, hotDf)
+    wandStats(bm25fWandScorer(p, k1, bitExact, impactF), p.qTermsIdf, k,
+      hotDf)
   }
-
-  /** The BM25F enriched query terms under the WAND weight contract (the
-    * [[unitEnriched]] convention: an explicit 1.0 weight column).
-    */
-  private def bm25fEnriched(p: Bm25fParts): DataFrame =
-    p.qTermsIdf.withColumn("weight", lit(1.0))
 
   /** The BM25F [[WandScorer]]: [[bm25fParts]]' trees, doc-restricted.
     * Candidates are the docs of the rare fielded postings; their FULL
@@ -767,29 +769,17 @@ object Retrieval {
     * has no background mass — Dirichlet smoothing is undefined for
     * it, so it drops from the model on both sides of the oracle).
     * The Σ folds term-sorted under `bitExact` (the BM25 contract);
-    * the length term adds ONCE, after the fold.
+    * the length term adds ONCE, after the fold. The unit query is
+    * [[qlScoresWeighted]] over [[unitQueryTerms]] (whose docs state
+    * the unit-weight contract).
     */
   def qlDirichletScores(tf: DataFrame, cfTab: DataFrame, stats: DataFrame,
                         queries: DataFrame, qidCol: String,
                         qtextCol: String,
                         mu: Double = 2000.0,
-                        bitExact: Boolean = true): DataFrame = {
-    require(mu > 0, s"mu > 0: $mu")
-    val qTerms = queryTerms(queries, qidCol, qtextCol)
-      .join(cfTab, Seq("word"))
-      .crossJoin(broadcast(
-        stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    // |q| over corpus-present terms rides the enriched table
-    val qn = qTerms.groupBy("queryId").agg(count(lit(1)).as("__nq"))
-    val enriched = qTerms.join(qn, Seq("queryId"))
-    // query-batch-sized build side by contract (the postingContribs
-    // broadcast rationale — never stream the query side serially,
-    // never broadcast the index)
-    qlScoreFold(tf.join(broadcast(enriched), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        qlContribExpr(mu).as("__c"), col("dl"), col("__nq")),
-      mu, bitExact)
-  }
+                        bitExact: Boolean = true): DataFrame =
+    qlScoresWeighted(tf, cfTab, stats,
+      unitQueryTerms(queries, qidCol, qtextCol), mu, bitExact)
 
   /** QL Dirichlet scoring under a WEIGHTED query-term table
     * `(queryId, word, weight)` (an [[rm3ExpandedTermsQl]] output, or
@@ -797,41 +787,20 @@ object Retrieval {
     * [[bm25ScoresWeighted]]: each matching term contributes
     * `weight · ln(1 + tf·|C|/(μ·cf))`, and the length normalizer
     * generalizes to `(Σ_present weight) · ln(μ/(dl + μ))` — each unit
-    * of query mass carries one normalizer share, so a unit-weight
-    * table reduces BITWISE to [[qlDirichletScores]] (IEEE
-    * `1.0 · x == x`, and the word-sorted weight fold of 1.0s is the
-    * exact integer count; RetrievalSpec pins the reduction). Terms
-    * absent from the corpus drop via the cf join on BOTH the
-    * contribution and normalizer sides — the [[qlDirichletScores]]
-    * corpus-present contract. Same one posting join, same
-    * [[qlScoreFold]], same `bitExact` contract.
+    * of query mass carries one normalizer share (the `__nq` of
+    * [[qlTermTable]]; [[unitQueryTerms]] states why unit weights are
+    * [[qlDirichletScores]]). Terms absent from the corpus drop via
+    * the cf join on BOTH the contribution and normalizer sides. Same
+    * one posting join, same [[qlScoreFold]], same `bitExact`
+    * contract.
     */
   def qlScoresWeighted(tf: DataFrame, cfTab: DataFrame,
                        stats: DataFrame, termWeights: DataFrame,
                        mu: Double = 2000.0,
-                       bitExact: Boolean = true): DataFrame = {
-    require(mu > 0, s"mu > 0: $mu")
-    val qTerms = termWeights.join(cfTab, Seq("word"))
-      .crossJoin(broadcast(
-        stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    val enriched = qTerms.join(weightedQueryMass(qTerms), Seq("queryId"))
-    // query-batch-sized build side by contract (the postingContribs
-    // broadcast rationale)
-    qlScoreFold(tf.join(broadcast(enriched), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * qlContribExpr(mu)).as("__c"),
-        col("dl"), col("__nq")),
-      mu, bitExact)
-  }
-
-  /** The weighted |q| `(queryId, __nq)`: `Σ_present weight` per query
-    * as an [[OrderedFold]] over the words — one definition for
-    * [[qlScoresWeighted]], [[qlScoresWeightedReusing]] and the weighted
-    * QL WAND table, so their normalizers are the same bits.
-    */
-  private def weightedQueryMass(qTerms: DataFrame): DataFrame =
-    qTerms.groupBy("queryId")
-      .agg(OrderedFold.sum(col("weight"), col("word")).as("__nq"))
+                       bitExact: Boolean = true): DataFrame =
+    qlScoreFold(postingContribs(tf,
+      qlTermTable(termWeights, cfTab, stats),
+      qlContribCols(mu)), mu, bitExact)
 
   /** Collapse QL `(queryId, docId, word, __c, dl, __nq)` matching
     * contributions to scores — the [[scoreFold]] convention for the
@@ -916,7 +885,8 @@ object Retrieval {
     * the probe plan, leaving the one posting join. Scores are
     * bit-identical to the inline-aggregate path (the df counts and the
     * scalar sums are exact integers either way; the single avgdl
-    * division happens here in both).
+    * division happens here in both). The unit query is
+    * [[bm25ScoresWeighted]] over [[unitQueryTerms]].
     */
   def bm25ScoresPrecomputed(tf: DataFrame, dfTab: DataFrame,
                             stats: DataFrame,
@@ -925,15 +895,10 @@ object Retrieval {
                             k1: Double = 1.2, b: Double = 0.75,
                             bitExact: Boolean = true,
                             maxDocFrequency: Option[Long] = None)
-      : DataFrame = {
-    require(k1 >= 0 && b >= 0 && b <= 1, s"k1 >= 0, b in [0,1]: $k1, $b")
-    val kept = maxDocFrequency match {
-      case Some(maxDf) => dfTab.filter(col("df") <= maxDf)
-      case None => dfTab
-    }
-    val enriched = enrichedQueryTerms(kept, stats, queries, qidCol, qtextCol)
-    scoreFold(postingContribs(tf, enriched, k1, b), bitExact)
-  }
+      : DataFrame =
+    bm25ScoresWeighted(tf, dfTab, stats,
+      unitQueryTerms(queries, qidCol, qtextCol), k1, b, bitExact,
+      maxDocFrequency)
 
   /** RM3 pseudo-relevance-feedback query expansion (Lavrenko &
     * Croft'01 relevance models; the Anserini/Lucene RM3 shape): from
@@ -1159,7 +1124,7 @@ object Retrieval {
     * [[contribExpr]]; QL: `__c` = [[qlContribExpr]] plus the `dl`,
     * `__nq` riders the QL fold needs), `topk` the checkpointed
     * first-pass top-k `(queryId, docId, score)`, and `qTerms` the lazy
-    * original `(queryId, word)` table (the reuse split key). The RM3
+    * original [[unitQueryTerms]] table (the reuse split key). The RM3
     * composition then derives BOTH its stages from the one pass: the
     * expansion consumes `topk`
     * ([[rm3ExpandedTermsFromTopk]]/[[rm3ExpandedTermsQlFromTopk]]) and
@@ -1182,40 +1147,34 @@ object Retrieval {
                     queries: DataFrame, qidCol: String, qtextCol: String,
                     k: Int, k1: Double = 1.2, b: Double = 0.75,
                     bitExact: Boolean = true): FirstPass = {
-    require(k > 0, s"k > 0: $k")
-    val qt = queryTerms(queries, qidCol, qtextCol)
-    val contribs = postingContribs(tf,
-      enrichedQueryTerms(dfTab, stats, queries, qidCol, qtextCol),
-      k1, b).localCheckpoint()
-    val topk = bm25TopK(scoreFold(contribs, bitExact), k)
-      .select("queryId", "docId", "score").localCheckpoint()
-    FirstPass(contribs, topk, qt)
+    val qt = unitQueryTerms(queries, qidCol, qtextCol)
+    firstPass(qt, postingContribs(tf,
+      bm25TermTable(qt, dfTab, stats),
+      bm25ContribCols(k1, b)), scoreFold(_, bitExact), k)
   }
 
   /** The materialized QL first pass (see [[FirstPass]]): the
     * [[qlDirichletScores]] head with the posting join checkpointed,
     * then the shared fold + top-k. `contribs` carries `dl` and the
     * original corpus-present `|q|` (`__nq`) so the unit fold replays;
-    * the weighted reuse drops `__nq` and joins the weighted mass.
+    * the weighted reuse swaps in the weighted mass.
     */
   def qlFirstPass(tf: DataFrame, cfTab: DataFrame, stats: DataFrame,
                   queries: DataFrame, qidCol: String, qtextCol: String,
                   k: Int, mu: Double = 2000.0,
                   bitExact: Boolean = true): FirstPass = {
+    val qt = unitQueryTerms(queries, qidCol, qtextCol)
+    firstPass(qt, postingContribs(tf,
+      qlTermTable(qt, cfTab, stats), qlContribCols(mu)),
+      qlScoreFold(_, mu, bitExact), k)
+  }
+
+  /** Checkpoint a first pass's contributions and its folded top-k. */
+  private def firstPass(qt: DataFrame, contribsLazy: DataFrame,
+                        fold: DataFrame => DataFrame, k: Int): FirstPass = {
     require(k > 0, s"k > 0: $k")
-    require(mu > 0, s"mu > 0: $mu")
-    val qt = queryTerms(queries, qidCol, qtextCol)
-    val qTerms = qt
-      .join(cfTab, Seq("word"))
-      .crossJoin(broadcast(
-        stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    val qn = qTerms.groupBy("queryId").agg(count(lit(1)).as("__nq"))
-    val contribs = tf.join(broadcast(qTerms.join(qn, Seq("queryId"))),
-        Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        qlContribExpr(mu).as("__c"), col("dl"), col("__nq"))
-      .localCheckpoint()
-    val topk = bm25TopK(qlScoreFold(contribs, mu, bitExact), k)
+    val contribs = contribsLazy.localCheckpoint()
+    val topk = bm25TopK(fold(contribs), k)
       .select("queryId", "docId", "score").localCheckpoint()
     FirstPass(contribs, topk, qt)
   }
@@ -1244,54 +1203,45 @@ object Retrieval {
                                 fp: FirstPass,
                                 k1: Double = 1.2, b: Double = 0.75,
                                 bitExact: Boolean = true): DataFrame = {
-    require(k1 >= 0 && b >= 0 && b <= 1, s"k1 >= 0, b in [0,1]: $k1, $b")
+    val newRows = postingContribs(tf, bm25TermTable(
+      termWeights.join(fp.qTerms, Seq("queryId", "word"), "left_anti"),
+      dfTab, stats), bm25ContribCols(k1, b))
     val reused = fp.contribs
       .join(broadcast(termWeights.select("queryId", "word", "weight")),
         Seq("queryId", "word"))
       .select(col("queryId"), col("docId"), col("word"),
         (col("weight") * col("__c")).as("__c"))
-    val newRows = tf.join(broadcast(enrichedWeightedTerms(dfTab, stats,
-        termWeights.join(fp.qTerms, Seq("queryId", "word"),
-          "left_anti"))), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * contribExpr(k1, b)).as("__c"))
     scoreFold(reused.unionByName(newRows), bitExact)
   }
 
   /** [[qlScoresWeighted]] REUSING a materialized first pass (r20) —
     * the [[bm25ScoresWeightedReusing]] argument under the QL trees:
     * original terms scale the checkpointed `qlContribExpr` values,
-    * new expansion words pay the one posting join, and the weighted
-    * normalizer mass `Σ_present weight` is the [[qlScoresWeighted]]
-    * word-sorted fold verbatim — so the fold consumes the identical
-    * `(word, __c)` multiset with the identical `dl`/`__nq` riders and
-    * the scores are bitwise [[qlScoresWeighted]]'s (RetrievalSpec
-    * pins the parity).
+    * new expansion words pay the one posting join, and the union of
+    * both halves joins the weighted normalizer mass `__nq` of the
+    * [[qlTermTable]] once (its [[qlTermParts]], so the term subtree is
+    * planned as often as the table itself plans it) — the fold
+    * consumes the identical `(word, __c)` multiset with the identical
+    * `dl`/`__nq` riders and the scores are bitwise
+    * [[qlScoresWeighted]]'s (RetrievalSpec pins the parity).
     */
   def qlScoresWeightedReusing(tf: DataFrame, cfTab: DataFrame,
                               stats: DataFrame, termWeights: DataFrame,
                               fp: FirstPass,
                               mu: Double = 2000.0,
                               bitExact: Boolean = true): DataFrame = {
-    require(mu > 0, s"mu > 0: $mu")
-    val qTerms = termWeights.join(cfTab, Seq("word"))
-      .crossJoin(broadcast(
-        stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    val qn = weightedQueryMass(qTerms)
+    val (present, mass) = qlTermParts(termWeights, cfTab, stats)
+    // qlContribCols without its trailing `__nq` rider
+    val newRows = postingContribs(tf,
+      present.join(fp.qTerms, Seq("queryId", "word"), "left_anti"),
+      qlContribCols(mu).init)
     val reused = fp.contribs.drop("__nq")
       .join(broadcast(termWeights.select("queryId", "word", "weight")),
         Seq("queryId", "word"))
       .select(col("queryId"), col("docId"), col("word"),
         (col("weight") * col("__c")).as("__c"), col("dl"))
-    val newRows = tf.join(
-        broadcast(qTerms.join(fp.qTerms, Seq("queryId", "word"),
-          "left_anti")),
-        Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * qlContribExpr(mu)).as("__c"), col("dl"))
-    qlScoreFold(
-      reused.unionByName(newRows).join(broadcast(qn), Seq("queryId")),
-      mu, bitExact)
+    qlScoreFold(reused.unionByName(newRows)
+      .join(broadcast(mass), Seq("queryId")), mu, bitExact)
   }
 
   /** The RM3 TAIL shared by [[rm3ExpandedTerms]] (BM25 doc weights)
@@ -1351,9 +1301,10 @@ object Retrieval {
   /** BM25 scoring under a WEIGHTED query-term table
     * `(queryId, word, weight)` (an [[rm3ExpandedTerms]] output, or any
     * caller-supplied term weighting): each term's contribution is
-    * `weight · bm25(w, d)`. Same shape as [[bm25ScoresPrecomputed]] —
-    * one posting join carrying a query-batch-sized enriched table,
-    * same folds, same `bitExact` contract.
+    * `weight · bm25(w, d)`. One posting join carrying the
+    * query-batch-sized [[bm25TermTable]], the [[scoreFold]], the
+    * `bitExact` contract; [[bm25ScoresPrecomputed]] is this at unit
+    * weight.
     */
   def bm25ScoresWeighted(tf: DataFrame, dfTab: DataFrame,
                          stats: DataFrame, termWeights: DataFrame,
@@ -1361,47 +1312,16 @@ object Retrieval {
                          bitExact: Boolean = true,
                          maxDocFrequency: Option[Long] = None)
       : DataFrame = {
-    require(k1 >= 0 && b >= 0 && b <= 1, s"k1 >= 0, b in [0,1]: $k1, $b")
-    // the same opt-in stop-term prune as the unit-weight path: a
-    // weighted query's ORIGINAL hot terms otherwise ride into the
-    // second pass at λ weight and keep it as hot as the first
-    val kept = maxDocFrequency match {
-      case Some(maxDf) => dfTab.filter(col("df") <= maxDf)
-      case None => dfTab
-    }
-    // query-batch-sized build side by contract (the postingContribs
-    // broadcast rationale)
-    val contrib = tf.join(
-        broadcast(enrichedWeightedTerms(kept, stats, termWeights)),
-        Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        (col("weight") * contribExpr(k1, b)).as("__c"))
-    scoreFold(contrib, bitExact)
+    // the opt-in stop-term prune: a weighted query's ORIGINAL hot
+    // terms otherwise ride into the second pass at λ weight and keep
+    // it as hot as the first
+    val kept =
+      maxDocFrequency.fold(dfTab)(maxDf => dfTab.filter(col("df") <= maxDf))
+    scoreFold(postingContribs(tf,
+      bm25TermTable(termWeights, kept, stats),
+      bm25ContribCols(k1, b)), bitExact)
   }
 
-  /** The weighted-query mirror of [[enrichedQueryTerms]]: a
-    * `(queryId, word, weight)` term table joined with idf + corpus
-    * scalars — `(queryId, word, weight, avgdl, idf, df)`. The df rides
-    * along for [[bm25TopKWandWeighted]]'s rare/hot split;
-    * [[bm25ScoresWeighted]] ignores it.
-    */
-  private def enrichedWeightedTerms(dfTab: DataFrame, stats: DataFrame,
-                                    termWeights: DataFrame): DataFrame =
-    termWeights
-      .join(dfTab, Seq("word"))
-      .crossJoin(broadcast(statsDouble(stats)))
-      .select(col("queryId"), col("word"), col("weight"), col("avgdl"),
-        log(lit(1.0) +
-          (col("n_docs") - col("df").cast("double") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5))).as("idf"),
-        col("df"))
-
-  /** The query-term table with idf + corpus scalars folded in
-    * (query-batch-sized — the posting join needs nothing else):
-    * `(queryId, word, avgdl, idf, df)`. The df rides along for
-    * [[bm25TopKWand]]'s rare/hot split; [[bm25ScoresPrecomputed]]
-    * ignores it.
-    */
   /** The deduped normalized query-term table `(queryId, word)` — the
     * ONE tokenizer-and-guard definition every scorer's query side
     * shares (null/degenerate queries drop; terms are DISTINCT, the
@@ -1417,31 +1337,78 @@ object Retrieval {
           .as("word"))
       .filter(col("word").isNotNull)
 
-  private[operators] def enrichedQueryTerms(dfTab: DataFrame, stats: DataFrame,
-                                 queries: DataFrame, qidCol: String,
-                                 qtextCol: String): DataFrame = {
-    val qTerms = queryTerms(queries, qidCol, qtextCol)
-    val statsD = statsDouble(stats)
-    qTerms
-      .join(dfTab, Seq("word"))
-      .crossJoin(broadcast(statsD))
-      .select(col("queryId"), col("word"), col("avgdl"),
-        log(lit(1.0) +
-          (col("n_docs") - col("df").cast("double") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5))).as("idf"),
-        col("df"))
+  /** [[queryTerms]] at unit weight, `(queryId, word, weight = 1.0)` —
+    * how every unit operator enters [[bm25TermTable]] and
+    * [[qlTermTable]]. THE unit-weight contract: every weight is 1.0,
+    * so each `weight · x` is `x` bit for bit (IEEE), and the
+    * word-sorted fold of n ones from 0.0 (`__nq`) is the exact integer
+    * n, the value the count `|q|` always had. The unit scorers are
+    * therefore their weighted siblings at weight 1.0, bitwise, by
+    * construction.
+    */
+  private[operators] def unitQueryTerms(queries: DataFrame, qidCol: String,
+                                        qtextCol: String): DataFrame =
+    queryTerms(queries, qidCol, qtextCol).withColumn("weight", lit(1.0))
+
+  /** THE BM25 query-term table: a `(queryId, word, weight)` term table
+    * joined with the persisted df layout and the corpus scalars,
+    * `(queryId, word, weight, avgdl, idf, df)`. `idf` is Lucene's
+    * [[bm25Idf]] over `n_docs`; `avgdl` is the EXACT integer
+    * `total_dl / n_docs` division (one rounding, replayable), never an
+    * engine-internal `avg()`. Words absent from the corpus drop; they
+    * would contribute nothing. It is query-batch-sized, so it is the
+    * broadcast side of every probe ([[postingContribs]]). Every BM25
+    * operator (plain, first pass, phrase, conjunctive, WAND, MaxP,
+    * federated, LTR) builds its query side here, unit queries through
+    * [[unitQueryTerms]].
+    */
+  private[operators] def bm25TermTable(terms: DataFrame, dfTab: DataFrame,
+                                       stats: DataFrame): DataFrame =
+    terms.join(dfTab, Seq("word"))
+      .crossJoin(broadcast(stats.select(
+        col("n_docs").cast("double").as("n_docs"),
+        (col("total_dl").cast("double") / col("n_docs").cast("double"))
+          .as("avgdl"))))
+      .select(col("queryId"), col("word"), col("weight"), col("avgdl"),
+        bm25Idf(col("n_docs")).as("idf"), col("df"))
+
+  /** THE QL query-term table, the [[bm25TermTable]] mirror: any term
+    * table with `(queryId, word, weight)` columns (a raw one, or a
+    * [[bm25TermTable]] when a caller needs both scorers' columns)
+    * joined with the persisted cf layout, plus the corpus token count
+    * `__cTokens` (|C|) and `__nq`, the query mass: an
+    * [[OrderedFold.sum]] of `weight` over the query's corpus-present
+    * words (those that survive the joins). `__nq` is QL's `|q|`; at
+    * unit weight it is the count ([[unitQueryTerms]]).
+    */
+  private[operators] def qlTermTable(terms: DataFrame, cfTab: DataFrame,
+                                     stats: DataFrame): DataFrame = {
+    val (present, mass) = qlTermParts(terms, cfTab, stats)
+    present.join(mass, Seq("queryId"))
   }
 
-  /** The one-row scalar table as doubles — the avgdl division uses an
-    * EXPLICIT exact integer sum / count division (one rounding,
-    * replayable) rather than avg() whose accumulation is
-    * engine-internal.
+  /** [[qlTermTable]] before its one join: the corpus-present terms
+    * (cf, `__cTokens`) and the per-query mass `(queryId, __nq)`, for a
+    * caller that joins the mass later ([[qlScoresWeightedReusing]],
+    * the [[ltrFeatures]] family).
     */
-  private def statsDouble(stats: DataFrame): DataFrame =
-    stats.select(
-      col("n_docs").cast("double").as("n_docs"),
-      (col("total_dl").cast("double") / col("n_docs").cast("double"))
-        .as("avgdl"))
+  private def qlTermParts(terms: DataFrame, cfTab: DataFrame,
+                          stats: DataFrame): (DataFrame, DataFrame) = {
+    val present = terms.join(cfTab, Seq("word"))
+      .crossJoin(broadcast(
+        stats.select(col("total_dl").cast("double").as("__cTokens"))))
+    (present, present.groupBy("queryId")
+      .agg(OrderedFold.sum(col("weight"), col("word")).as("__nq")))
+  }
+
+  /** Lucene's non-negative BM25 idf `ln(1 + (N − df + 0.5)/(df + 0.5))`
+    * of the row's `df` against the document count `n` — shared by
+    * [[bm25TermTable]] and the fielded [[bm25fParts]] (its own df/N).
+    */
+  private def bm25Idf(n: Column): Column = {
+    val dfHalf = col("df").cast("double") + lit(0.5)
+    log(lit(1.0) + (n - col("df").cast("double") + lit(0.5)) / dfHalf)
+  }
 
   /** The per-(query, doc, word) QL Dirichlet matching-term
     * contribution `ln(1 + tf·|C| / (μ·cf))` over joined
@@ -1449,30 +1416,56 @@ object Retrieval {
     * shared by [[qlDirichletScores]], [[qlTopKWand]]'s candidate and
     * forward-fetched hot branches, and [[ltrFeatures]]' `ql` column
     * (via the identical tree), so they cannot drift by construction —
-    * the [[contribExpr]] convention for the second scorer.
+    * the [[contribExpr]] convention for the second scorer. Rejects
+    * `mu <= 0` when the Column is built, before any job runs.
     */
-  private[operators] def qlContribExpr(mu: Double): Column =
+  private[operators] def qlContribExpr(mu: Double): Column = {
+    require(mu > 0, s"mu > 0: $mu")
     log(lit(1.0) +
       col("tf").cast("double") * col("__cTokens") /
         (lit(mu) * col("cf").cast("double")))
+  }
 
   /** The per-(query, doc, word) BM25 contribution over joined
     * `(tf, dl, idf, avgdl)` columns — the ONE arithmetic definition
     * every scoring path shares (unpruned, precomputed, WAND candidate
     * and forward-fetched hot branches), so they cannot drift by
-    * construction.
+    * construction. Rejects `k1 < 0` and `b ∉ [0,1]` when the Column
+    * is built, before any job runs: the WAND bounds need the length
+    * factor `k1·(1 − b + b·dl/avgdl)` non-negative for every dl.
     */
-  private[operators] def contribExpr(k1: Double, b: Double): Column =
+  private[operators] def contribExpr(k1: Double, b: Double): Column = {
+    require(k1 >= 0 && b >= 0 && b <= 1, s"k1 >= 0, b in [0,1]: $k1, $b")
     col("idf") *
       (col("tf").cast("double") * (lit(k1) + lit(1.0))) /
       (col("tf").cast("double") + lit(k1) *
         (lit(1.0) - lit(b) +
           lit(b) * col("dl").cast("double") / col("avgdl")))
+  }
 
-  /** Per-(query, doc, word) BM25 contributions from a posting join of
-    * `tf` with an [[enrichedQueryTerms]] table.
+  /** BM25 contribution rows `(queryId, docId, word, __c)` of a posting
+    * ⋈ [[bm25TermTable]] row: `weight · ` [[contribExpr]].
+    */
+  private[operators] def bm25ContribCols(k1: Double, b: Double): Seq[Column] =
+    Seq(col("queryId"), col("docId"), col("word"),
+      (col("weight") * contribExpr(k1, b)).as("__c"))
+
+  /** QL contribution rows `(queryId, docId, word, __c, dl, __nq)` of a
+    * posting ⋈ [[qlTermTable]] row: `weight · ` [[qlContribExpr]]
+    * plus the `dl` and `|q|` riders [[qlScoreFold]] needs.
+    */
+  private[operators] def qlContribCols(mu: Double): Seq[Column] =
+    Seq(col("queryId"), col("docId"), col("word"),
+      (col("weight") * qlContribExpr(mu)).as("__c"), col("dl"),
+      col("__nq"))
+
+  /** Contribution rows (`contribCols`, e.g. [[bm25ContribCols]]) from
+    * the posting join of `tf` with a [[bm25TermTable]] or
+    * [[qlTermTable]];
+    * `probeFilter` lands on the joined rows before the projection (the
+    * federated (queryId, shard) semi-join).
     *
-    * The enriched table is query-batch-sized BY CONTRACT, so it is
+    * The term table is query-batch-sized BY CONTRACT, so it is
     * the explicit broadcast side (r20, guide §3.1): the planner's
     * size estimates INVERTED this join at bench scale — it broadcast
     * the checkpointed INDEX and streamed the one-split query scan, so
@@ -1483,11 +1476,12 @@ object Retrieval {
     * is never broadcastable — and it lets the posting scan stream at
     * the layout's bucket parallelism at every scale.
     */
-  private[operators] def postingContribs(tf: DataFrame, enriched: DataFrame,
-                              k1: Double, b: Double): DataFrame =
-    tf.join(broadcast(enriched), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        contribExpr(k1, b).as("__c"))
+  private[operators] def postingContribs(tf: DataFrame, terms: DataFrame,
+                                         contribCols: Seq[Column],
+                                         probeFilter: DataFrame => DataFrame
+                                           = identity): DataFrame =
+    probeFilter(tf.join(broadcast(terms), Seq("word")))
+      .select(contribCols: _*)
 
   /** Collapse `(queryId, docId, word, __c)` contributions to scores.
     * Word-keyed [[OrderedFold.sum]] (the q98/DSIR convention): the
@@ -1846,8 +1840,8 @@ object Retrieval {
     val cands = phraseMatches(posts, queries, qidCol, qtextCol,
       maxAnchorOcc).select("queryId", "docId")
     scoreWithinCandidates(forward.getOrElse(tf),
-      enrichedQueryTerms(dfTab, stats, queries, qidCol, qtextCol),
-      cands, k, k1, b, bitExact)
+      bm25TermTable(unitQueryTerms(queries, qidCol, qtextCol), dfTab,
+        stats), cands, k, k1, b, bitExact)
   }
 
   /** CONJUNCTIVE (match-ALL-terms) BM25 top-k — the boolean-AND query
@@ -1876,11 +1870,11 @@ object Retrieval {
                           bitExact: Boolean = true,
                           forward: Option[DataFrame] = None): DataFrame = {
     require(k > 0, s"k > 0: $k")
-    val enriched = enrichedQueryTerms(dfTab, stats, queries, qidCol,
-      qtextCol)
+    val enriched = bm25TermTable(unitQueryTerms(queries, qidCol, qtextCol),
+      dfTab, stats)
     // |q| over ALL normalized distinct terms (not just corpus-present
     // ones): an absent term must fail the conjunction, so the count
-    // comes from the tokenizer, before the df join inside enrichment
+    // comes from the tokenizer, before the term table's df join
     val qn = queryTerms(queries, qidCol, qtextCol)
       .groupBy("queryId").agg(count(lit(1)).as("__nq"))
     val cands = tf.join(enriched.select("queryId", "word"), Seq("word"))
@@ -1909,8 +1903,7 @@ object Retrieval {
                                     bitExact: Boolean): DataFrame = {
     val contrib = cands.join(fwd, Seq("docId"))
       .join(enriched, Seq("queryId", "word"))
-      .select(col("queryId"), col("docId"), col("word"),
-        contribExpr(k1, b).as("__c"))
+      .select(bm25ContribCols(k1, b): _*)
     bm25TopK(scoreFold(contrib, bitExact), k)
   }
 
@@ -2106,12 +2099,9 @@ object Retrieval {
                    forward: Option[DataFrame] = None,
                    dfStats: Option[(DataFrame, DataFrame)] = None,
                    impact: Option[DataFrame] = None)
-      : DataFrame = {
-    val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    wandTopK(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
-      impact), unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
-      hotDf)
-  }
+      : DataFrame =
+    bm25TopKWandWeighted(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
+      hotDf, k1, b, bitExact, forward, dfStats, impact)
 
   /** [[bm25TopKWand]] under a WEIGHTED query-term table
     * `(queryId, word, weight)` (an [[rm3ExpandedTerms]] output) —
@@ -2142,7 +2132,8 @@ object Retrieval {
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
     wandTopK(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
-      impact), enrichedWeightedTerms(dfTab, stats, termWeights), k, hotDf)
+      impact), bm25TermTable(termWeights, dfTab, stats), k,
+      hotDf)
   }
 
   /** The WAND decision table itself (the q173 convention: gate the
@@ -2165,12 +2156,9 @@ object Retrieval {
                     forward: Option[DataFrame] = None,
                     dfStats: Option[(DataFrame, DataFrame)] = None,
                     impact: Option[DataFrame] = None)
-      : DataFrame = {
-    val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    wandStats(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
-      impact), unitEnriched(dfTab, stats, queries, qidCol, qtextCol), k,
-      hotDf)
-  }
+      : DataFrame =
+    bm25WandWeightedStats(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
+      hotDf, k1, b, bitExact, forward, dfStats, impact)
 
   /** [[bm25WandStats]] for the WEIGHTED operator — the q192 gate's
     * readout: identical columns, identical routing predicate, shared
@@ -2188,7 +2176,8 @@ object Retrieval {
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
     wandStats(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
-      impact), enrichedWeightedTerms(dfTab, stats, termWeights), k, hotDf)
+      impact), bm25TermTable(termWeights, dfTab, stats), k,
+      hotDf)
   }
 
   /** What one scorer supplies to the shared WAND plan ([[wandTopK]],
@@ -2369,19 +2358,6 @@ object Retrieval {
       : (DataFrame, DataFrame) =
     dfStats.getOrElse((dfTable(tf), corpusStats(tf)))
 
-  /** [[enrichedQueryTerms]] under the WAND weight contract: the unit
-    * weight rides as an explicit `1.0` column, so the shared core's
-    * weighted bound (`Σ weight·idf`) and contributions
-    * (`weight · bm25`) reduce BITWISE to the unit forms (IEEE
-    * `1.0 · x == x`) — q182/q187 stay bitwise-stable under the shared
-    * machinery.
-    */
-  private[operators] def unitEnriched(dfTab: DataFrame, stats: DataFrame,
-                           queries: DataFrame, qidCol: String,
-                           qtextCol: String): DataFrame =
-    enrichedQueryTerms(dfTab, stats, queries, qidCol, qtextCol)
-      .withColumn("weight", lit(1.0))
-
   /** The posting-probe + forward-fetch [[WandScorer]] form shared by
     * BM25, QL and the federated probe: candidates surface through the
     * RARE posting lists, their hot contributions are fetched doc-wise
@@ -2389,23 +2365,22 @@ object Retrieval {
     * fallback complement probes the hot posting lists like the rare
     * ones. `probeFilter` lands on every posting probe before the
     * projection (the federated (queryId, shard) semi-join);
-    * `contribCols` projects a posting ⋈ enriched-term row to a
+    * `contribCols` projects a posting ⋈ query-term-table row to a
     * contribution row.
     */
   private abstract class PostingWandScorer(postings: DataFrame,
                                            forward: DataFrame,
+                                           contribCols: Seq[Column],
                                            probeFilter: DataFrame => DataFrame)
       extends WandScorer {
-    protected def contribCols: Seq[Column]
-    // the term tables are query-batch-sized by contract — explicit
-    // broadcast sides (the postingContribs rationale)
     private def probe(terms: DataFrame): DataFrame =
-      probeFilter(postings.join(broadcast(terms), Seq("word")))
-        .select(contribCols: _*)
+      postingContribs(postings, terms, contribCols, probeFilter)
     def candidates(enriched: DataFrame, rare: DataFrame,
                    hot: DataFrame): (DataFrame, DataFrame) = {
       val rareContrib = probe(rare)
       val candPairs = rareContrib.select("queryId", "docId").distinct()
+      // the hot term table is query-batch-sized by contract — the
+      // explicit broadcast side (the postingContribs rationale)
       val hotContrib = candPairs.join(forward, Seq("docId"))
         .join(broadcast(hot), Seq("queryId", "word"))
         .select(contribCols: _*)
@@ -2414,10 +2389,9 @@ object Retrieval {
     def hotContribs(hotTerms: DataFrame): DataFrame = probe(hotTerms)
   }
 
-  /** The BM25 [[WandScorer]] over an enriched WEIGHTED term table
-    * `(queryId, word, weight, avgdl, idf, df)` — unit weight rides as
-    * an explicit 1.0 ([[unitEnriched]]). Contributions are
-    * `weight · bm25` ([[contribExpr]]), folded by [[scoreFold]].
+  /** The BM25 [[WandScorer]] over a [[bm25TermTable]] (unit queries
+    * at weight 1.0). Contributions are [[bm25ContribCols]], folded by
+    * [[scoreFold]].
     *
     * The bound `Σ_hot weight·idf·(k1+1)` (derived at [[bm25TopKWand]])
     * holds only for `k1 ≥ 0` and `b ∈ [0,1]` (K > 0 for every dl) and
@@ -2451,12 +2425,9 @@ object Retrieval {
                                         bitExact: Boolean,
                                         impact: Option[DataFrame],
                                         probeFilter: DataFrame => DataFrame
-                                          = identity): WandScorer = {
-    require(k1 >= 0 && b >= 0 && b <= 1, s"k1 >= 0, b in [0,1]: $k1, $b")
-    new PostingWandScorer(postings, forward, probeFilter) {
-      protected def contribCols: Seq[Column] =
-        Seq(col("queryId"), col("docId"), col("word"),
-          (col("weight") * contribExpr(k1, b)).as("__c"))
+                                          = identity): WandScorer =
+    new PostingWandScorer(postings, forward, bm25ContribCols(k1, b),
+        probeFilter) {
       def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
         scoreFold(contrib, bitExact, shuffleFirst)
       def hotUb(hot: DataFrame): DataFrame = impact match {
@@ -2477,7 +2448,6 @@ object Retrieval {
               lit(1.0 + 1e-9)).as("__ub"))
       }
     }
-  }
 
   /** SCORE-EXACT pruned top-k for the QUERY-LIKELIHOOD Dirichlet
     * scorer — [[bm25TopKWand]]'s analog for the second classical
@@ -2536,13 +2506,9 @@ object Retrieval {
                  forward: Option[DataFrame] = None,
                  dfStats: Option[(DataFrame, DataFrame)] = None,
                  cf: Option[DataFrame] = None,
-                 impact: Option[DataFrame] = None): DataFrame = {
-    val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    val cfTab = cf.getOrElse(cfTable(tf))
-    wandTopK(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
-      qlUnitEnriched(cfTab, dfTab, stats, queries, qidCol, qtextCol), k,
-      hotDf)
-  }
+                 impact: Option[DataFrame] = None): DataFrame =
+    qlTopKWandWeighted(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
+      hotDf, mu, bitExact, forward, dfStats, cf, impact)
 
   /** [[qlTopKWand]] under a WEIGHTED query-term table
     * `(queryId, word, weight)` (an [[rm3ExpandedTermsQl]] output) —
@@ -2568,12 +2534,9 @@ object Retrieval {
                          forward: Option[DataFrame] = None,
                          dfStats: Option[(DataFrame, DataFrame)] = None,
                          cf: Option[DataFrame] = None,
-                         impact: Option[DataFrame] = None): DataFrame = {
-    val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    val cfTab = cf.getOrElse(cfTable(tf))
+                         impact: Option[DataFrame] = None): DataFrame =
     wandTopK(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
-      qlWeightedEnriched(cfTab, dfTab, stats, termWeights), k, hotDf)
-  }
+      qlWandTerms(tf, termWeights, dfStats, cf), k, hotDf)
 
   /** ROUTING-AWARE weighted QL top-k — the production default for the
     * LM-RM3 second pass: serve through [[qlTopKWandWeighted]] when
@@ -2592,12 +2555,9 @@ object Retrieval {
     * between; `minWandDocs` defaults to 20k (BASELINE.md round-18
     * records the decision).
     *
-    * The route consults |D| from the persisted `stats` table — ONE
-    * driver read of a one-row additive layout (never a corpus pass;
-    * the pre-r18 gate paid a full `distinct().count()` for the same
-    * number) — and `hotDf` defaults to the `|D|/10` convention off
-    * the same row. The unpruned branch never evaluates `impact`
-    * (plans are lazy), so callers pass the metadata unconditionally.
+    * The route is [[routedHotDf]] over the persisted `stats` table.
+    * The unpruned branch never evaluates `impact` (plans are lazy),
+    * so callers pass the metadata unconditionally.
     */
   def qlTopKWandWeightedRouted(tf: DataFrame, termWeights: DataFrame,
                                k: Int,
@@ -2613,62 +2573,39 @@ object Retrieval {
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
     val cfTab = cf.getOrElse(cfTable(tf))
+    routedHotDf(stats, minWandDocs, hotDf) match {
+      case None =>
+        // r20: an RM3 caller holding the materialized first pass
+        // ([[FirstPass]]) lets the unpruned branch reuse its original-
+        // term contributions — bitwise the same scores, the new
+        // expansion words pay the only posting join
+        bm25TopK(firstPass match {
+          case Some(fp) =>
+            qlScoresWeightedReusing(tf, cfTab, stats, termWeights, fp,
+              mu, bitExact)
+          case None =>
+            qlScoresWeighted(tf, cfTab, stats, termWeights, mu, bitExact)
+        }, k)
+      case Some(hd) =>
+        qlTopKWandWeighted(tf, termWeights, k, hd, mu, bitExact, forward,
+          Some((dfTab, stats)), Some(cfTab), impact)
+    }
+  }
+
+  /** The corpus-size route of the WAND family: WAND's two-phase plan
+    * costs a near-constant extra stage budget and wins by skipping hot
+    * posting volume, which grows with the corpus, so it pays only from
+    * `minWandDocs` documents (or passages) on. Returns the `hotDf` to
+    * prune with — `hotDf`, else the `|D|/10` convention — when |D|
+    * reaches `minWandDocs`, and None when the unpruned plan should
+    * serve. |D| is ONE `collect` of the persisted one-row `stats`
+    * layout, never a corpus pass.
+    */
+  private[operators] def routedHotDf(stats: DataFrame, minWandDocs: Long,
+                                     hotDf: Option[Long]): Option[Long] = {
     val nDocs = stats.select(col("n_docs").cast("long"))
       .collect()(0).getLong(0)
-    if (nDocs < minWandDocs)
-      // r20: an RM3 caller holding the materialized first pass
-      // ([[FirstPass]]) lets the unpruned branch reuse its original-
-      // term contributions — bitwise the same scores, the new
-      // expansion words pay the only posting join
-      bm25TopK(firstPass match {
-        case Some(fp) =>
-          qlScoresWeightedReusing(tf, cfTab, stats, termWeights, fp,
-            mu, bitExact)
-        case None =>
-          qlScoresWeighted(tf, cfTab, stats, termWeights, mu, bitExact)
-      }, k)
-    else
-      qlTopKWandWeighted(tf, termWeights, k,
-        hotDf.getOrElse(nDocs / 10), mu, bitExact, forward,
-        Some((dfTab, stats)), Some(cfTab), impact)
-  }
-
-  /** The UNIT-weight QL enriched table — query terms joined with
-    * cf/df + the corpus token count, `|q|` as the corpus-present
-    * count, and an explicit `1.0` weight so the shared core's
-    * weighted arithmetic reduces BITWISE to the unit forms (IEEE
-    * `1.0 · x == x` — the [[unitEnriched]] convention).
-    */
-  private def qlUnitEnriched(cfTab: DataFrame, dfTab: DataFrame,
-                             stats: DataFrame,
-                             queries: DataFrame, qidCol: String,
-                             qtextCol: String): DataFrame = {
-    val qTerms = queryTerms(queries, qidCol, qtextCol)
-      .join(cfTab, Seq("word"))
-      .join(dfTab, Seq("word"))
-      .crossJoin(broadcast(
-        stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    // |q| over corpus-present terms, the qlDirichletScores contract
-    // (cf and df tables index the same vocabulary, so the cf join
-    // alone fixes the count)
-    val qn = qTerms.groupBy("queryId").agg(count(lit(1)).as("__nq"))
-    qTerms.join(qn, Seq("queryId")).withColumn("weight", lit(1.0))
-  }
-
-  /** The WEIGHTED QL enriched table — a `(queryId, word, weight)`
-    * term table joined with cf/df + the corpus token count, the
-    * normalizer mass `Σ_present weight` from [[weightedQueryMass]]
-    * (the [[qlScoresWeighted]] tree, so the core's candidate scores
-    * are bitwise the unpruned weighted pipeline).
-    */
-  private def qlWeightedEnriched(cfTab: DataFrame, dfTab: DataFrame,
-                                 stats: DataFrame,
-                                 termWeights: DataFrame): DataFrame = {
-    val qTerms = termWeights.join(cfTab, Seq("word"))
-      .join(dfTab, Seq("word"))
-      .crossJoin(broadcast(
-        stats.select(col("total_dl").cast("double").as("__cTokens"))))
-    qTerms.join(weightedQueryMass(qTerms), Seq("queryId"))
+    if (nDocs < minWandDocs) None else Some(hotDf.getOrElse(nDocs / 10))
   }
 
   /** The QL WAND decision table (the q187/q205 convention: gate the
@@ -2687,13 +2624,9 @@ object Retrieval {
                   forward: Option[DataFrame] = None,
                   dfStats: Option[(DataFrame, DataFrame)] = None,
                   cf: Option[DataFrame] = None,
-                  impact: Option[DataFrame] = None): DataFrame = {
-    val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    val cfTab = cf.getOrElse(cfTable(tf))
-    wandStats(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
-      qlUnitEnriched(cfTab, dfTab, stats, queries, qidCol, qtextCol), k,
-      hotDf)
-  }
+                  impact: Option[DataFrame] = None): DataFrame =
+    qlWandWeightedStats(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
+      hotDf, mu, bitExact, forward, dfStats, cf, impact)
 
   /** [[qlWandStats]] for the WEIGHTED operator — identical columns,
     * identical routing predicate, shared [[qlWandScorer]] internals
@@ -2707,11 +2640,19 @@ object Retrieval {
                           forward: Option[DataFrame] = None,
                           dfStats: Option[(DataFrame, DataFrame)] = None,
                           cf: Option[DataFrame] = None,
-                          impact: Option[DataFrame] = None): DataFrame = {
-    val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    val cfTab = cf.getOrElse(cfTable(tf))
+                          impact: Option[DataFrame] = None): DataFrame =
     wandStats(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
-      qlWeightedEnriched(cfTab, dfTab, stats, termWeights), k, hotDf)
+      qlWandTerms(tf, termWeights, dfStats, cf), k, hotDf)
+
+  /** The QL WAND [[qlTermTable]], with the df for the rare/hot split,
+    * the cf/|C|/`__nq` for the contributions and the bound.
+    */
+  private def qlWandTerms(tf: DataFrame, termWeights: DataFrame,
+                          dfStats: Option[(DataFrame, DataFrame)],
+                          cf: Option[DataFrame]): DataFrame = {
+    val (dfTab, stats) = resolvedDfStats(tf, dfStats)
+    qlTermTable(termWeights.join(dfTab, Seq("word")),
+      cf.getOrElse(cfTable(tf)), stats)
   }
 
   /** The QL Dirichlet [[WandScorer]] — the posting-probe form over the
@@ -2723,13 +2664,8 @@ object Retrieval {
     */
   private def qlWandScorer(tf: DataFrame, forward: DataFrame, mu: Double,
                            bitExact: Boolean,
-                           impact: Option[DataFrame]): WandScorer = {
-    require(mu > 0, s"mu > 0: $mu")
-    new PostingWandScorer(tf, forward, identity) {
-      protected def contribCols: Seq[Column] =
-        Seq(col("queryId"), col("docId"), col("word"),
-          (col("weight") * qlContribExpr(mu)).as("__c"), col("dl"),
-          col("__nq"))
+                           impact: Option[DataFrame]): WandScorer =
+    new PostingWandScorer(tf, forward, qlContribCols(mu), identity) {
       def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
         qlScoreFold(contrib, mu, bitExact, shuffleFirst)
       def hotUb(hot: DataFrame): DataFrame = {
@@ -2767,7 +2703,6 @@ object Retrieval {
                 lit(1.0 - 1e-9)).as("__ub"))
       }
     }
-  }
 
   /** Faceted-search counts — the "facet sidebar" aggregation of a
     * search stack: for each query, the distribution of its MATCHED
@@ -3064,17 +2999,13 @@ object Retrieval {
                   queries: DataFrame, qidCol: String, qtextCol: String,
                   k1: Double = 1.2, b: Double = 0.75,
                   mu: Double = 2000.0): DataFrame = {
-    require(mu > 0, s"mu > 0: $mu")
-    val (enriched, nqPresent, nqFull) =
-      ltrEnriched(dfTab, cfTab, stats, queries, qidCol, qtextCol)
+    val qt = unitQueryTerms(queries, qidCol, qtextCol)
     // query-batch-sized build side by contract (the postingContribs
     // broadcast rationale)
-    ltrAssemble(tf.join(broadcast(enriched), Seq("word"))
-      .select(col("queryId"), col("docId"), col("word"), col("dl"),
-        contribExpr(k1, b).as("__cb"),
-        qlContribExpr(mu).as("__cq"),
-        col("idf")),
-      nqPresent, nqFull, mu)
+    val (present, mass) =
+      qlTermParts(bm25TermTable(qt, dfTab, stats), cfTab, stats)
+    ltrAssemble(tf.join(broadcast(present), Seq("word")), mass, qt, k1, b,
+      mu)
   }
 
   /** [[ltrFeatures]] restricted to a CANDIDATE pair table — the
@@ -3099,10 +3030,9 @@ object Retrieval {
                           k1: Double = 1.2, b: Double = 0.75,
                           mu: Double = 2000.0,
                           forward: Option[DataFrame] = None): DataFrame = {
-    require(mu > 0, s"mu > 0: $mu")
-    val (enriched, nqPresent, nqFull) =
-      ltrEnriched(dfTab, cfTab, stats, queries, qidCol, qtextCol)
-    val fwd = forward.getOrElse(tf)
+    val qt = unitQueryTerms(queries, qidCol, qtextCol)
+    val (present, mass) =
+      qlTermParts(bm25TermTable(qt, dfTab, stats), cfTab, stats)
     // defensive collapse (the rrfFuse/facetCounts convention): a
     // duplicate (queryId, docId) row would fan out through the
     // forward join and double every per-term struct in the fold —
@@ -3111,51 +3041,26 @@ object Retrieval {
     // the forward fetch (the postingContribs rationale)
     ltrAssemble(
       broadcast(pairs.select(col("queryId"), col("docId")).distinct())
-      .join(fwd, Seq("docId"))
-      .join(broadcast(enriched), Seq("queryId", "word"))
-      .select(col("queryId"), col("docId"), col("word"), col("dl"),
-        contribExpr(k1, b).as("__cb"),
-        qlContribExpr(mu).as("__cq"),
-        col("idf")),
-      nqPresent, nqFull, mu)
+      .join(forward.getOrElse(tf), Seq("docId"))
+      .join(broadcast(present), Seq("queryId", "word")), mass, qt, k1, b,
+      mu)
   }
 
-  /** The enriched query-term table + both |q| counts shared by the
-    * [[ltrFeatures]] family — one definition, so the full-match and
-    * pair-restricted forms cannot drift.
+  /** The feature fold shared by the [[ltrFeatures]] family over
+    * posting ⋈ [[qlTermParts]] rows: one word-sorted collect per
+    * (query, doc) carrying all three per-term values, the QL
+    * normalizer added once off the query `mass` joined after the fold,
+    * coverage off the FULL term count of `qt` — identical trees on
+    * both input shapes.
     */
-  private def ltrEnriched(dfTab: DataFrame, cfTab: DataFrame,
-                          stats: DataFrame,
-                          queries: DataFrame, qidCol: String,
-                          qtextCol: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val statsD = statsDouble(stats)
-    val ctok = stats.select(col("total_dl").cast("double").as("__cTokens"))
-    val qt = queryTerms(queries, qidCol, qtextCol)
-    val enriched = qt
-      .join(dfTab, Seq("word"))
-      .join(cfTab, Seq("word"))
-      .crossJoin(broadcast(statsD))
-      .crossJoin(broadcast(ctok))
-      .select(col("queryId"), col("word"), col("avgdl"), col("__cTokens"),
-        log(lit(1.0) +
-          (col("n_docs") - col("df").cast("double") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5))).as("idf"),
-        col("cf"))
-    val nqPresent = enriched.groupBy("queryId")
-      .agg(count(lit(1)).as("__nqp"))
+  private def ltrAssemble(joined: DataFrame, mass: DataFrame,
+                          qt: DataFrame, k1: Double,
+                          b: Double, mu: Double): DataFrame = {
     val nqFull = qt.groupBy("queryId").agg(count(lit(1)).as("__nqf"))
-    (enriched, nqPresent, nqFull)
-  }
-
-  /** The feature fold shared by the [[ltrFeatures]] family: one
-    * word-sorted collect per (query, doc) carrying all three
-    * per-term values, the QL normalizer added once, coverage off the
-    * FULL term count — identical trees on both input shapes.
-    */
-  private def ltrAssemble(rows: DataFrame, nqPresent: DataFrame,
-                          nqFull: DataFrame, mu: Double): DataFrame = {
-    rows
+    joined
+      .select(col("queryId"), col("docId"), col("word"), col("dl"),
+        contribExpr(k1, b).as("__cb"), qlContribExpr(mu).as("__cq"),
+        col("idf"))
       // group-key repartition before the collect — the scoreFold r20
       // rationale
       .repartition(col("queryId"), col("docId"))
@@ -3170,10 +3075,10 @@ object Retrieval {
           (a, x) => a + x.getField("__cq")).as("__qls"),
         aggregate(col("__xs"), lit(0.0),
           (a, x) => a + x.getField("idf")).as("sum_idf"))
-      .join(nqPresent, Seq("queryId"))
+      .join(mass, Seq("queryId"))
       .join(nqFull, Seq("queryId"))
       .select(col("queryId"), col("docId"), col("bm25"),
-        (col("__qls") + col("__nqp").cast("double") *
+        (col("__qls") + col("__nq") *
           log(lit(mu) / (col("dl").cast("double") + lit(mu)))).as("ql"),
         col("n_matched"),
         (col("n_matched").cast("double") / col("__nqf").cast("double"))
