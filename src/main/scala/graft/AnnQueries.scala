@@ -365,7 +365,7 @@ private[graft] object AnnQueries {
     "q137_centroid_classify" -> ((s, dir) => {
       val embs = t(s, dir, "embeddings")
       val cents = graft.operators.Classify.labelCentroids(
-        embs, "vec_id", "embedding", "label", bitExact = true)
+        embs, "vec_id", "embedding", "label")
       graft.operators.Classify.centroidTopLabel(
         embs.filter(col("vec_id") < 20), "vec_id", "embedding",
         cents, "label")
@@ -441,7 +441,7 @@ private[graft] object AnnQueries {
     "q138_centroid_classify_lit" -> ((s, dir) => {
       val embs = t(s, dir, "embeddings")
       val cents = graft.operators.Classify.labelCentroids(
-        embs, "vec_id", "embedding", "label", bitExact = true)
+        embs, "vec_id", "embedding", "label")
       graft.operators.Classify.centroidTopLabelLit(
         embs.filter(col("vec_id") < 20), "vec_id", "embedding",
         cents, "label")

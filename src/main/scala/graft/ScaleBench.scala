@@ -390,8 +390,6 @@ object ScaleBench {
       }
       println(f"[scalebench] bm25_index_write_once: ${
         (System.nanoTime() - tB) / 1e9}%.2f s")
-      // bitExact = false throughout: the map-side-combined scale fold
-      // (the list-buffering exact form measured OOM at batch scale)
       def bm25Queries: DataFrame = spark.range(50000)
         .filter(col("id") % 499 === 0)
         .select(col("id").as("query_id"),
@@ -402,15 +400,14 @@ object ScaleBench {
         time(s"bm25_topk_10x $round") {
           println("  topk_rows=" + graft.operators.Retrieval.bm25TopK(
             graft.operators.Retrieval.bm25ScoresIndexed(
-              spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-              bitExact = false), 5)
+              spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text"), 5)
             .count())
         }
         time(s"bm25_topk_pruned_10x $round") {
           println("  topk_rows=" + graft.operators.Retrieval.bm25TopK(
             graft.operators.Retrieval.bm25ScoresIndexed(
               spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-              bitExact = false, maxDocFrequency = Some(5000L)), 5)
+              maxDocFrequency = Some(5000L)), 5)
             .count())
         }
         // SCORE-EXACT pruning at the same df cut: same answers as the
@@ -422,7 +419,7 @@ object ScaleBench {
         time(s"bm25_topk_wand_10x $round") {
           println("  topk_rows=" + graft.operators.Retrieval.bm25TopKWand(
             spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-            k = 5, hotDf = 5000L, bitExact = false,
+            k = 5, hotDf = 5000L,
             forward = Some(spark.table("sb_bm25_fwd")),
             dfStats = Some((spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"))))
@@ -436,7 +433,7 @@ object ScaleBench {
         time(s"bm25_topk_wand_impact_10x $round") {
           println("  topk_rows=" + graft.operators.Retrieval.bm25TopKWand(
             spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-            k = 5, hotDf = 5000L, bitExact = false,
+            k = 5, hotDf = 5000L,
             forward = Some(spark.table("sb_bm25_fwd")),
             dfStats = Some((spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"))),
@@ -454,7 +451,7 @@ object ScaleBench {
             graft.operators.Retrieval.bm25ScoresPrecomputed(
               spark.table("sb_bm25_champ"), spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"), bm25Queries,
-              "query_id", "text", bitExact = false), 5)
+              "query_id", "text"), 5)
             .count())
         }
         // TIERED serving on a LOW-FILL batch (q222's gate): the
@@ -473,7 +470,7 @@ object ScaleBench {
             .bm25TopKTiered(spark.table("sb_bm25_champ2"),
               spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"), bm25Queries,
-              "query_id", "text", k = 20, bitExact = false)
+              "query_id", "text", k = 20)
             .count())
         }
         time(s"bm25_tiered_lowfill_wand_10x $round") {
@@ -481,7 +478,7 @@ object ScaleBench {
             .bm25TopKTiered(spark.table("sb_bm25_champ2"),
               spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"), bm25Queries,
-              "query_id", "text", k = 20, bitExact = false,
+              "query_id", "text", k = 20,
               hotDf = Some(5000L),
               forward = Some(spark.table("sb_bm25_fwd")),
               impact = Some(spark.table("sb_bm25_imp")))
@@ -502,7 +499,7 @@ object ScaleBench {
                     (4 to 5).map(j =>
                       concat(zipfTok(lit(j), 140), lit("x"))): _*)
                   .as("text")),
-            "query_id", "text", k = 5, bitExact = false,
+            "query_id", "text", k = 5,
             vocabVariants = Some(spark.table("sb_bm25_var")))
             .count())
         }
@@ -527,7 +524,7 @@ object ScaleBench {
                     (4 to 5).map(j =>
                       concat(zipfTok(lit(j), 140), lit("xy"))): _*)
                   .as("text")),
-            "query_id", "text", k = 5, bitExact = false,
+            "query_id", "text", k = 5,
             vocabVariants = Some(var2), maxEdit = 2)
             .count())
         }
@@ -550,7 +547,7 @@ object ScaleBench {
                     (4 to 5).map(j =>
                       concat(zipfTok(lit(j), 140), lit("xy"))): _*)
                   .as("text")),
-            "query_id", "text", k = 5, bitExact = false,
+            "query_id", "text", k = 5,
             vocabVariants = Some(var2), maxEdit = 2,
             wandHotDf = Some(5000L),
             forward = Some(spark.table("sb_bm25_fwd")),
@@ -568,7 +565,7 @@ object ScaleBench {
           println("  topk_rows=" + graft.operators.Fuzzy.bm25TopKPrefix(
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), qs, k = 5,
-            maxExpansions = 50, bitExact = false)
+            maxExpansions = 50)
             .count())
         }
         time(s"bm25_prefix_wand_10x $round") {
@@ -578,7 +575,7 @@ object ScaleBench {
           println("  topk_rows=" + graft.operators.Fuzzy.bm25TopKPrefix(
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), qs, k = 5,
-            maxExpansions = 50, bitExact = false,
+            maxExpansions = 50,
             wandHotDf = Some(5000L),
             forward = Some(spark.table("sb_bm25_fwd")),
             impact = Some(spark.table("sb_bm25_imp")))
@@ -600,7 +597,7 @@ object ScaleBench {
           println("  topk_rows=" + graft.operators.Fuzzy.bm25TopKPrefix(
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), qs, k = 5,
-            maxExpansions = 50, bitExact = false)
+            maxExpansions = 50)
             .count())
         }
         time(s"bm25_prefix_tail_wand_10x $round") {
@@ -610,7 +607,7 @@ object ScaleBench {
           println("  topk_rows=" + graft.operators.Fuzzy.bm25TopKPrefix(
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), qs, k = 5,
-            maxExpansions = 50, bitExact = false,
+            maxExpansions = 50,
             wandHotDf = Some(5000L),
             forward = Some(spark.table("sb_bm25_fwd")),
             impact = Some(spark.table("sb_bm25_imp")))
@@ -715,7 +712,7 @@ object ScaleBench {
           println("  maxp_rows=" + Retrieval.bm25TopK(
             Retrieval.maxPassageScores(
               Retrieval.bm25ScoresIndexed(tf, bm25Queries,
-                "query_id", "text", bitExact = false,
+                "query_id", "text",
                 maxDocFrequency = Some(35000L)),
               pass.select("passageId", "docId")), 5)
             .count())
@@ -745,7 +742,7 @@ object ScaleBench {
             Passages.PassageLayout(spark.table("sb_pass_tf"),
               spark.table("sb_pass_df"), spark.table("sb_pass_stats"),
               spark.table("sb_pass_mem")),
-            bm25Queries, "query_id", "text", k = 5, bitExact = false,
+            bm25Queries, "query_id", "text", k = 5,
             maxDocFrequency = Some(35000L))
             .count())
         }
@@ -764,8 +761,7 @@ object ScaleBench {
               spark.table("sb_pass_mem"),
               forward = Some(spark.table("sb_pass_fwd")),
               impact = Some(spark.table("sb_pass_imp"))),
-            bm25Queries, "query_id", "text", k = 5, hotDf = 35000L,
-            bitExact = false)
+            bm25Queries, "query_id", "text", k = 5, hotDf = 35000L)
             .count())
         }
         // ...and the COMPACT arm folds a 5k-doc micro-batch into the
@@ -804,7 +800,7 @@ object ScaleBench {
           println("  bm25f_rows=" + Retrieval.bm25TopK(
             Retrieval.bm25fScores(ftf,
               Seq(("title", 2.0, 0.5), ("body", 1.0, 0.75)),
-              bm25Queries, "query_id", "text", bitExact = false), 5)
+              bm25Queries, "query_id", "text"), 5)
             .count())
         }
         // ...and the SCORE-EXACT pruned fielded path (q239/q240's
@@ -826,7 +822,6 @@ object ScaleBench {
           println("  bm25f_rows=" + Retrieval.bm25fTopKWand(ftf,
             Seq(("title", 2.0, 0.5), ("body", 1.0, 0.75)),
             bm25Queries, "query_id", "text", k = 5, hotDf = 5000L,
-            bitExact = false,
             impactF = Some(Retrieval.impactStatsFielded(ftf)))
             .count())
         }
@@ -838,7 +833,7 @@ object ScaleBench {
           println("  conj_rows=" + graft.operators.Retrieval
             .bm25TopKConjunctive(spark.table("sb_bm25_tf"),
               spark.table("sb_bm25_df"), spark.table("sb_bm25_stats"),
-              bm25Queries, "query_id", "text", k = 5, bitExact = false,
+              bm25Queries, "query_id", "text", k = 5,
               forward = Some(spark.table("sb_bm25_fwd")))
             .count())
         }
@@ -855,7 +850,7 @@ object ScaleBench {
             graft.operators.Retrieval.qlDirichletScores(
               spark.table("sb_bm25_tf"), spark.table("sb_bm25_cf"),
               spark.table("sb_bm25_stats"), bm25Queries,
-              "query_id", "text", bitExact = false), 5)
+              "query_id", "text"), 5)
             .count())
         }
         // ...and the SCORE-EXACT pruned QL path (q223's gate): the
@@ -867,7 +862,7 @@ object ScaleBench {
         time(s"ql_wand_impact_10x $round") {
           println("  qlw_rows=" + graft.operators.Retrieval.qlTopKWand(
             spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-            k = 5, hotDf = 5000L, bitExact = false,
+            k = 5, hotDf = 5000L,
             forward = Some(spark.table("sb_bm25_fwd")),
             dfStats = Some((spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"))),
@@ -884,7 +879,7 @@ object ScaleBench {
           val top5 = graft.operators.Retrieval.bm25TopK(
             graft.operators.Retrieval.bm25ScoresIndexed(
               spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-              bitExact = false, maxDocFrequency = Some(5000L)), 5)
+              maxDocFrequency = Some(5000L)), 5)
             .select(col("queryId"), col("docId")).localCheckpoint()
           println("  snippet_rows=" + graft.operators.Retrieval
             .snippetWindows(spark.table("sb_bm25_pos"), bm25Queries,
@@ -899,7 +894,7 @@ object ScaleBench {
           val top5 = graft.operators.Retrieval.bm25TopK(
             graft.operators.Retrieval.bm25ScoresIndexed(
               spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-              bitExact = false, maxDocFrequency = Some(5000L)), 5)
+              maxDocFrequency = Some(5000L)), 5)
             .select(col("queryId"), col("docId")).localCheckpoint()
           val wins = graft.operators.Retrieval
             .snippetWindows(spark.table("sb_bm25_pos"), bm25Queries,
@@ -921,7 +916,7 @@ object ScaleBench {
               spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"), bm25Queries,
               "query_id", "text",
-              bitExact = false, maxDocFrequency = Some(5000L)), 5)
+              maxDocFrequency = Some(5000L)), 5)
             .select(col("queryId"), col("docId")).localCheckpoint()
           println("  prox_rows=" + graft.operators.Retrieval
             .proximityFeatures(spark.table("sb_bm25_pos"), bm25Queries,
@@ -939,7 +934,7 @@ object ScaleBench {
           import graft.operators.{Ltr, Retrieval}
           val top20 = Retrieval.bm25TopKWand(
             spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-            k = 20, hotDf = 5000L, bitExact = false,
+            k = 20, hotDf = 5000L,
             forward = Some(spark.table("sb_bm25_fwd")),
             dfStats = Some((spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"))),
@@ -1018,8 +1013,7 @@ object ScaleBench {
             .localCheckpoint()
           println("  fed_rows=" + Federation.coriTopK(shardTf, sdf,
             scw, spark.table("sb_bm25_df"), spark.table("sb_bm25_stats"),
-            bm25Queries, "query_id", "text", k = 5, nProbe = 4,
-            bitExact = false)
+            bm25Queries, "query_id", "text", k = 5, nProbe = 4)
             .count())
         }
         // the same probe over the PERSISTED shard-partitioned layout:
@@ -1048,8 +1042,7 @@ object ScaleBench {
             .localCheckpoint()
           println("  fed_rows=" + Federation.coriTopK(shardTf, sdf,
             scw, spark.table("sb_bm25_df"), spark.table("sb_bm25_stats"),
-            bm25Queries, "query_id", "text", k = 5, nProbe = 4,
-            bitExact = false)
+            bm25Queries, "query_id", "text", k = 5, nProbe = 4)
             .count())
         }
         // SCORE-EXACT federated WAND (q248's gate): the same 4-of-16
@@ -1084,7 +1077,7 @@ object ScaleBench {
           println("  fed_rows=" + Federation.coriTopKWand(shardTf, sdf,
             scw, spark.table("sb_bm25_df"), spark.table("sb_bm25_stats"),
             bm25Queries, "query_id", "text", k = 5, nProbe = 4,
-            hotDf = 5000L, bitExact = false,
+            hotDf = 5000L,
             forward = Some(spark.table("sb_bm25_fwd")),
             impact = Some(spark.table("sb_bm25_imp")))
             .count())
@@ -1109,8 +1102,7 @@ object ScaleBench {
             .localCheckpoint()
           println("  fed_rows=" + Federation.coriTopKQl(shardTf, sdf,
             scw, spark.table("sb_bm25_cf"), spark.table("sb_bm25_stats"),
-            bm25Queries, "query_id", "text", k = 5, nProbe = 4,
-            bitExact = false)
+            bm25Queries, "query_id", "text", k = 5, nProbe = 4)
             .count())
         }
         time(s"federated_all_shards_10x $round") {
@@ -1130,8 +1122,7 @@ object ScaleBench {
             .localCheckpoint()
           println("  fed_rows=" + Federation.coriTopK(shardTf, sdf,
             scw, spark.table("sb_bm25_df"), spark.table("sb_bm25_stats"),
-            bm25Queries, "query_id", "text", k = 5, nProbe = 16,
-            bitExact = false)
+            bm25Queries, "query_id", "text", k = 5, nProbe = 16)
             .count())
         }
         // the steady-state ingest loop (StreamingSpec's foreachBatch
@@ -1162,7 +1153,7 @@ object ScaleBench {
               Retrieval.positionalPostings(batch, "doc_id", "text"))
             probed += Retrieval.bm25TopK(
               Retrieval.bm25ScoresPrecomputed(tfC, dfC, stC,
-                bm25Queries, "query_id", "text", bitExact = false), 5)
+                bm25Queries, "query_id", "text"), 5)
               .count()
           }
           val phrases = spark.range(50000).filter(col("id") % 4999 === 0)
@@ -1240,23 +1231,22 @@ object ScaleBench {
             .bm25TopKPhrase(spark.table("sb_bm25_tf"),
               spark.table("sb_bm25_df"), spark.table("sb_bm25_stats"),
               spark.table("sb_bm25_pos"), phrases, "query_id", "text",
-              k = 5, bitExact = false,
+              k = 5,
               forward = Some(spark.table("sb_bm25_fwd")))
             .count())
         }
         // the RM3 composition at 50k (score -> feedback -> expand ->
-        // weighted rescore), persisted stats, scale fold
+        // weighted rescore), persisted stats
         time(s"rm3_rescore_10x $round") {
           val exp = graft.operators.Retrieval.rm3ExpandedTerms(
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), bm25Queries,
-            "query_id", "text", k = 10, m = 10, lambda = 0.5,
-            bitExact = false)
+            "query_id", "text", k = 10, m = 10, lambda = 0.5)
             .localCheckpoint()
           println("  rescored=" + graft.operators.Retrieval.bm25TopK(
             graft.operators.Retrieval.bm25ScoresWeighted(
               spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
-              spark.table("sb_bm25_stats"), exp, bitExact = false), 5)
+              spark.table("sb_bm25_stats"), exp), 5)
             .count())
         }
         // the SCORE-EXACT pruned composition (q191's gate): both
@@ -1271,13 +1261,12 @@ object ScaleBench {
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), bm25Queries,
             "query_id", "text", k = 10, m = 10, lambda = 0.5,
-            bitExact = false, wandHotDf = Some(5000L),
+            wandHotDf = Some(5000L),
             forward = Some(spark.table("sb_bm25_fwd")))
             .localCheckpoint()
           println("  rescored=" + graft.operators.Retrieval
             .bm25TopKWandWeighted(
               spark.table("sb_bm25_tf"), exp, k = 5, hotDf = 5000L,
-              bitExact = false,
               forward = Some(spark.table("sb_bm25_fwd")),
               dfStats = Some((spark.table("sb_bm25_df"),
                 spark.table("sb_bm25_stats"))))
@@ -1292,14 +1281,13 @@ object ScaleBench {
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), bm25Queries,
             "query_id", "text", k = 10, m = 10, lambda = 0.5,
-            bitExact = false, wandHotDf = Some(5000L),
+            wandHotDf = Some(5000L),
             forward = Some(spark.table("sb_bm25_fwd")),
             wandImpact = Some(imp))
             .localCheckpoint()
           println("  rescored=" + graft.operators.Retrieval
             .bm25TopKWandWeighted(
               spark.table("sb_bm25_tf"), exp, k = 5, hotDf = 5000L,
-              bitExact = false,
               forward = Some(spark.table("sb_bm25_fwd")),
               dfStats = Some((spark.table("sb_bm25_df"),
                 spark.table("sb_bm25_stats"))),
@@ -1323,7 +1311,7 @@ object ScaleBench {
             spark.table("sb_bm25_stats"), spark.table("sb_bm25_df"),
             bm25Queries, "query_id", "text",
             k = 10, m = 10, lambda = 0.5,
-            bitExact = false, maxFeedbackDf = Some(5000L),
+            maxFeedbackDf = Some(5000L),
             wandHotDf = Some(5000L),
             forward = Some(spark.table("sb_bm25_fwd")),
             wandImpact = Some(imp))
@@ -1331,7 +1319,6 @@ object ScaleBench {
           println("  ql_rescored=" + graft.operators.Retrieval
             .qlTopKWandWeighted(
               spark.table("sb_bm25_tf"), exp, k = 5, hotDf = 5000L,
-              bitExact = false,
               forward = Some(spark.table("sb_bm25_fwd")),
               dfStats = Some((spark.table("sb_bm25_df"),
                 spark.table("sb_bm25_stats"))),
@@ -1352,7 +1339,7 @@ object ScaleBench {
             spark.table("sb_bm25_stats"), spark.table("sb_bm25_df"),
             bm25Queries, "query_id", "text",
             k = 10, m = 10, lambda = 0.5,
-            bitExact = false, maxFeedbackDf = Some(5000L),
+            maxFeedbackDf = Some(5000L),
             wandHotDf = Some(5000L),
             forward = Some(spark.table("sb_bm25_fwd")),
             wandImpact = Some(imp))
@@ -1360,7 +1347,7 @@ object ScaleBench {
           println("  ql_rescored=" + graft.operators.Retrieval
             .qlTopKWandWeightedRouted(
               spark.table("sb_bm25_tf"), exp, k = 5,
-              hotDf = Some(5000L), bitExact = false,
+              hotDf = Some(5000L),
               forward = Some(spark.table("sb_bm25_fwd")),
               dfStats = Some((spark.table("sb_bm25_df"),
                 spark.table("sb_bm25_stats"))),
@@ -1377,7 +1364,7 @@ object ScaleBench {
           import graft.operators.{Ltr, Retrieval}
           val cands = Retrieval.bm25TopKWand(
             spark.table("sb_bm25_tf"), bm25Queries, "query_id", "text",
-            k = 20, hotDf = 5000L, bitExact = false,
+            k = 20, hotDf = 5000L,
             forward = Some(spark.table("sb_bm25_fwd")),
             dfStats = Some((spark.table("sb_bm25_df"),
               spark.table("sb_bm25_stats"))),
@@ -1407,13 +1394,13 @@ object ScaleBench {
             spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
             spark.table("sb_bm25_stats"), bm25Queries,
             "query_id", "text", k = 10, m = 10, lambda = 0.5,
-            bitExact = false, maxFeedbackDf = Some(5000L),
+            maxFeedbackDf = Some(5000L),
             firstPassMaxDf = Some(5000L))
             .localCheckpoint()
           println("  rescored=" + graft.operators.Retrieval.bm25TopK(
             graft.operators.Retrieval.bm25ScoresWeighted(
               spark.table("sb_bm25_tf"), spark.table("sb_bm25_df"),
-              spark.table("sb_bm25_stats"), exp, bitExact = false,
+              spark.table("sb_bm25_stats"), exp,
               maxDocFrequency = Some(5000L)), 5)
             .count())
         }
@@ -1644,7 +1631,7 @@ object ScaleBench {
     for (round <- Seq("cold", "warm")) {
       time(s"centroid_classify_lit $round") {
         val cents = graft.operators.Classify.labelCentroids(
-          embs, "vec_id", "embedding", "label", bitExact = false)
+          embs, "vec_id", "embedding", "label")
         graft.operators.Classify.centroidTopLabelLit(
           embs, "vec_id", "embedding", cents, "label")
           .write.format("noop").mode("overwrite").save()

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Ad-hoc profiling entry point (not part of the driver contract):
   * `runMain graft.Scratch q20_jac_doc_sizes [sfDir]` times one fixture
-  * query cold + warm through the same noop sink Bench uses and prints
-  * its final adaptive plan.
+  * query (a registry name, or a prefix that selects one) cold + warm
+  * through the same noop sink Bench uses and prints its final adaptive
+  * plan.
   */
 object Scratch {
   def time[A](label: String)(f: => A): A = {
@@ -82,7 +83,7 @@ object Scratch {
         }
         graft.operators.Ltr.ltrRerank(feats, m, 5)
       }
-      else SparkEntry.queries(name)
+      else SparkEntry.selectOne(name)
     val warmRuns = args.lift(2).map(_.toInt).getOrElse(1)
     time(s"$name cold")(exec(q(spark, dir)))
     // bare 'warm' for the default single run — the r01+ baseline

@@ -67,6 +67,18 @@ object SparkEntry {
       hits
     }.distinctBy(_._1)
 
+  /** The one entry `name` selects: the registry name itself, else the
+    * only entry it prefixes (`q219` for `q219_ltr_features`). A name
+    * that selects nothing or several entries fails, listing them.
+    */
+  def selectOne(name: String): (SparkSession, String) => DataFrame =
+    queries.getOrElse(name, select(Seq(name)).toSeq.sortBy(_._1) match {
+      case Seq((_, fn)) => fn
+      case hits => throw new IllegalArgumentException(
+        s"$name selects ${hits.size} queries, not one: " +
+          hits.map(_._1).mkString("[", ", ", "]"))
+    })
+
   /** The `local[n]` session the command-line mains run on (Verify,
     * Bench, PlanDump, Scratch, ScaleBench, ScaleFixture): `n` cores and
     * `n` shuffle partitions with `n = SPARK_GRAFT_CPUS` (default 32),

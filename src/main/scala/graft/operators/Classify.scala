@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, OrderedFold}
+import graft.functions.GraftFunctions
 
 /** Label classification over embedding columns — the label-propagation /
   * weak-supervision step of an embedding-curated corpus (predict labels
@@ -62,60 +62,37 @@ object Classify {
   /** Per-label mean embedding — the Rocchio centroid model,
     * `(label, centroid array<double>, n)`, model-sized (|labels|·d).
     *
-    * `bitExact = true` (the oracle-gated form) fixes the float
-    * accumulation tree by VALUE exactly like [[Pca.covariance]]: each
-    * label's vectors fold element-wise inside their `id % nBlocks`
-    * block in id order, block sums fold in block order — the
-    * deterministic two-level tree the DuckDB oracle replays.
-    *
-    * At 100 TB use `bitExact = false`: posexplode + per-(label, dim)
-    * codegen `sum` with map-side combine — each task carries |labels|·d
-    * running doubles and no collected lists — differing from the fold
-    * only in accumulation order (spec-pinned to 1e-9).
+    * The fold fixes the float accumulation tree by VALUE exactly
+    * like [[Pca.covariance]]: each label's vectors fold element-wise
+    * inside their `id % nBlocks` block in id order, block sums fold
+    * in block order — the deterministic two-level tree the DuckDB
+    * oracle replays.
     *
     * Vectors containing a null ELEMENT are dropped up front (below):
-    * the two forms would otherwise diverge beyond accumulation order —
-    * `sum()` skips null elements while the row still counts toward `n`,
-    * whereas the bit-exact fold nulls the whole dimension. RAGGED
-    * lengths (mixed dimensionality) remain a data-contract violation
-    * this operator does not detect: the codegen form averages each
-    * dimension over the rows that HAVE it while `n` counts all rows —
+    * the fold would otherwise null the whole dimension while the row
+    * still counts toward `n`. RAGGED lengths (mixed dimensionality)
+    * remain a data-contract violation this operator does not detect —
     * validate dimensionality upstream (the [[Knn]] dim-probe pattern).
     */
   def labelCentroids(embs: DataFrame, idCol: String, vecCol: String,
-                     labelCol: String, bitExact: Boolean = true,
-                     nBlocks: Int = 32): DataFrame = {
-    val base = embs
+                     labelCol: String, nBlocks: Int = 32): DataFrame =
+    embs
       .filter(col(idCol).isNotNull && col(vecCol).isNotNull &&
         col(labelCol).isNotNull &&
         !exists(col(vecCol), x => x.isNull))
       .select(col(idCol).as("__id"), col(labelCol).as("__lab"),
         transform(col(vecCol), x => x.cast("double")).as("__v"))
-    val summed =
-      if (bitExact) {
-        base
-          .withColumn("__blk", pmod(col("__id"), lit(nBlocks)))
-          .groupBy(col("__lab"), col("__blk"))
-          .agg(Pca.orderedArraySum(col("__id"), col("__v")).as("__bsum"),
-            count(lit(1)).as("__bn"))
-          .groupBy(col("__lab"))
-          .agg(Pca.orderedArraySum(col("__blk"), col("__bsum")).as("__sum"),
-            sum(col("__bn")).as("n"))
-      } else {
-        base
-          .select(col("__id"), col("__lab"),
-            posexplode(col("__v")).as(Seq("__i", "__x")))
-          .groupBy(col("__lab"), col("__i"))
-          .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-          .groupBy(col("__lab"))
-          .agg(OrderedFold.values(col("__s"), col("__i")).as("__sum"),
-            max(col("__n")).as("n"))
-      }
-    summed.select(col("__lab").as(labelCol),
-      transform(col("__sum"), s => s / col("n").cast("double"))
-        .as("centroid"),
-      col("n"))
-  }
+      .withColumn("__blk", pmod(col("__id"), lit(nBlocks)))
+      .groupBy(col("__lab"), col("__blk"))
+      .agg(Pca.orderedArraySum(col("__id"), col("__v")).as("__bsum"),
+        count(lit(1)).as("__bn"))
+      .groupBy(col("__lab"))
+      .agg(Pca.orderedArraySum(col("__blk"), col("__bsum")).as("__sum"),
+        sum(col("__bn")).as("n"))
+      .select(col("__lab").as(labelCol),
+        transform(col("__sum"), s => s / col("n").cast("double"))
+          .as("centroid"),
+        col("n"))
 
   /** [[centroidTopLabel]] with the model shipped as LITERALS instead of
     * a joined frame: the centroid table collects to the driver (it is

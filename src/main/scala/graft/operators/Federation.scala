@@ -209,7 +209,6 @@ object Federation {
                queries: DataFrame, qidCol: String, qtextCol: String,
                k: Int, nProbe: Int,
                k1: Double = 1.2, b25: Double = 0.75,
-               bitExact: Boolean = true,
                coriB: Double = 0.4, dfBase: Double = 50.0,
                cwScale: Double = 150.0): DataFrame = {
     require(k > 0, s"k > 0: $k")
@@ -221,7 +220,7 @@ object Federation {
       Retrieval.unitQueryTerms(queries, qidCol, qtextCol), dfTab,
       stats)
     Retrieval.bm25TopK(Retrieval.scoreFold(Retrieval.postingContribs(
-      tfPruned, terms, contribCols, selected(sel)), bitExact), k)
+      tfPruned, terms, contribCols, selected(sel))), k)
   }
 
   /** [[coriTopK]] for the QUERY-LIKELIHOOD scorer — federation is
@@ -243,7 +242,6 @@ object Federation {
                  queries: DataFrame, qidCol: String, qtextCol: String,
                  k: Int, nProbe: Int,
                  mu: Double = 2000.0,
-                 bitExact: Boolean = true,
                  coriB: Double = 0.4, dfBase: Double = 50.0,
                  cwScale: Double = 150.0): DataFrame = {
     require(k > 0, s"k > 0: $k")
@@ -258,7 +256,7 @@ object Federation {
       Retrieval.unitQueryTerms(queries, qidCol, qtextCol), cfTab,
       stats)
     Retrieval.bm25TopK(Retrieval.qlScoreFold(Retrieval.postingContribs(
-      tfPruned, terms, contribCols, selected(sel)), mu, bitExact), k)
+      tfPruned, terms, contribCols, selected(sel)), mu), k)
   }
 
   /** SCORE-EXACT pruned federated top-k — [[Retrieval.bm25TopKWand]]
@@ -266,9 +264,9 @@ object Federation {
     * scored every matched posting inside the selected shards (at
     * 100 TB the per-shard matched-posting volume IS the probe cost):
     * returns exactly `coriTopK(...)` — same rows, same scores,
-    * bitwise under `bitExact` (q248 gates it against the unpruned
-    * federated replay) — while hot-term postings inside the probed
-    * shards are never scanned for safe queries.
+    * bitwise (q248 gates it against the unpruned federated replay) —
+    * while hot-term postings inside the probed shards are never
+    * scanned for safe queries.
     *
     * The two-phase plan survives the federation because the probe
     * restriction only REMOVES docs: candidates are the docs in
@@ -293,13 +291,12 @@ object Federation {
                    queries: DataFrame, qidCol: String, qtextCol: String,
                    k: Int, nProbe: Int, hotDf: Long,
                    k1: Double = 1.2, b25: Double = 0.75,
-                   bitExact: Boolean = true,
                    forward: Option[DataFrame] = None,
                    impact: Option[DataFrame] = None,
                    coriB: Double = 0.4, dfBase: Double = 50.0,
                    cwScale: Double = 150.0): DataFrame =
     Retrieval.wandTopK(coriWandScorer(shardTf, shardDf, shardCw, queries,
-      qidCol, qtextCol, nProbe, k1, b25, bitExact, forward, impact, coriB,
+      qidCol, qtextCol, nProbe, k1, b25, forward, impact, coriB,
       dfBase, cwScale),
       Retrieval.bm25TermTable(
         Retrieval.unitQueryTerms(queries, qidCol, qtextCol), dfTab,
@@ -331,7 +328,6 @@ object Federation {
                      hotDf: Option[Long] = None,
                      minWandDocs: Long = 20000L,
                      k1: Double = 1.2, b25: Double = 0.75,
-                     bitExact: Boolean = true,
                      forward: Option[DataFrame] = None,
                      impact: Option[DataFrame] = None,
                      coriB: Double = 0.4, dfBase: Double = 50.0,
@@ -339,11 +335,11 @@ object Federation {
     Retrieval.routedHotDf(stats, minWandDocs, hotDf) match {
       case None =>
         coriTopK(shardTf, shardDf, shardCw, dfTab, stats, queries,
-          qidCol, qtextCol, k, nProbe, k1, b25, bitExact, coriB, dfBase,
+          qidCol, qtextCol, k, nProbe, k1, b25, coriB, dfBase,
           cwScale)
       case Some(hd) =>
         coriTopKWand(shardTf, shardDf, shardCw, dfTab, stats, queries,
-          qidCol, qtextCol, k, nProbe, hd, k1, b25, bitExact, forward,
+          qidCol, qtextCol, k, nProbe, hd, k1, b25, forward,
           impact, coriB, dfBase, cwScale)
     }
   }
@@ -364,13 +360,12 @@ object Federation {
                     queries: DataFrame, qidCol: String, qtextCol: String,
                     k: Int, nProbe: Int, hotDf: Long,
                     k1: Double = 1.2, b25: Double = 0.75,
-                    bitExact: Boolean = true,
                     forward: Option[DataFrame] = None,
                     impact: Option[DataFrame] = None,
                     coriB: Double = 0.4, dfBase: Double = 50.0,
                     cwScale: Double = 150.0): DataFrame =
     Retrieval.wandStats(coriWandScorer(shardTf, shardDf, shardCw, queries,
-      qidCol, qtextCol, nProbe, k1, b25, bitExact, forward, impact, coriB,
+      qidCol, qtextCol, nProbe, k1, b25, forward, impact, coriB,
       dfBase, cwScale),
       Retrieval.bm25TermTable(
         Retrieval.unitQueryTerms(queries, qidCol, qtextCol), dfTab,
@@ -388,7 +383,7 @@ object Federation {
                              shardCw: DataFrame,
                              queries: DataFrame, qidCol: String,
                              qtextCol: String, nProbe: Int,
-                             k1: Double, b25: Double, bitExact: Boolean,
+                             k1: Double, b25: Double,
                              forward: Option[DataFrame],
                              impact: Option[DataFrame],
                              coriB: Double, dfBase: Double,
@@ -396,7 +391,7 @@ object Federation {
     val (sel, tfPruned) = selectAndPrune(shardTf, shardDf, shardCw,
       queries, qidCol, qtextCol, nProbe, coriB, dfBase, cwScale)
     Retrieval.bm25WandScorer(tfPruned, forward.getOrElse(shardTf), k1, b25,
-      bitExact, impact, selected(sel))
+      impact, selected(sel))
   }
 
   /** The probe filter of the federated operators: matched posting rows

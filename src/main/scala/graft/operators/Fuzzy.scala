@@ -200,7 +200,7 @@ object Fuzzy {
     */
   private def expandedTopK(tf: DataFrame, dfTab: DataFrame,
                            stats: DataFrame, terms: DataFrame, k: Int,
-                           k1: Double, b: Double, bitExact: Boolean,
+                           k1: Double, b: Double,
                            wandHotDf: Option[Long],
                            minWandDocs: Long,
                            forward: Option[DataFrame],
@@ -214,11 +214,11 @@ object Fuzzy {
         // scan) is the expensive part of these queries, so it must
         // materialize once (query-batch-sized), not re-run per branch
         Retrieval.bm25TopKWandWeighted(tf, terms.localCheckpoint(),
-          k, hd, k1, b, bitExact, forward, Some((dfTab, stats)), impact)
+          k, hd, k1, b, forward, Some((dfTab, stats)), impact)
       case None =>
         Retrieval.bm25TopK(
           Retrieval.bm25ScoresWeighted(tf, dfTab, stats, terms,
-            k1, b, bitExact), k)
+            k1, b), k)
     }
 
   /** Prefix-query BM25 top-k: each query's prefixes expand through
@@ -238,7 +238,6 @@ object Fuzzy {
                      prefixes: DataFrame, k: Int,
                      maxExpansions: Int = 50,
                      k1: Double = 1.2, b: Double = 0.75,
-                     bitExact: Boolean = true,
                      wandHotDf: Option[Long] = None,
                      minWandDocs: Long = 20000L,
                      forward: Option[DataFrame] = None,
@@ -247,7 +246,7 @@ object Fuzzy {
       prefixMatchTerms(dfTab, prefixes, maxExpansions)
         .select("queryId", "word").distinct()
         .withColumn("weight", lit(1.0)),
-      k, k1, b, bitExact, wandHotDf, minWandDocs, forward, impact)
+      k, k1, b, wandHotDf, minWandDocs, forward, impact)
 
   /** Typo-tolerant BM25 top-k: [[correctedQueryTerms]] at unit weight
     * through the weighted scorer (scores are bitwise the plain BM25 of
@@ -261,7 +260,6 @@ object Fuzzy {
   def bm25TopKFuzzy(tf: DataFrame, dfTab: DataFrame, stats: DataFrame,
                     queries: DataFrame, qidCol: String, qtextCol: String,
                     k: Int, k1: Double = 1.2, b: Double = 0.75,
-                    bitExact: Boolean = true,
                     vocabVariants: Option[DataFrame] = None,
                     maxEdit: Int = 1,
                     wandHotDf: Option[Long] = None,
@@ -272,5 +270,5 @@ object Fuzzy {
       correctedQueryTerms(dfTab, queries, qidCol, qtextCol,
         vocabVariants, maxEdit)
         .withColumn("weight", lit(1.0)),
-      k, k1, b, bitExact, wandHotDf, minWandDocs, forward, impact)
+      k, k1, b, wandHotDf, minWandDocs, forward, impact)
 }

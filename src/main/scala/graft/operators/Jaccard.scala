@@ -106,24 +106,35 @@ object Jaccard {
   def pairIntersections(
       postings: DataFrame,
       maxDocFrequency: Option[Long] = None): DataFrame = {
-    val p = maxDocFrequency match {
-      case Some(maxDf) =>
-        val hot = postings.groupBy("word").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDf)
-          .select("word")
-          .localCheckpoint()
-        // null-word postings (empty docs) survive the anti-join where
-        // the inner join dropped them — harmless: a null word can never
-        // equi-join in the pair stage, so the pair output is identical
-        postings.join(broadcast(hot), Seq("word"), "left_anti")
-      case None => postings
-    }
+    val p = hotWordPrune(postings, maxDocFrequency)(postings)
     p.as("a")
       .join(p.as("b"),
         col("a.word") === col("b.word") && col("a.docId") < col("b.docId"))
       .groupBy(col("a.docId").as("docA"), col("b.docId").as("docB"))
       .agg(count(lit(1)).as("inter"))
   }
+
+  /** The `maxDocFrequency` posting prune of [[pairIntersections]] and
+    * [[containmentJoin]]: an anti-join against the hot-word table
+    * (df > maxDf over `postings`), materialized EAGERLY — a small
+    * `localCheckpoint` job at DataFrame-construction time — so the df
+    * aggregation's full pass over the postings runs once, not once per
+    * self-join alias. Null-word postings (empty docs) survive the
+    * anti-join — harmless: a null word never equi-joins in a pair
+    * stage. `None` is the identity.
+    */
+  private def hotWordPrune(postings: => DataFrame,
+                           maxDocFrequency: Option[Long])
+      : DataFrame => DataFrame =
+    maxDocFrequency match {
+      case Some(maxDf) =>
+        val hot = postings.groupBy("word").agg(count(lit(1)).as("df"))
+          .filter(col("df") > maxDf)
+          .select("word")
+          .localCheckpoint()
+        side => side.join(broadcast(hot), Seq("word"), "left_anti")
+      case None => identity
+    }
 
   /** P3 — the Jaccard score expression: `inter / (|A| + |B| - inter)`,
     * 0.0 when the union is empty (`DocumentSimilarityReducer.java:103-104`).
@@ -236,6 +247,20 @@ object Jaccard {
   private def minOverlap(t: Double, szA: Column, szB: Column): Column =
     ceil(lit(t) / (lit(1.0) + lit(t)) * (szA + szB) - lit(1e-9))
 
+  /** `ceil(t·|A|)`, the fewest of A's tokens a partner with J or
+    * containment ≥ t shares, with [[minOverlap]]'s 1e-9 slack.
+    */
+  private def minShared(t: Double, sz: Column): Column =
+    ceil(lit(t) * sz - lit(1e-9))
+
+  /** The Bayardo prefix length `|A| - ceil(t·|A|) + 1` (see
+    * [[prefixCandidates]]); the slack can only lengthen the prefix — a
+    * long prefix is correct (more candidates), a short one can drop
+    * true pairs.
+    */
+  private def prefixLength(t: Double, sz: Column): Column =
+    (sz - minShared(t, sz) + lit(1)).cast("int")
+
   /** Candidate pairs for an exact Jaccard-threshold join, via prefix +
     * length (+ positional) filtering over [[dfOrderedSets]] output.
     * Returns `(docA, docB, sizeA, sizeB)`, `docA < docB`, each pair once.
@@ -263,13 +288,10 @@ object Jaccard {
       threshold: Double,
       positional: Boolean = true): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    // 1e-9 slack as in minOverlap: a long prefix is correct (more
-    // candidates), a short one can drop true pairs.
-    val prefLen =
-      (col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + lit(1)).cast("int")
     val pref = ordered.select(
       col("docId"), col("sz"),
-      posexplode(slice(col("sorted_tokens"), lit(1), prefLen)).as(Seq("pos", "word")))
+      posexplode(slice(col("sorted_tokens"), lit(1),
+        prefixLength(threshold, col("sz")))).as(Seq("pos", "word")))
     val cands = pref.as("a")
       .join(pref.as("b"),
         col("a.word") === col("b.word") &&
@@ -377,25 +399,12 @@ object Jaccard {
     def posted(side: DataFrame): DataFrame =
       side.select(col("docId"), col("sz"),
         posexplode(col("sorted_tokens")).as(Seq("pos", "word")))
-    val prefLen =
-      (col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + lit(1)).cast("int")
-    // the hot table is bounded by |postings| / maxDf rows — always tiny
-    // and broadcastable; materialized once so the df pass runs once
-    // (the pairIntersections anti-join form, Jaccard.scala:99-113)
-    val prune: DataFrame => DataFrame = maxDocFrequency match {
-      case Some(maxDf) =>
-        val hot = postings(tokenizedDocs)
-          .groupBy("word").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDf)
-          .select("word")
-          .localCheckpoint()
-        side => side.join(broadcast(hot), Seq("word"), "left_anti")
-      case None => identity
-    }
+    val prune = hotWordPrune(postings(tokenizedDocs), maxDocFrequency)
     val probe = prune(posted(ordered.select(col("docId"), col("sz"),
-      slice(col("sorted_tokens"), lit(1), prefLen).as("sorted_tokens"))))
+      slice(col("sorted_tokens"), lit(1), prefixLength(threshold, col("sz")))
+        .as("sorted_tokens"))))
     val index = prune(posted(ordered))
-    val needed = ceil(lit(threshold) * col("a.sz") - lit(1e-9))
+    val needed = minShared(threshold, col("a.sz"))
     val cands = probe.as("a")
       .join(index.as("b"),
         col("a.word") === col("b.word") &&
@@ -407,7 +416,7 @@ object Jaccard {
       .agg(max(lit(1) +
         least(col("a.sz") - col("a.pos") - 1, col("b.sz") - col("b.pos") - 1))
         .as("ubound"))
-      .filter(col("ubound") >= ceil(lit(threshold) * col("sizeA") - lit(1e-9)))
+      .filter(col("ubound") >= minShared(threshold, col("sizeA")))
     val toksA = tokenizedDocs.select(col("docId").as("docA"), col("tokens").as("toksA"))
     val toksB = tokenizedDocs.select(col("docId").as("docB"), col("tokens").as("toksB"))
     cands.join(toksA, "docA").join(toksB, "docB")
@@ -526,8 +535,7 @@ object Jaccard {
         .as("arrToks"))
       .select(col("docId"), size(col("arrToks")).cast("long").as("size"),
         col("arrToks"))
-    val prefLen = (col("size") -
-      ceil(lit(threshold) * col("size") - lit(1e-9)) + lit(1)).cast("int")
+    val prefLen = prefixLength(threshold, col("size"))
     // the probe is batch-sized — tiny — while the candidate join fans
     // out by posting df; without an explicit spread AQE coalesces the
     // micro-batch's shuffle to ONE partition and, every join below

@@ -174,12 +174,11 @@ object Passages {
   def maxPassageTopK(layout: PassageLayout,
                      queries: DataFrame, qidCol: String, qtextCol: String,
                      k: Int, k1: Double = 1.2, b: Double = 0.75,
-                     bitExact: Boolean = true,
                      maxDocFrequency: Option[Long] = None): DataFrame =
     Retrieval.bm25TopK(
       Retrieval.maxPassageScores(
         Retrieval.bm25ScoresPrecomputed(layout.tf, layout.dfTab,
-          layout.stats, queries, qidCol, qtextCol, k1, b, bitExact,
+          layout.stats, queries, qidCol, qtextCol, k1, b,
           maxDocFrequency),
         layout.membership), k)
 
@@ -188,8 +187,8 @@ object Passages {
     * passage probe was the score-CHANGING `maxDocFrequency` cap
     * ([[maxPassageTopK]]'s stop-term prune drops hot terms from the
     * scores): returns exactly `maxPassageTopK(layout, queries, k)` —
-    * same rows, same scores, bitwise under `bitExact` (q245 gates it
-    * against the unpruned MaxP replay) — while hot-term passage
+    * same rows, same scores, bitwise (q245 gates it against the
+    * unpruned MaxP replay) — while hot-term passage
     * postings are never scanned for safe queries. Passages are
     * pseudo-docs, so the shared [[Retrieval.wandTopK]] applies
     * verbatim with ONE change threaded through `docMap`: candidate
@@ -211,9 +210,8 @@ object Passages {
                          queries: DataFrame, qidCol: String,
                          qtextCol: String,
                          k: Int, hotDf: Long,
-                         k1: Double = 1.2, b: Double = 0.75,
-                         bitExact: Boolean = true): DataFrame =
-    Retrieval.wandTopK(passageScorer(layout, k1, b, bitExact),
+                         k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    Retrieval.wandTopK(passageScorer(layout, k1, b),
       Retrieval.bm25TermTable(
         Retrieval.unitQueryTerms(queries, qidCol, qtextCol), layout.dfTab,
         layout.stats), k, hotDf, Some(layout.membership))
@@ -232,9 +230,8 @@ object Passages {
                           queries: DataFrame, qidCol: String,
                           qtextCol: String,
                           k: Int, hotDf: Long,
-                          k1: Double = 1.2, b: Double = 0.75,
-                          bitExact: Boolean = true): DataFrame =
-    Retrieval.wandStats(passageScorer(layout, k1, b, bitExact),
+                          k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    Retrieval.wandStats(passageScorer(layout, k1, b),
       Retrieval.bm25TermTable(
         Retrieval.unitQueryTerms(queries, qidCol, qtextCol), layout.dfTab,
         layout.stats), k, hotDf, Some(layout.membership))
@@ -242,10 +239,10 @@ object Passages {
   /** The BM25 WAND scorer over the passage layout: passages are
     * pseudo-docs, so the word-index scorer applies verbatim.
     */
-  private def passageScorer(layout: PassageLayout, k1: Double, b: Double,
-                            bitExact: Boolean): Retrieval.WandScorer =
+  private def passageScorer(layout: PassageLayout, k1: Double,
+                            b: Double): Retrieval.WandScorer =
     Retrieval.bm25WandScorer(layout.tf, layout.forward.getOrElse(layout.tf),
-      k1, b, bitExact, layout.impact)
+      k1, b, layout.impact)
 
   /** ROUTING-AWARE MaxP top-k — the production default (the
     * [[Retrieval.qlTopKWandWeightedRouted]] economics over the
@@ -264,15 +261,13 @@ object Passages {
                            k: Int,
                            hotDf: Option[Long] = None,
                            minWandDocs: Long = 20000L,
-                           k1: Double = 1.2, b: Double = 0.75,
-                           bitExact: Boolean = true): DataFrame = {
+                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     Retrieval.routedHotDf(layout.stats, minWandDocs, hotDf) match {
       case None =>
-        maxPassageTopK(layout, queries, qidCol, qtextCol, k, k1, b,
-          bitExact)
+        maxPassageTopK(layout, queries, qidCol, qtextCol, k, k1, b)
       case Some(hd) =>
         maxPassageTopKWand(layout, queries, qidCol, qtextCol, k, hd, k1,
-          b, bitExact)
+          b)
     }
   }
 }

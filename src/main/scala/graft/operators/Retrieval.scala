@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -90,10 +90,9 @@ object Retrieval {
   def bm25Scores(docs: DataFrame, idCol: String, textCol: String,
                  queries: DataFrame, qidCol: String, qtextCol: String,
                  k1: Double = 1.2, b: Double = 0.75,
-                 bitExact: Boolean = true,
                  maxDocFrequency: Option[Long] = None): DataFrame =
     bm25ScoresIndexed(termFrequencies(docs, idCol, textCol),
-      queries, qidCol, qtextCol, k1, b, bitExact, maxDocFrequency)
+      queries, qidCol, qtextCol, k1, b, maxDocFrequency)
 
   /** The `(word, df)` document-frequency table of a [[termFrequencies]]
     * index — `(word, doc)` tf rows are unique by construction, so the
@@ -356,14 +355,13 @@ object Retrieval {
     * is NOT an additive layout — persist `ftf` and the additive
     * stats, never t̃f; the per-field length/N scalars are the one
     * corpus-global read, persisted at ingest like [[corpusStats]]);
-    * both Σs fold sorted (field order, then word order) under
-    * `bitExact`, the BM25 contract.
+    * both Σs fold sorted (field order, then word order), the BM25
+    * contract.
     */
   def bm25fScores(ftf: DataFrame,
                   fieldParams: Seq[(String, Double, Double)],
                   queries: DataFrame, qidCol: String, qtextCol: String,
                   k1: Double = 1.2,
-                  bitExact: Boolean = true,
                   fStats: Option[(DataFrame, DataFrame, DataFrame)]
                     = None): DataFrame = {
     require(k1 >= 0, s"k1 >= 0: $k1")
@@ -371,11 +369,11 @@ object Retrieval {
       fStats)
     // query-batch-sized build side by contract (the postingContribs
     // broadcast rationale)
-    val contrib = foldPtf(p.fContrib, bitExact)
+    val contrib = foldPtf(p.fContrib)
       .join(broadcast(p.qTermsIdf), Seq("word"))
       .select(col("queryId"), col("docId"), col("word"),
         (col("idf") * col("__tf") / (lit(k1) + col("__tf"))).as("__c"))
-    scoreFold(contrib, bitExact)
+    scoreFold(contrib)
   }
 
   /** The shared upstream of the BM25F family ([[bm25fScores]] and the
@@ -461,13 +459,9 @@ object Retrieval {
   /** Pseudo term frequency: field-keyed [[OrderedFold.sum]] per
     * (doc, word) of the per-row [[bm25fParts]] contributions.
     */
-  private def foldPtf(fContrib: DataFrame, bitExact: Boolean): DataFrame =
-    if (bitExact)
-      fContrib.groupBy(col("docId"), col("word"))
-        .agg(OrderedFold.sum(col("__ptf"), col("field")).as("__tf"))
-    else
-      fContrib.groupBy(col("docId"), col("word"))
-        .agg(sum(col("__ptf")).as("__tf"))
+  private def foldPtf(fContrib: DataFrame): DataFrame =
+    fContrib.groupBy(col("docId"), col("word"))
+      .agg(OrderedFold.sum(col("__ptf"), col("field")).as("__tf"))
 
   /** Per-(word, field) IMPACT metadata of a [[termFrequenciesFielded]]
     * index — `(word, field, max_tf, min_fl)`, the fielded mirror of
@@ -608,9 +602,9 @@ object Retrieval {
     * asymmetry (BM25, weighted BM25, QL, and weighted QL all had
     * WAND; [[bm25fScores]] always ran unpruned). Returns exactly
     * `bm25TopK(bm25fScores(ftf, fieldParams, queries, ...), k)` —
-    * same rows, same scores (bitwise under `bitExact = true`; q239
-    * gates it against the unpruned replay over the fielded Zipf
-    * fixture, q240 the decision table) — while hot-term (document
+    * same rows, same scores (bitwise; q239 gates it against the
+    * unpruned replay over the fielded Zipf fixture, q240 the
+    * decision table) — while hot-term (document
     * df > `hotDf`) posting lists are never folded for docs outside
     * the candidate set.
     *
@@ -643,12 +637,11 @@ object Retrieval {
                     queries: DataFrame, qidCol: String, qtextCol: String,
                     k: Int, hotDf: Long,
                     k1: Double = 1.2,
-                    bitExact: Boolean = true,
                     impactF: Option[DataFrame] = None,
                     fStats: Option[(DataFrame, DataFrame, DataFrame)]
                       = None): DataFrame = {
     val p = bm25fParts(ftf, fieldParams, queries, qidCol, qtextCol, fStats)
-    wandTopK(bm25fWandScorer(p, k1, bitExact, impactF), p.qTermsIdf, k,
+    wandTopK(bm25fWandScorer(p, k1, impactF), p.qTermsIdf, k,
       hotDf)
   }
 
@@ -664,12 +657,11 @@ object Retrieval {
                      queries: DataFrame, qidCol: String, qtextCol: String,
                      k: Int, hotDf: Long,
                      k1: Double = 1.2,
-                     bitExact: Boolean = true,
                      impactF: Option[DataFrame] = None,
                      fStats: Option[(DataFrame, DataFrame, DataFrame)]
                        = None): DataFrame = {
     val p = bm25fParts(ftf, fieldParams, queries, qidCol, qtextCol, fStats)
-    wandStats(bm25fWandScorer(p, k1, bitExact, impactF), p.qTermsIdf, k,
+    wandStats(bm25fWandScorer(p, k1, impactF), p.qTermsIdf, k,
       hotDf)
   }
 
@@ -683,7 +675,7 @@ object Retrieval {
     * hot words over every doc. The bound is the composed fielded
     * ceiling derived at [[bm25fTopKWand]].
     */
-  private def bm25fWandScorer(p: Bm25fParts, k1: Double, bitExact: Boolean,
+  private def bm25fWandScorer(p: Bm25fParts, k1: Double,
                               impactF: Option[DataFrame]): WandScorer = {
     require(k1 >= 0, s"k1 >= 0: $k1")
     def contrib(joined: DataFrame): DataFrame =
@@ -697,17 +689,16 @@ object Retrieval {
           .select("queryId", "docId").distinct()
         val candDocs = candPairs.select("docId").distinct()
         (candPairs, contrib(
-          foldPtf(p.fContrib.join(candDocs, Seq("docId"), "left_semi"),
-            bitExact)
+          foldPtf(p.fContrib.join(candDocs, Seq("docId"), "left_semi"))
             .join(broadcast(enriched), Seq("word"))
             .join(candPairs, Seq("queryId", "docId"), "left_semi")))
       }
       def hotContribs(hotTerms: DataFrame): DataFrame =
         contrib(foldPtf(p.fContrib.join(hotTerms.select("word").distinct(),
-          Seq("word"), "left_semi"), bitExact)
+          Seq("word"), "left_semi"))
           .join(broadcast(hotTerms), Seq("word")))
       def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
-        scoreFold(contrib, bitExact, shuffleFirst)
+        scoreFold(contrib, shuffleFirst)
       def hotUb(hot: DataFrame): DataFrame = {
         // the per-word pseudo-tf ceiling from the fielded metadata:
         // field-keyed OrderedFold of the per-field extremal terms
@@ -768,18 +759,17 @@ object Retrieval {
     * `|q|` counts the CORPUS-PRESENT distinct terms (an unseen term
     * has no background mass — Dirichlet smoothing is undefined for
     * it, so it drops from the model on both sides of the oracle).
-    * The Σ folds term-sorted under `bitExact` (the BM25 contract);
-    * the length term adds ONCE, after the fold. The unit query is
+    * The Σ folds term-sorted (the BM25 contract); the length term
+    * adds ONCE, after the fold. The unit query is
     * [[qlScoresWeighted]] over [[unitQueryTerms]] (whose docs state
     * the unit-weight contract).
     */
   def qlDirichletScores(tf: DataFrame, cfTab: DataFrame, stats: DataFrame,
                         queries: DataFrame, qidCol: String,
                         qtextCol: String,
-                        mu: Double = 2000.0,
-                        bitExact: Boolean = true): DataFrame =
+                        mu: Double = 2000.0): DataFrame =
     qlScoresWeighted(tf, cfTab, stats,
-      unitQueryTerms(queries, qidCol, qtextCol), mu, bitExact)
+      unitQueryTerms(queries, qidCol, qtextCol), mu)
 
   /** QL Dirichlet scoring under a WEIGHTED query-term table
     * `(queryId, word, weight)` (an [[rm3ExpandedTermsQl]] output, or
@@ -791,52 +781,33 @@ object Retrieval {
     * [[qlTermTable]]; [[unitQueryTerms]] states why unit weights are
     * [[qlDirichletScores]]). Terms absent from the corpus drop via
     * the cf join on BOTH the contribution and normalizer sides. Same
-    * one posting join, same [[qlScoreFold]], same `bitExact`
-    * contract.
+    * one posting join, same [[qlScoreFold]].
     */
   def qlScoresWeighted(tf: DataFrame, cfTab: DataFrame,
                        stats: DataFrame, termWeights: DataFrame,
-                       mu: Double = 2000.0,
-                       bitExact: Boolean = true): DataFrame =
+                       mu: Double = 2000.0): DataFrame =
     qlScoreFold(postingContribs(tf,
       qlTermTable(termWeights, cfTab, stats),
-      qlContribCols(mu)), mu, bitExact)
+      qlContribCols(mu)), mu)
 
   /** Collapse QL `(queryId, docId, word, __c, dl, __nq)` matching
     * contributions to scores — the [[scoreFold]] convention for the
     * second scorer, shared by [[qlDirichletScores]] and
     * [[qlWandScorer]] so the pruned candidates are bitwise the
     * unpruned pipeline BY CONSTRUCTION (they cannot drift): the
-    * word-sorted fold (or the plain map-side-combined scale sum —
-    * the unused word column prunes out of that shuffle), dl and |q|
-    * carried through the group as constants, and the length
-    * normalizer `|q|·ln(μ/(dl+μ))` added ONCE after the fold.
+    * word-sorted fold, dl and |q| carried through the group as
+    * constants, and the length normalizer `|q|·ln(μ/(dl+μ))` added
+    * ONCE after the fold.
     */
   private[operators] def qlScoreFold(joined: DataFrame, mu: Double,
-                          bitExact: Boolean,
-                          shuffleFirst: Boolean = true): DataFrame = {
-    val folded =
-      if (bitExact)
-        (if (shuffleFirst)
-          // group-key repartition before the collect — the scoreFold
-          // r20 rationale (raw rows cross the exchange once, no
-          // map-side list-buffer explosion); candidate-sized WAND
-          // folds pass shuffleFirst = false (see [[scoreFold]])
-          joined.repartition(col("queryId"), col("docId"))
-        else joined)
-          .groupBy(col("queryId"), col("docId"))
-          .agg(OrderedFold.sum(col("__c"), col("word")).as("__s"),
-            max(col("dl")).as("__dl"), max(col("__nq")).as("__n"))
-      else
-        joined
-          .groupBy(col("queryId"), col("docId"))
-          .agg(sum(col("__c")).as("__s"), max(col("dl")).as("__dl"),
-            max(col("__nq")).as("__n"))
-    folded.select(col("queryId"), col("docId"),
-      (col("__s") + col("__n").cast("double") *
-        log(lit(mu) / (col("__dl").cast("double") + lit(mu))))
-        .as("score"))
-  }
+                          shuffleFirst: Boolean = true): DataFrame =
+    scoreGroups(joined, shuffleFirst)
+      .agg(OrderedFold.sum(col("__c"), col("word")).as("__s"),
+        max(col("dl")).as("__dl"), max(col("__nq")).as("__n"))
+      .select(col("queryId"), col("docId"),
+        (col("__s") + col("__n").cast("double") *
+          log(lit(mu) / (col("__dl").cast("double") + lit(mu))))
+          .as("score"))
 
   /** [[bm25Scores]] over a pre-built (typically persisted,
     * word-bucketed) [[termFrequencies]] table. `tf` is referenced 3×
@@ -852,14 +823,6 @@ object Retrieval {
     * contribute zero to every score and are dropped by the inner df
     * join before they reach the postings.
     *
-    * `bitExact` selects the fold (the Pca.covariance precedent):
-    * `true` (default) sums each (query, doc)'s term contributions
-    * term-sorted via a collected list — the partitioning-invariant,
-    * oracle-replayable tree, but the list buffering defeats map-side
-    * partial aggregation (measured OOM at 50k docs × 516 query-batch);
-    * `false` is a plain codegen `sum` — map-side-combined, the scale
-    * form, identical to ~1e-12 relative (RetrievalSpec pins parity).
-    *
     * `maxDocFrequency` drops query terms with corpus df above the cap
     * BEFORE the posting join — classic stop-term pruning. The matched
     * posting volume (the whole probe cost: measured 42 s for a
@@ -874,10 +837,9 @@ object Retrieval {
   def bm25ScoresIndexed(tf: DataFrame,
                         queries: DataFrame, qidCol: String, qtextCol: String,
                         k1: Double = 1.2, b: Double = 0.75,
-                        bitExact: Boolean = true,
                         maxDocFrequency: Option[Long] = None): DataFrame =
     bm25ScoresPrecomputed(tf, dfTable(tf), corpusStats(tf),
-      queries, qidCol, qtextCol, k1, b, bitExact, maxDocFrequency)
+      queries, qidCol, qtextCol, k1, b, maxDocFrequency)
 
   /** [[bm25ScoresIndexed]] consuming PERSISTED `(word, df)` and
     * `(n_docs, total_dl)` tables (the [[compactTermIndex]] layout) —
@@ -893,11 +855,10 @@ object Retrieval {
                             queries: DataFrame, qidCol: String,
                             qtextCol: String,
                             k1: Double = 1.2, b: Double = 0.75,
-                            bitExact: Boolean = true,
                             maxDocFrequency: Option[Long] = None)
       : DataFrame =
     bm25ScoresWeighted(tf, dfTab, stats,
-      unitQueryTerms(queries, qidCol, qtextCol), k1, b, bitExact,
+      unitQueryTerms(queries, qidCol, qtextCol), k1, b,
       maxDocFrequency)
 
   /** RM3 pseudo-relevance-feedback query expansion (Lavrenko &
@@ -946,7 +907,6 @@ object Retrieval {
                        queries: DataFrame, qidCol: String, qtextCol: String,
                        k: Int = 10, m: Int = 10, lambda: Double = 0.5,
                        k1: Double = 1.2, b: Double = 0.75,
-                       bitExact: Boolean = true,
                        maxFeedbackDf: Option[Long] = None,
                        firstPassMaxDf: Option[Long] = None,
                        wandHotDf: Option[Long] = None,
@@ -958,13 +918,11 @@ object Retrieval {
       "wandHotDf (score-exact pruning) and firstPassMaxDf " +
         "(score-changing pruning) are alternative first-pass regimes")
     // feedback set: result-sized, consumed 2× (normalizer + term
-    // pull). `bitExact` governs only this first-pass fold (the scale
-    // caveat is bm25ScoresIndexed's); everything after is
-    // feedback-sized and always folds sorted. `firstPassMaxDf` is the
-    // first pass's own stop-term prune (`maxDocFrequency` semantics —
-    // it selects the FEEDBACK SET through pruned scoring, the way a
-    // tuned production first stage runs; at 50k the uncapped first
-    // pass alone was ~60% of the whole composition's wall).
+    // pull). `firstPassMaxDf` is the first pass's own stop-term prune
+    // (`maxDocFrequency` semantics — it selects the FEEDBACK SET
+    // through pruned scoring, the way a tuned production first stage
+    // runs; at 50k the uncapped first pass alone was ~60% of the
+    // whole composition's wall).
     // `wandHotDf` instead routes the first pass through the
     // SCORE-EXACT [[bm25TopKWand]] plan (with `forward` as its
     // candidate-fetch layout): the feedback set — and so every
@@ -976,12 +934,12 @@ object Retrieval {
         // `wandImpact` passes the impactStats metadata through to the
         // score-exact first pass — tighter routing, identical feedback
         bm25TopKWand(tf, queries, qidCol, qtextCol, k, hd, k1, b,
-          bitExact, forward, Some((dfTab, stats)), wandImpact)
+          forward, Some((dfTab, stats)), wandImpact)
           .select("queryId", "docId", "score")
       case None =>
         bm25TopK(
           bm25ScoresPrecomputed(tf, dfTab, stats, queries, qidCol,
-            qtextCol, k1, b, bitExact, firstPassMaxDf), k)
+            qtextCol, k1, b, firstPassMaxDf), k)
           .select("queryId", "docId", "score")
     }).localCheckpoint()
     rm3ExpandedTermsFromTopk(topk, tf, dfTab, queries, qidCol,
@@ -1058,7 +1016,6 @@ object Retrieval {
                          qtextCol: String,
                          k: Int = 10, m: Int = 10, lambda: Double = 0.5,
                          mu: Double = 2000.0,
-                         bitExact: Boolean = true,
                          maxFeedbackDf: Option[Long] = None,
                          wandHotDf: Option[Long] = None,
                          forward: Option[DataFrame] = None,
@@ -1069,11 +1026,11 @@ object Retrieval {
     // feedback set: result-sized, consumed 3x (max, softmax, pull)
     val topk = (wandHotDf match {
       case Some(hd) =>
-        qlTopKWand(tf, queries, qidCol, qtextCol, k, hd, mu, bitExact,
+        qlTopKWand(tf, queries, qidCol, qtextCol, k, hd, mu,
           forward, Some((dfTab, stats)), Some(cfTab), wandImpact)
       case None =>
         bm25TopK(qlDirichletScores(tf, cfTab, stats, queries, qidCol,
-          qtextCol, mu, bitExact), k)
+          qtextCol, mu), k)
     }).select("queryId", "docId", "score").localCheckpoint()
     rm3ExpandedTermsQlFromTopk(topk, tf, dfTab, queries, qidCol,
       qtextCol, m, lambda, maxFeedbackDf)
@@ -1145,12 +1102,11 @@ object Retrieval {
     */
   def bm25FirstPass(tf: DataFrame, dfTab: DataFrame, stats: DataFrame,
                     queries: DataFrame, qidCol: String, qtextCol: String,
-                    k: Int, k1: Double = 1.2, b: Double = 0.75,
-                    bitExact: Boolean = true): FirstPass = {
+                    k: Int, k1: Double = 1.2, b: Double = 0.75): FirstPass = {
     val qt = unitQueryTerms(queries, qidCol, qtextCol)
     firstPass(qt, postingContribs(tf,
       bm25TermTable(qt, dfTab, stats),
-      bm25ContribCols(k1, b)), scoreFold(_, bitExact), k)
+      bm25ContribCols(k1, b)), scoreFold(_), k)
   }
 
   /** The materialized QL first pass (see [[FirstPass]]): the
@@ -1161,12 +1117,11 @@ object Retrieval {
     */
   def qlFirstPass(tf: DataFrame, cfTab: DataFrame, stats: DataFrame,
                   queries: DataFrame, qidCol: String, qtextCol: String,
-                  k: Int, mu: Double = 2000.0,
-                  bitExact: Boolean = true): FirstPass = {
+                  k: Int, mu: Double = 2000.0): FirstPass = {
     val qt = unitQueryTerms(queries, qidCol, qtextCol)
     firstPass(qt, postingContribs(tf,
       qlTermTable(qt, cfTab, stats), qlContribCols(mu)),
-      qlScoreFold(_, mu, bitExact), k)
+      qlScoreFold(_, mu), k)
   }
 
   /** Checkpoint a first pass's contributions and its folded top-k. */
@@ -1201,8 +1156,8 @@ object Retrieval {
   def bm25ScoresWeightedReusing(tf: DataFrame, dfTab: DataFrame,
                                 stats: DataFrame, termWeights: DataFrame,
                                 fp: FirstPass,
-                                k1: Double = 1.2, b: Double = 0.75,
-                                bitExact: Boolean = true): DataFrame = {
+                                k1: Double = 1.2,
+                                b: Double = 0.75): DataFrame = {
     val newRows = postingContribs(tf, bm25TermTable(
       termWeights.join(fp.qTerms, Seq("queryId", "word"), "left_anti"),
       dfTab, stats), bm25ContribCols(k1, b))
@@ -1211,7 +1166,7 @@ object Retrieval {
         Seq("queryId", "word"))
       .select(col("queryId"), col("docId"), col("word"),
         (col("weight") * col("__c")).as("__c"))
-    scoreFold(reused.unionByName(newRows), bitExact)
+    scoreFold(reused.unionByName(newRows))
   }
 
   /** [[qlScoresWeighted]] REUSING a materialized first pass (r20) —
@@ -1228,8 +1183,7 @@ object Retrieval {
   def qlScoresWeightedReusing(tf: DataFrame, cfTab: DataFrame,
                               stats: DataFrame, termWeights: DataFrame,
                               fp: FirstPass,
-                              mu: Double = 2000.0,
-                              bitExact: Boolean = true): DataFrame = {
+                              mu: Double = 2000.0): DataFrame = {
     val (present, mass) = qlTermParts(termWeights, cfTab, stats)
     // qlContribCols without its trailing `__nq` rider
     val newRows = postingContribs(tf,
@@ -1241,7 +1195,7 @@ object Retrieval {
       .select(col("queryId"), col("docId"), col("word"),
         (col("weight") * col("__c")).as("__c"), col("dl"))
     qlScoreFold(reused.unionByName(newRows)
-      .join(broadcast(mass), Seq("queryId")), mu, bitExact)
+      .join(broadcast(mass), Seq("queryId")), mu)
   }
 
   /** The RM3 TAIL shared by [[rm3ExpandedTerms]] (BM25 doc weights)
@@ -1302,14 +1256,12 @@ object Retrieval {
     * `(queryId, word, weight)` (an [[rm3ExpandedTerms]] output, or any
     * caller-supplied term weighting): each term's contribution is
     * `weight · bm25(w, d)`. One posting join carrying the
-    * query-batch-sized [[bm25TermTable]], the [[scoreFold]], the
-    * `bitExact` contract; [[bm25ScoresPrecomputed]] is this at unit
-    * weight.
+    * query-batch-sized [[bm25TermTable]] and the [[scoreFold]];
+    * [[bm25ScoresPrecomputed]] is this at unit weight.
     */
   def bm25ScoresWeighted(tf: DataFrame, dfTab: DataFrame,
                          stats: DataFrame, termWeights: DataFrame,
                          k1: Double = 1.2, b: Double = 0.75,
-                         bitExact: Boolean = true,
                          maxDocFrequency: Option[Long] = None)
       : DataFrame = {
     // the opt-in stop-term prune: a weighted query's ORIGINAL hot
@@ -1319,7 +1271,7 @@ object Retrieval {
       maxDocFrequency.fold(dfTab)(maxDf => dfTab.filter(col("df") <= maxDf))
     scoreFold(postingContribs(tf,
       bm25TermTable(termWeights, kept, stats),
-      bm25ContribCols(k1, b)), bitExact)
+      bm25ContribCols(k1, b)))
   }
 
   /** The deduped normalized query-term table `(queryId, word)` — the
@@ -1485,35 +1437,33 @@ object Retrieval {
 
   /** Collapse `(queryId, docId, word, __c)` contributions to scores.
     * Word-keyed [[OrderedFold.sum]] (the q98/DSIR convention): the
-    * oracle replays the identical tree;
-    * scale form (`bitExact = false`): plain map-side-combined sum.
+    * oracle replays the identical tree.
     */
-  private[operators] def scoreFold(contrib: DataFrame, bitExact: Boolean,
+  private[operators] def scoreFold(contrib: DataFrame,
                                    shuffleFirst: Boolean = true): DataFrame =
-    if (bitExact)
-      // r20: repartition to the GROUP key before the collect — the
-      // posting join leaves contributions word-partitioned, so the
-      // map-side partial collect_list splits every (query, doc)
-      // group across up to every map partition and the fold exchange
-      // ships ~4× the rows as list buffers (q203 profile: 2.9M buffer
-      // rows, the merge stage 55 s of CPU). With the explicit
-      // repartition the exchange ships the RAW narrow rows once and
-      // the whole collect+sort+fold runs post-shuffle in one stage.
-      // Values are unchanged (the fold is partitioning-invariant by
-      // construction — that is the bitExact contract).
-      // `shuffleFirst = false` opts BACK into the map-side partial
-      // shape for CANDIDATE-sized folds (the WAND cores): there the
-      // input is already small and pre-compaction wins — the r20
-      // after-bench showed the unconditional repartition costing the
-      // WAND stats family +0.6–2.7 s each.
-      (if (shuffleFirst)
-        contrib.repartition(col("queryId"), col("docId"))
-      else contrib)
-        .groupBy(col("queryId"), col("docId"))
-        .agg(OrderedFold.sum(col("__c"), col("word")).as("score"))
-    else
-      contrib.groupBy(col("queryId"), col("docId"))
-        .agg(sum(col("__c")).as("score"))
+    scoreGroups(contrib, shuffleFirst)
+      .agg(OrderedFold.sum(col("__c"), col("word")).as("score"))
+
+  /** The `(queryId, docId)` groups of [[scoreFold]] and [[qlScoreFold]].
+    * r20: repartition to the GROUP key before the collect — the
+    * posting join leaves contributions word-partitioned, so the
+    * map-side partial collect_list splits every (query, doc) group
+    * across up to every map partition and the fold exchange ships ~4×
+    * the rows as list buffers (q203 profile: 2.9M buffer rows, the
+    * merge stage 55 s of CPU). With the explicit repartition the
+    * exchange ships the RAW narrow rows once and the whole
+    * collect+sort+fold runs post-shuffle in one stage. Values are
+    * unchanged (the fold is partitioning-invariant by construction).
+    * `shuffleFirst = false` opts BACK into the map-side partial shape
+    * for CANDIDATE-sized folds (the WAND cores): there the input is
+    * already small and pre-compaction wins — the r20 after-bench
+    * showed the unconditional repartition costing the WAND stats
+    * family +0.6–2.7 s each.
+    */
+  private def scoreGroups(contrib: DataFrame,
+                          shuffleFirst: Boolean): RelationalGroupedDataset =
+    (if (shuffleFirst) contrib.repartition(col("queryId"), col("docId"))
+    else contrib).groupBy(col("queryId"), col("docId"))
 
   /** Positional posting layout: one row per token OCCURRENCE —
     * `(docId, pos, word)`, `pos` 0-based over the normalized word
@@ -1833,7 +1783,6 @@ object Retrieval {
                      posts: DataFrame,
                      queries: DataFrame, qidCol: String, qtextCol: String,
                      k: Int, k1: Double = 1.2, b: Double = 0.75,
-                     bitExact: Boolean = true,
                      forward: Option[DataFrame] = None,
                      maxAnchorOcc: Long = -1L): DataFrame = {
     require(k > 0, s"k > 0: $k")
@@ -1841,7 +1790,7 @@ object Retrieval {
       maxAnchorOcc).select("queryId", "docId")
     scoreWithinCandidates(forward.getOrElse(tf),
       bm25TermTable(unitQueryTerms(queries, qidCol, qtextCol), dfTab,
-        stats), cands, k, k1, b, bitExact)
+        stats), cands, k, k1, b)
   }
 
   /** CONJUNCTIVE (match-ALL-terms) BM25 top-k — the boolean-AND query
@@ -1867,7 +1816,6 @@ object Retrieval {
                           queries: DataFrame, qidCol: String,
                           qtextCol: String,
                           k: Int, k1: Double = 1.2, b: Double = 0.75,
-                          bitExact: Boolean = true,
                           forward: Option[DataFrame] = None): DataFrame = {
     require(k > 0, s"k > 0: $k")
     val enriched = bm25TermTable(unitQueryTerms(queries, qidCol, qtextCol),
@@ -1888,7 +1836,7 @@ object Retrieval {
     // df/stats are inline aggregates, the index-side passes beneath
     // it) builds once per probe
     scoreWithinCandidates(forward.getOrElse(tf), enriched, cands,
-      k, k1, b, bitExact)
+      k, k1, b)
   }
 
   /** Exact BM25 top-k restricted to a caller-supplied candidate set —
@@ -1899,12 +1847,11 @@ object Retrieval {
     */
   private def scoreWithinCandidates(fwd: DataFrame, enriched: DataFrame,
                                     cands: DataFrame, k: Int,
-                                    k1: Double, b: Double,
-                                    bitExact: Boolean): DataFrame = {
+                                    k1: Double, b: Double): DataFrame = {
     val contrib = cands.join(fwd, Seq("docId"))
       .join(enriched, Seq("queryId", "word"))
       .select(bm25ContribCols(k1, b): _*)
-    bm25TopK(scoreFold(contrib, bitExact), k)
+    bm25TopK(scoreFold(contrib), k)
   }
 
   /** Best-window SNIPPET extraction over a [[positionalPostings]]
@@ -2055,8 +2002,8 @@ object Retrieval {
   /** SCORE-EXACT pruned top-k: WAND-style per-term upper-bound skipping
     * (Broder et al. CIKM'03), re-expressed as a batch two-phase plan.
     * Returns exactly `bm25TopK(bm25ScoresIndexed(tf, queries, ...), k)`
-    * — same rows, same scores (bitwise under `bitExact = true`; q182
-    * gates it against the unpruned DuckDB replay) — while the postings
+    * — same rows, same scores (bitwise; q182 gates it against the
+    * unpruned DuckDB replay) — while the postings
     * of terms with df above `hotDf` are never scanned through the
     * word index. Where `maxDocFrequency` CHANGES scores by dropping
     * hot terms, this prunes only work, never results.
@@ -2095,21 +2042,20 @@ object Retrieval {
                    queries: DataFrame, qidCol: String, qtextCol: String,
                    k: Int, hotDf: Long,
                    k1: Double = 1.2, b: Double = 0.75,
-                   bitExact: Boolean = true,
                    forward: Option[DataFrame] = None,
                    dfStats: Option[(DataFrame, DataFrame)] = None,
                    impact: Option[DataFrame] = None)
       : DataFrame =
     bm25TopKWandWeighted(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
-      hotDf, k1, b, bitExact, forward, dfStats, impact)
+      hotDf, k1, b, forward, dfStats, impact)
 
   /** [[bm25TopKWand]] under a WEIGHTED query-term table
     * `(queryId, word, weight)` (an [[rm3ExpandedTerms]] output) —
     * SCORE-EXACT pruned top-k for the RM3 second pass and any other
     * weighted rescoring: returns exactly
     * `bm25TopK(bm25ScoresWeighted(tf, dfTab, stats, termWeights), k)`
-    * (bitwise under `bitExact = true`; q191 gates the full RM3
-    * composition against the unpruned DuckDB replay). The unit-weight
+    * (bitwise; q191 gates the full RM3 composition against the
+    * unpruned DuckDB replay). The unit-weight
     * bound generalizes: a doc outside the rare-candidate set matches
     * only hot terms, so its score is
     * `< ub(q) = Σ_hot weight·idf·(k1+1)` — the tf saturation argument
@@ -2125,13 +2071,12 @@ object Retrieval {
   def bm25TopKWandWeighted(tf: DataFrame, termWeights: DataFrame,
                            k: Int, hotDf: Long,
                            k1: Double = 1.2, b: Double = 0.75,
-                           bitExact: Boolean = true,
                            forward: Option[DataFrame] = None,
                            dfStats: Option[(DataFrame, DataFrame)] = None,
                            impact: Option[DataFrame] = None)
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    wandTopK(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
+    wandTopK(bm25WandScorer(tf, forward.getOrElse(tf), k1, b,
       impact), bm25TermTable(termWeights, dfTab, stats), k,
       hotDf)
   }
@@ -2152,13 +2097,12 @@ object Retrieval {
                     queries: DataFrame, qidCol: String, qtextCol: String,
                     k: Int, hotDf: Long,
                     k1: Double = 1.2, b: Double = 0.75,
-                    bitExact: Boolean = true,
                     forward: Option[DataFrame] = None,
                     dfStats: Option[(DataFrame, DataFrame)] = None,
                     impact: Option[DataFrame] = None)
       : DataFrame =
     bm25WandWeightedStats(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
-      hotDf, k1, b, bitExact, forward, dfStats, impact)
+      hotDf, k1, b, forward, dfStats, impact)
 
   /** [[bm25WandStats]] for the WEIGHTED operator — the q192 gate's
     * readout: identical columns, identical routing predicate, shared
@@ -2169,13 +2113,12 @@ object Retrieval {
   def bm25WandWeightedStats(tf: DataFrame, termWeights: DataFrame,
                             k: Int, hotDf: Long,
                             k1: Double = 1.2, b: Double = 0.75,
-                            bitExact: Boolean = true,
                             forward: Option[DataFrame] = None,
                             dfStats: Option[(DataFrame, DataFrame)] = None,
                             impact: Option[DataFrame] = None)
       : DataFrame = {
     val (dfTab, stats) = resolvedDfStats(tf, dfStats)
-    wandStats(bm25WandScorer(tf, forward.getOrElse(tf), k1, b, bitExact,
+    wandStats(bm25WandScorer(tf, forward.getOrElse(tf), k1, b,
       impact), bm25TermTable(termWeights, dfTab, stats), k,
       hotDf)
   }
@@ -2422,14 +2365,13 @@ object Retrieval {
   private[operators] def bm25WandScorer(postings: DataFrame,
                                         forward: DataFrame,
                                         k1: Double, b: Double,
-                                        bitExact: Boolean,
                                         impact: Option[DataFrame],
                                         probeFilter: DataFrame => DataFrame
                                           = identity): WandScorer =
     new PostingWandScorer(postings, forward, bm25ContribCols(k1, b),
         probeFilter) {
       def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
-        scoreFold(contrib, bitExact, shuffleFirst)
+        scoreFold(contrib, shuffleFirst)
       def hotUb(hot: DataFrame): DataFrame = impact match {
         case None =>
           hot.groupBy("queryId")
@@ -2454,8 +2396,8 @@ object Retrieval {
     * ranker, closing the asymmetry where BM25 had WAND/impact pruning
     * and [[qlDirichletScores]] always ran unpruned. Returns exactly
     * `bm25TopK(qlDirichletScores(tf, cf, stats, queries, ...), k)` —
-    * same rows, same scores (bitwise under `bitExact = true`; q223
-    * gates it against the unpruned DuckDB replay) — while hot-term
+    * same rows, same scores (bitwise; q223 gates it against the
+    * unpruned DuckDB replay) — while hot-term
     * (df > `hotDf`) posting lists are never scanned through the word
     * index for safe queries.
     *
@@ -2502,21 +2444,20 @@ object Retrieval {
                  queries: DataFrame, qidCol: String, qtextCol: String,
                  k: Int, hotDf: Long,
                  mu: Double = 2000.0,
-                 bitExact: Boolean = true,
                  forward: Option[DataFrame] = None,
                  dfStats: Option[(DataFrame, DataFrame)] = None,
                  cf: Option[DataFrame] = None,
                  impact: Option[DataFrame] = None): DataFrame =
     qlTopKWandWeighted(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
-      hotDf, mu, bitExact, forward, dfStats, cf, impact)
+      hotDf, mu, forward, dfStats, cf, impact)
 
   /** [[qlTopKWand]] under a WEIGHTED query-term table
     * `(queryId, word, weight)` (an [[rm3ExpandedTermsQl]] output) —
     * SCORE-EXACT pruned top-k for the LM second pass, completing the
     * scorer symmetry ([[bm25TopKWandWeighted]] is the BM25 twin):
     * returns exactly `bm25TopK(qlScoresWeighted(tf, cf, stats,
-    * termWeights), k)` (bitwise under `bitExact = true`; q234 gates
-    * the full LM-RM3 composition against q233's unpruned replay).
+    * termWeights), k)` (bitwise; q234 gates the full LM-RM3
+    * composition against q233's unpruned replay).
     * The weighted QL bound scales each hot term's ceiling by its
     * weight and the normalizer bound by the weighted query MASS
     * (`Σ_present weight` replaces `|q|` — a per-query constant on
@@ -2530,12 +2471,11 @@ object Retrieval {
   def qlTopKWandWeighted(tf: DataFrame, termWeights: DataFrame,
                          k: Int, hotDf: Long,
                          mu: Double = 2000.0,
-                         bitExact: Boolean = true,
                          forward: Option[DataFrame] = None,
                          dfStats: Option[(DataFrame, DataFrame)] = None,
                          cf: Option[DataFrame] = None,
                          impact: Option[DataFrame] = None): DataFrame =
-    wandTopK(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
+    wandTopK(qlWandScorer(tf, forward.getOrElse(tf), mu, impact),
       qlWandTerms(tf, termWeights, dfStats, cf), k, hotDf)
 
   /** ROUTING-AWARE weighted QL top-k — the production default for the
@@ -2564,7 +2504,6 @@ object Retrieval {
                                hotDf: Option[Long] = None,
                                minWandDocs: Long = 20000L,
                                mu: Double = 2000.0,
-                               bitExact: Boolean = true,
                                forward: Option[DataFrame] = None,
                                dfStats: Option[(DataFrame, DataFrame)] = None,
                                cf: Option[DataFrame] = None,
@@ -2582,12 +2521,12 @@ object Retrieval {
         bm25TopK(firstPass match {
           case Some(fp) =>
             qlScoresWeightedReusing(tf, cfTab, stats, termWeights, fp,
-              mu, bitExact)
+              mu)
           case None =>
-            qlScoresWeighted(tf, cfTab, stats, termWeights, mu, bitExact)
+            qlScoresWeighted(tf, cfTab, stats, termWeights, mu)
         }, k)
       case Some(hd) =>
-        qlTopKWandWeighted(tf, termWeights, k, hd, mu, bitExact, forward,
+        qlTopKWandWeighted(tf, termWeights, k, hd, mu, forward,
           Some((dfTab, stats)), Some(cfTab), impact)
     }
   }
@@ -2620,13 +2559,12 @@ object Retrieval {
                   queries: DataFrame, qidCol: String, qtextCol: String,
                   k: Int, hotDf: Long,
                   mu: Double = 2000.0,
-                  bitExact: Boolean = true,
                   forward: Option[DataFrame] = None,
                   dfStats: Option[(DataFrame, DataFrame)] = None,
                   cf: Option[DataFrame] = None,
                   impact: Option[DataFrame] = None): DataFrame =
     qlWandWeightedStats(tf, unitQueryTerms(queries, qidCol, qtextCol), k,
-      hotDf, mu, bitExact, forward, dfStats, cf, impact)
+      hotDf, mu, forward, dfStats, cf, impact)
 
   /** [[qlWandStats]] for the WEIGHTED operator — identical columns,
     * identical routing predicate, shared [[qlWandScorer]] internals
@@ -2636,12 +2574,11 @@ object Retrieval {
   def qlWandWeightedStats(tf: DataFrame, termWeights: DataFrame,
                           k: Int, hotDf: Long,
                           mu: Double = 2000.0,
-                          bitExact: Boolean = true,
                           forward: Option[DataFrame] = None,
                           dfStats: Option[(DataFrame, DataFrame)] = None,
                           cf: Option[DataFrame] = None,
                           impact: Option[DataFrame] = None): DataFrame =
-    wandStats(qlWandScorer(tf, forward.getOrElse(tf), mu, bitExact, impact),
+    wandStats(qlWandScorer(tf, forward.getOrElse(tf), mu, impact),
       qlWandTerms(tf, termWeights, dfStats, cf), k, hotDf)
 
   /** The QL WAND [[qlTermTable]], with the df for the rare/hot split,
@@ -2663,11 +2600,10 @@ object Retrieval {
     * derived at [[qlTopKWand]].
     */
   private def qlWandScorer(tf: DataFrame, forward: DataFrame, mu: Double,
-                           bitExact: Boolean,
                            impact: Option[DataFrame]): WandScorer =
     new PostingWandScorer(tf, forward, qlContribCols(mu), identity) {
       def fold(contrib: DataFrame, shuffleFirst: Boolean): DataFrame =
-        qlScoreFold(contrib, mu, bitExact, shuffleFirst)
+        qlScoreFold(contrib, mu, shuffleFirst)
       def hotUb(hot: DataFrame): DataFrame = {
         // per hot term: the contribution ceiling and the dl floor; a
         // word missing from a partial impact table (left_outer miss)
@@ -2891,21 +2827,20 @@ object Retrieval {
                      dfTab: DataFrame, stats: DataFrame,
                      queries: DataFrame, qidCol: String, qtextCol: String,
                      k: Int, k1: Double = 1.2, b: Double = 0.75,
-                     bitExact: Boolean = true,
                      hotDf: Option[Long] = None,
                      forward: Option[DataFrame] = None,
                      impact: Option[DataFrame] = None): DataFrame = {
     require(k > 0, s"k > 0: $k")
     tieredFrom(bm25TopK(
       bm25ScoresPrecomputed(champTf, dfTab, stats, queries, qidCol,
-        qtextCol, k1, b, bitExact), k),
+        qtextCol, k1, b), k),
       queries, qidCol, k,
       routed => hotDf match {
         case Some(cut) => bm25TopKWand(tf, routed, qidCol, qtextCol,
-          k, cut, k1, b, bitExact, forward, Some((dfTab, stats)), impact)
+          k, cut, k1, b, forward, Some((dfTab, stats)), impact)
         case None => bm25TopK(
           bm25ScoresPrecomputed(tf, dfTab, stats, routed,
-            qidCol, qtextCol, k1, b, bitExact), k)
+            qidCol, qtextCol, k1, b), k)
       })
   }
 
@@ -2927,22 +2862,21 @@ object Retrieval {
                    dfTab: DataFrame,
                    queries: DataFrame, qidCol: String, qtextCol: String,
                    k: Int, mu: Double = 2000.0,
-                   bitExact: Boolean = true,
                    hotDf: Option[Long] = None,
                    forward: Option[DataFrame] = None,
                    impact: Option[DataFrame] = None): DataFrame = {
     require(k > 0, s"k > 0: $k")
     tieredFrom(bm25TopK(
       qlDirichletScores(champTf, cfTab, stats, queries, qidCol,
-        qtextCol, mu, bitExact), k),
+        qtextCol, mu), k),
       queries, qidCol, k,
       routed => hotDf match {
         case Some(cut) => qlTopKWand(tf, routed, qidCol, qtextCol,
-          k, cut, mu, bitExact, forward, Some((dfTab, stats)),
+          k, cut, mu, forward, Some((dfTab, stats)),
           Some(cfTab), impact)
         case None => bm25TopK(
           qlDirichletScores(tf, cfTab, stats, routed,
-            qidCol, qtextCol, mu, bitExact), k)
+            qidCol, qtextCol, mu), k)
       })
   }
 
@@ -3169,11 +3103,10 @@ object Retrieval {
   def bm25TopKNot(tf: DataFrame, dfTab: DataFrame, stats: DataFrame,
                   queries: DataFrame, qidCol: String, qtextCol: String,
                   negTextCol: String, k: Int,
-                  k1: Double = 1.2, b: Double = 0.75,
-                  bitExact: Boolean = true): DataFrame = {
+                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k > 0: $k")
     val scores = bm25ScoresPrecomputed(tf, dfTab, stats, queries,
-      qidCol, qtextCol, k1, b, bitExact)
+      qidCol, qtextCol, k1, b)
     val excluded = tf
       .join(queryTerms(queries, qidCol, negTextCol), Seq("word"))
       .select(col("queryId"), col("docId")).distinct()

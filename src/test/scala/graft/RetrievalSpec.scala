@@ -85,20 +85,6 @@ class RetrievalSpec extends SparkSpec {
     assert(topk.toSeq === Seq((1L, 1), (2L, 2)))
   }
 
-  test("scale fold (plain sum) matches the bit-exact fold to 1e-12") {
-    val qs = corpus.select(col("doc_id").as("query_id"), col("text"))
-    def all(exact: Boolean): Map[(Long, Long), Double] =
-      Retrieval.bm25Scores(corpus, "doc_id", "text", qs,
-        "query_id", "text", bitExact = exact)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val e = all(true); val s = all(false)
-    assert(e.keySet === s.keySet)
-    for ((k, v) <- e)
-      assert(math.abs(v - s(k)) <= 1e-12 * math.max(1.0, math.abs(v)),
-        s"$k: $v vs ${s(k)}")
-  }
-
   test("stop-term df-prune equals scoring a query stripped of hot terms") {
     // cherry has df=2 in the corpus; maxDf=1 drops it from the query,
     // so pruned scores == unpruned scores of the apple-only query, and
@@ -1426,13 +1412,6 @@ class RetrievalSpec extends SparkSpec {
     // 'zzz' is corpus-absent: it drops from the model, |q| = 1
     assert(got((2L, 1L)) === ql(Seq((2L, 2L)), 1L, 3L))
     assert(!got.contains((2L, 3L))) // no shared term, no row
-    // the scale fold agrees to ulps on multi-term matches
-    val fast = Retrieval.qlDirichletScores(tf, cfT, st, qs,
-      "query_id", "text", mu = 10.0, bitExact = false)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    for ((k, v) <- got)
-      assert(math.abs(fast(k) - v) <= 1e-12 * math.abs(v), s"$k")
     // cf is additive across micro-batches, subtractive under deletes
     val batch = Retrieval.termFrequencies(
       docs(9L -> "apple date fig"), "doc_id", "text")

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The registry's prefix selection, shared by Verify and PlanDump. */
+/** The registry's prefix selection, shared by Verify, PlanDump and Scratch. */
 class SparkEntrySpec extends AnyFunSuite {
 
   test("select matches registry names by prefix; an unmatched prefix selects nothing") {
@@ -21,5 +21,19 @@ class SparkEntrySpec extends AnyFunSuite {
       Seq("no_such_query", "q182", "q182_bm25_wand_topk"), unmatched += _)
     assert(got.map(_._1) == Seq("q182_bm25_wand_topk"))
     assert(unmatched.result() == Seq("no_such_query"))
+  }
+
+  test("selectOne resolves a unique prefix and rejects none or several, listing them") {
+    assert(SparkEntry.selectOne("q182") eq
+      SparkEntry.queries("q182_bm25_wand_topk"))
+    assert(SparkEntry.selectOne("q182_bm25_wand_topk") eq
+      SparkEntry.queries("q182_bm25_wand_topk"))
+    val none = intercept[IllegalArgumentException](
+      SparkEntry.selectOne("no_such_query"))
+    assert(none.getMessage.contains("selects 0 queries"))
+    val several = SparkEntry.select(Seq("q18")).keySet
+    assert(several.size > 1)
+    val many = intercept[IllegalArgumentException](SparkEntry.selectOne("q18"))
+    several.foreach(n => assert(many.getMessage.contains(n), n))
   }
 }
